@@ -213,19 +213,18 @@ LIMIT 20
 # token rates — the tokenizer-coverage evaluation run before committing to
 # a vocab size.
 #
-# ONE tokenize pass (r11): the token stream is aggregated once by
-# (lang, w); the vocab is the top-K of that table re-aggregated by w
-# (sum over langs == the global count, exactly), and the coverage pass
-# joins the broadcast vocab against the (lang, w) COUNT table — vocabulary
-# x language sized — instead of against the raw token stream. The r10 plan
-# scanned+tokenized the corpus TWICE (once for the vocab aggregate, once
-# for the coverage join) and ran the vocab broadcast-join per TOKEN; this
-# form does both per distinct (lang, w). n_tokens/n_oov become
-# count-weighted sums of the same integers, so the output is bit-identical
-# (the permille ratio divides the same exact int64s in double, then
-# rounds). The (lang, w) aggregate is two-consumer (vocab + coverage), so
-# it is localCheckpoint-materialized — vocabulary-sized per language, not
-# corpus-sized.
+# Plan (plans/r11/corpus_oov_rate_executed.txt): the token stream is
+# aggregated by (lang, w) into `lw`, and `lw` has two consumers. The vocab
+# is the top-K of `lw` re-aggregated by w (sum over langs == the global
+# count, exactly); the coverage pass joins the broadcast vocab against
+# `lw` — vocabulary x language sized — instead of against the raw token
+# stream, so n_tokens/n_oov are count-weighted sums of the same exact
+# int64s and the output is bit-identical to the per-token form. `lw` is
+# not materialized, so the initial plan scans and tokenizes the corpus
+# TWICE: one scan + Generate + partial (lang, w) aggregate under each
+# consumer. At run time AQE's stage reuse replaces the vocab side's
+# (lang, w) exchange with a ReusedExchange of the coverage side's, so that
+# subtree executes once.
 # ---------------------------------------------------------------------------
 
 VOCAB_K = 20

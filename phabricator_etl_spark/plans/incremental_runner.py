@@ -120,13 +120,16 @@ def dedup_latest(df: DataFrame, key: str, recency: str | None) -> DataFrame:
     Implemented as a struct-max_by aggregation rather than the
     ROW_NUMBER-over-window form (r10 optimization, guide §2.3): the
     aggregate does PARTIAL (map-side) combination, so duplicate keys
-    collapse before the exchange, and max_by (a TypedImperativeAggregate)
-    plans as ObjectHashAggregate — no Sort on either side of the exchange,
-    where the window form paid Exchange+Sort+Window and a plain max(struct)
-    would fall back to SortAggregate. Struct comparison orders
-    field-by-field (recency first), with NULL low — identical winner choice
-    to the desc-NULLS-LAST window wherever recency differs, and a
-    deterministic full-tuple tiebreak where it doesn't."""
+    collapse before the exchange. max_by is a declarative aggregate whose
+    buffer holds the struct, which a hash-aggregate buffer cannot, so it
+    plans as SortAggregate on BOTH sides of the exchange: Sort + partial
+    SortAggregate, Exchange hashpartitioning(key), Sort + final
+    SortAggregate. Where the input is already partitioned on the key
+    (transactions, project_transactions) the Exchange and the Sort between
+    the two aggregates drop out. Struct comparison orders field-by-field
+    (recency first), with NULL low — identical winner choice to the
+    desc-NULLS-LAST window wherever recency differs, and a deterministic
+    full-tuple tiebreak where it doesn't."""
     rest = [c for c in df.columns if c != key]
     if recency:
         ordered = [recency] + [c for c in rest if c != recency]
@@ -171,33 +174,26 @@ def run_incremental(
     t_phase = time.perf_counter()
     last_run = None if full else read_watermark(spark, dest_dir)
     world = filter_changed_revisions(src, last_run, now)
-    # ONE materialized CC pass feeds both the graph-aware invalidation and
-    # stack_sizes (previously two independent fixpoints per run — the
-    # single biggest cost in the e2e profile). This is the staged-artifact
-    # shape a production run uses: components are computed once per batch
-    # and consumed by every downstream step.
-    comp = P.stack_components(src).localCheckpoint(eager=True)
+    # ONE CC pass feeds both the graph-aware invalidation and stack_sizes.
+    # connected_components returns its labels already materialized (a
+    # driver-built local relation on the small-graph path, the final label
+    # checkpoint on the distributed one), so they are used as they come.
+    comp = P.stack_components(src)
     phases["watermark_and_cc"] = round(time.perf_counter() - t_phase, 3)
     t_phase = time.perf_counter()
     world = expand_by_stack_component(src, world, comp=comp)
-    # Materialize the INVALIDATION SET once: every one of the eight table
-    # builds hangs off the expanded revision table, and without this each
-    # branch would re-run the CC-label join + distinct that computes it.
-    # The expanded set is the changed subset (small by construction), so
-    # this is cheap to pin and is the staged-artifact shape a production
-    # batch uses — invalidation computed once, consumed by every build.
-    expanded = world
-    with ThreadPoolExecutor(max_workers=5) as pool:
-        f_rev = pool.submit(lambda: expanded.revision.localCheckpoint(eager=True))
-        # The user/project/repo dims are broadcast-small and shared by up
-        # to five branches each — pin them too so concurrent branches
-        # don't each rebuild the dim scans. All four pins are independent
-        # jobs; submit them together.
-        f_users = pool.submit(lambda: P.dim_users(expanded).localCheckpoint(eager=True))
-        f_projects = pool.submit(lambda: P.dim_projects(expanded).localCheckpoint(eager=True))
-        f_repos = pool.submit(lambda: P.dim_repositories(expanded).localCheckpoint(eager=True))
-        users, projects, repos = f_users.result(), f_projects.result(), f_repos.result()
-        world = PhabSources(**{**expanded.__dict__, "revision": f_rev.result()})
+    # Pin rule: pin a frame only when two or more branches read it and
+    # rebuilding it needs its own shuffle or broadcast. Two frames qualify:
+    # the expanded revision table (four branches; rebuilding re-runs the
+    # CC-label join + distinct) and dim_users (six branches; a user x
+    # user_email join). The project dim is a bare projection and the
+    # repository dim feeds one branch, so both are built inline where read.
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_rev = pool.submit(world.revision.localCheckpoint, eager=True)
+        f_users = pool.submit(P.dim_users(world).localCheckpoint, eager=True)
+        revision, users = f_rev.result(), f_users.result()
+    world = PhabSources(**{**world.__dict__, "revision": revision})
+    projects, repos = P.dim_projects(world), P.dim_repositories(world)
     phases["expand_and_pin_dims"] = round(time.perf_counter() - t_phase, 3)
     t_phase = time.perf_counter()
     # stack sizes come from the FULL graph (the filtered world can't see
@@ -210,8 +206,8 @@ def run_incremental(
         "comments": P.build_comments(world, users),
         "review_requests": P.build_review_requests(world, users, projects),
         "transactions": P.build_transactions(world, users, projects),
-        # snapshots run over the UNFILTERED world every time; the pinned
-        # user/project dims are safe to share — they read only the
+        # snapshots run over the UNFILTERED world every time; the user and
+        # project dims are safe to share — they read only the
         # user/user_email/project tables, which the changed-revision filter
         # never touches (src and the expanded world agree on them)
         "review_groups": P.build_review_groups(src, users),
@@ -264,7 +260,9 @@ def run_incremental(
             if not fs.rename(jvm_path(write_path), jvm_path(path)):
                 raise IOError(f"rename {write_path} -> {path} failed")
         phases[f"branch_{name}"] = round(time.perf_counter() - t_branch, 3)
-        return spark.read.parquet(path)
+        # read back with the schema just written: inferring it would run
+        # one more job per table to re-read the footers
+        return spark.read.schema(merged.schema).parquet(path)
 
     # The eight table branches are independent (distinct dest paths, shared
     # inputs all read-only) — submit them as CONCURRENT Spark jobs from a

@@ -1,0 +1,86 @@
+"""Spark job budget of a first-load ETL run.
+
+At fixture size the runner is bound by scheduling, not data: each Spark job
+costs a driver round-trip whatever it moves. The job count is a
+host-independent counter, so it can be pinned. The world is landed as
+parquet first, as a production run reads it: in-memory sources never plan
+broadcasts, so they count differently. Each table lands as one file, so the
+scans' task counts do not follow the session's core count: landed one file
+per core, the count at 32 cores varied from run to run with the timing of
+AQE's query stages.
+
+Jobs are counted by job-id range from Spark's status store: the runner
+submits from pool threads, which do not inherit a job group.
+"""
+
+from __future__ import annotations
+
+import os
+import tempfile
+
+import pytest
+
+from phabricator_etl_spark.plans import incremental_runner as R
+from phabricator_etl_spark.sources import phab_fixtures
+from phabricator_etl_spark.sources.phab_fixtures import PhabSources
+
+NOW = 2_000_000_000  # after every fixture timestamp
+
+# Jobs of one first load of the gate-size world; the same at 1, 4, 8, 16
+# and 32 cores. The graph jobs are those of the small-graph
+# connected-components path: its two LIMIT probes, which also run the edge
+# pipeline's query stages and fill the edge cache.
+JOB_BUDGET = 77
+GRAPH_JOB_BUDGET = 8
+
+
+def _jobs_since(spark, last_job_id: int) -> list[tuple[int, str]]:
+    """(job id, call site) of every job with an id above ``last_job_id``."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()  # the status store is fed asynchronously
+    it = sc.statusStore().jobsList(None).iterator()
+    jobs = []
+    while it.hasNext():
+        j = it.next()
+        if j.jobId() > last_job_id:
+            jobs.append((j.jobId(), j.name()))
+    return jobs
+
+
+@pytest.fixture(scope="module")
+def first_load(spark):
+    """A first load of the gate-size world over parquet sources: its jobs,
+    returned frames and destination."""
+    src = phab_fixtures.generate(spark, seed=7)
+    with tempfile.TemporaryDirectory(prefix="job_budget_") as d:
+        tables = {}
+        for name, df in src.__dict__.items():
+            path = os.path.join(d, "world", name)
+            df.coalesce(1).write.parquet(path)
+            tables[name] = spark.read.schema(df.schema).parquet(path)
+        dest = os.path.join(d, "dest")
+        before = max((i for i, _ in _jobs_since(spark, -1)), default=-1)
+        out = R.run_incremental(spark, PhabSources(**tables), dest, now=NOW, full=True)
+        jobs = _jobs_since(spark, before)
+        yield jobs, out, dest
+
+
+def test_first_load_job_budget(first_load):
+    jobs, _, _ = first_load
+    assert len(jobs) <= JOB_BUDGET, f"{len(jobs)} jobs: {sorted(jobs)}"
+
+
+def test_first_load_graph_job_budget(first_load):
+    jobs, _, _ = first_load
+    graph = [site for _, site in jobs if "operators/graph.py" in site]
+    assert len(graph) <= GRAPH_JOB_BUDGET, graph
+
+
+def test_read_back_schema_matches_written_files(spark, first_load):
+    """Reading a table back with the schema just written must give the
+    frame that schema inference over the files would: same columns, types,
+    order and nullability."""
+    _, out, dest = first_load
+    assert sorted(out) == sorted(R.MERGE_KEYS)
+    for name, df in out.items():
+        assert df.schema == spark.read.parquet(os.path.join(dest, name)).schema, name

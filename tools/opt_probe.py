@@ -9,7 +9,10 @@ Usage:
 `time` mirrors bench.py's refine discipline (fresh session, warm-up, model
 cache rollback, min-of-3 with .count() as the action) so numbers are
 comparable with BENCH_DETAIL.json cells. `plans` writes the full formatted
-plan for the before/after evidence the round deliverables require.
+plan for the before/after evidence the round deliverables require. It runs
+the query first, so the dump carries AQE's final plan (runtime stage reuse,
+coalesced reads) next to the initial one; the rows are drained one
+partition at a time and dropped, so the driver never holds a full result.
 """
 
 from __future__ import annotations
@@ -60,6 +63,8 @@ def cmd_plans(tag: str, names: list[str]) -> None:
     os.makedirs(PLANS_DIR, exist_ok=True)
     for name in names:
         df = by_name[name].build(spark, SF_DIR)
+        for _ in df.toLocalIterator():
+            pass
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
