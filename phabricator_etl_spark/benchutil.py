@@ -1,12 +1,12 @@
 """Shared measurement discipline for the bench harnesses.
 
 Both bench.py (per-round sf0.1) and tools/scale_bench.py (sf1..sf30 curve)
-repeat queries min-of-N in controlled sessions. Two session-model caches
-complicate that:
-
-- clustering._FIT_CACHE  — the k-means Lloyd fit (kmeans_cells owns it;
-  ann_ivf_kmeans / dedup_semantic_kmeans reuse it: documented layering)
-- dedup._POSTINGS_CACHE  — the shingle postings index
+repeat queries min-of-N in controlled sessions. Staged artifacts memoized by
+``session.session_cached`` complicate that — the k-means Lloyd fit
+(clustering._fitted: kmeans_cells owns it, ann_ivf_kmeans /
+dedup_semantic_kmeans reuse it), the shingle postings index, the PQ
+codebooks and the Phabricator fixture world. ``model_caches()`` is the
+decorator's own record of every such cache, so no cache can be left out.
 
 Min-of-N must NOT let a repeat reuse a model the timed query itself built
 (the recorded number would silently become "apply with a warm model"), but
@@ -20,6 +20,11 @@ the very first attempt and a cold-start reset on any later one.
 """
 
 from __future__ import annotations
+
+from itertools import zip_longest
+
+from .operators.clustering import _fitted
+from .session import SESSION_CACHES
 
 # Queries whose registry number deliberately isolates the APPLY stage of a
 # model that ANOTHER query builds. A measurement harness running such a
@@ -41,10 +46,10 @@ WARM_DEPS: dict[str, str] = {
 # pre-existing, rollback never evicts it, and min-of-N records
 # apply-with-warm-model under a label that promises the fit (r9 advisor
 # finding; scale_bench's fit_included clearing, generalized).
-CACHE_OWNERS: dict[str, str] = {"kmeans_cells": "kmeans-fit"}
+CACHE_OWNERS = {"kmeans_cells": _fitted}
 
 # Queries whose plan consumes the staged shingle-postings index
-# (dedup._POSTINGS_CACHE — a documented staged artifact that every consumer
+# (dedup._shingle_postings — a documented staged artifact that every consumer
 # shares; like WARM_DEPS, except the builder is an internal stage, not a
 # registry query). Harnesses warm it UNTIMED before measuring a consumer so
 # the cell never flips between pays-the-build and cache-hit depending on
@@ -58,9 +63,7 @@ def clear_owned_caches(name: str) -> None:
     """Drop every session model cache the named query OWNS (no-op for
     non-owners). Run before snapshotting so the owner's reps re-pay the fit."""
     if name in CACHE_OWNERS:
-        from .operators import clustering
-
-        clustering._FIT_CACHE.clear()
+        CACHE_OWNERS[name].cache.clear()
 
 
 def warm_staged_inputs(spark, sf_dir: str, name: str) -> None:
@@ -157,9 +160,7 @@ def measure_reps(
 
 
 def model_caches() -> list[dict]:
-    from .operators import clustering, dedup
-
-    return [clustering._FIT_CACHE, dedup._POSTINGS_CACHE]
+    return SESSION_CACHES
 
 
 def cache_snapshot() -> list[set]:
@@ -167,7 +168,8 @@ def cache_snapshot() -> list[set]:
 
 
 def cache_rollback(snap: list[set]) -> None:
-    """Evict cache keys ADDED since the snapshot, keep pre-existing ones."""
-    for cache, before in zip(model_caches(), snap):
+    """Evict cache keys ADDED since the snapshot, keep pre-existing ones.
+    A cache created after the snapshot had no keys then: it is emptied."""
+    for cache, before in zip_longest(model_caches(), snap, fillvalue=()):
         for key in [k for k in cache if k not in before]:
             del cache[key]

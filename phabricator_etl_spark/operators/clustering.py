@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..query import Q
-from ..session import evict_stale
+from ..session import session_cached
 from ..sources.catalog import load_table as _t
 
 K_CELLS = 8
@@ -321,14 +321,9 @@ def _final_assign_sql(dim: int = 64) -> str:
 
 # The fitted centroid table is deterministic per sf_dir; both gate entries
 # need it, so cache the (checkpointed) result per session+path.
-_FIT_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_cached
 def _fitted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (evict_stale(_FIT_CACHE, spark), sf_dir)
-    if key not in _FIT_CACHE:
-        _FIT_CACHE[key] = kmeans_fit(_vectors(spark, sf_dir))
-    return _FIT_CACHE[key]
+    return kmeans_fit(_vectors(spark, sf_dir))
 
 
 def kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..query import Q
-from ..session import evict_stale
+from ..session import session_cached
 from ..sources.catalog import load_table as _t
 from ..functions.hashing import MERSENNE31, MOD30, hash_seeds, md5_long, md5_long_sql
 
@@ -131,9 +131,7 @@ def _spread(d: DataFrame) -> DataFrame:
     return d.repartition(target) if 0 < nfiles < target else d
 
 
-_POSTINGS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_cached
 def _shingle_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (doc_id, shingle-hash) inverted-index posting list, built ONCE per
     (session, table) and shared by every consumer (Jaccard, containment —
@@ -142,25 +140,16 @@ def _shingle_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-derives — same memoization policy as the bucketed-table and
     sorted-stage fixtures. localCheckpoint pins it in block storage; the
     cache also saves the per-query explode+md5 pass that previously ran
-    identically in two queries.
-
-    Keyed by applicationId (stable, unique per SparkContext) rather than
-    id(spark): localCheckpoint blocks die with the context, and CPython may
-    reuse id() after GC, so an id-keyed cache could hand a fresh session a
-    dead DataFrame. Entries owned by other (stopped) applications are evicted
-    on access so the cache never pins block storage past a session's life."""
-    key = (evict_stale(_POSTINGS_CACHE, spark), sf_dir)
-    if key not in _POSTINGS_CACHE:
-        d = _spread(_t(spark, sf_dir, "documents"))
-        _POSTINGS_CACHE[key] = (
-            d.select(
-                F.col("doc_id").cast("long").alias("doc_id"),
-                F.explode(_shingles()).alias("shingle"),
-            )
-            .select("doc_id", md5_long(F.col("shingle")).alias("sh"))
-            .localCheckpoint(eager=True)
+    identically in two queries."""
+    d = _spread(_t(spark, sf_dir, "documents"))
+    return (
+        d.select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            F.explode(_shingles()).alias("shingle"),
         )
-    return _POSTINGS_CACHE[key]
+        .select("doc_id", md5_long(F.col("shingle")).alias("sh"))
+        .localCheckpoint(eager=True)
+    )
 
 
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:

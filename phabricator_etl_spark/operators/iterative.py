@@ -518,21 +518,10 @@ _KCORE_MAX_ROUNDS = 64
 # graph) pays the edge shuffle that round instead of shipping a giant
 # driver-side build. The cap is set ABOVE the bipartite fixture's sf30
 # round-1 peel (9.9M) so the measured scale curve runs one code path at
-# every SF. A/B'd at sf30 via SPARK_GRAFT_KCORE_BCAST_CAP (r8 brief #2a):
-# broadcast arm 39 s vs shuffle_hash arm 92 s for the round-1 update —
-# the generous cap is the measured-right arm (SCALE_BENCH.json
-# ratio_notes.graph_kcore_bipartite records the comparison).
+# every SF. The recorded sf30 A/B of the two arms (SCALE_BENCH.json
+# ratio_notes.graph_kcore_bipartite): broadcast 39 s vs shuffle_hash 92 s
+# for the round-1 update — the generous cap is the measured-right arm.
 _KCORE_BROADCAST_BAD_ROWS = 16_000_000
-
-
-def _kcore_broadcast_cap() -> int:
-    """Peel-set row cap for the broadcast semi-join arm; above it the round
-    uses shuffle_hash. Env-overridable (SPARK_GRAFT_KCORE_BCAST_CAP) so the
-    two arms can be A/B-measured at any SF without a code edit — VERDICT r8
-    #2a asked exactly that of the sf30 9.9M-row round-1 broadcast."""
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_KCORE_BCAST_CAP", _KCORE_BROADCAST_BAD_ROWS))
 # Target endpoint rows per task for the initial degree aggregation. The
 # union's node keys are NEARLY UNIQUE within the edge checkpoint's
 # hash-on-(a,b) partitions, so map-side partial aggregation compresses
@@ -633,7 +622,7 @@ def kcore_subgraph(edges: DataFrame, k: int) -> DataFrame:
                 F.col("node").cast("long"),
                 F.col("deg").cast("long").alias("core_degree"),
             )
-        bcast = n_bad <= _kcore_broadcast_cap()
+        bcast = n_bad <= _KCORE_BROADCAST_BAD_ROWS
         STAGE_TIMES[f"round{rnd + 1}_bcast"] = int(bcast)
 
         if bcast:

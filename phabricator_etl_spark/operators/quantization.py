@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..query import Q
-from ..session import evict_stale
+from ..session import session_cached
 from ..sources.catalog import load_table as _t
 from .clustering import OFFSET_Q, _VECS_SQL as _SHIFTED_SQL, _fit_sql, _vectors as _vectors_shifted, kmeans_fit
 from .similarity import COSINE_SCALE, N_QUERIES, TOP_K, _dot, _quantized
@@ -74,30 +74,25 @@ def _subdim(spark: SparkSession, sf_dir: str) -> int | None:
     return dim // PQ_M
 
 
-_CODEBOOK_CACHE: dict[tuple[str, str], list] = {}
-
-
+@session_cached
 def _codebooks(spark: SparkSession, sf_dir: str):
     """Per-sub-space (PQ_K, subdim) centroid matrices, driver-side (the
     trained model: 4 * 16 * 16 doubles — parameter-sized, not data-sized)."""
-    key = (evict_stale(_CODEBOOK_CACHE, spark), sf_dir)
-    if key not in _CODEBOOK_CACHE:
-        import numpy as np
+    import numpy as np
 
-        sub = _subdim(spark, sf_dir)
-        if sub is None:
-            return None
-        e = _vectors_shifted(spark, sf_dir)  # quantized + shifted longs
-        stride = (e.count() + PQ_TRAIN_CAP - 1) // PQ_TRAIN_CAP
-        if stride > 1:
-            e = e.filter(F.col("vec_id") % stride == 0)
-        books = []
-        for m in range(PQ_M):
-            subv = e.select("vec_id", F.slice("vec", m * sub + 1, sub).alias("vec"))
-            cents = kmeans_fit(subv, k=PQ_K).orderBy("cell").collect()
-            books.append(np.vstack([np.asarray(r["centroid"], dtype=np.int64) for r in cents]))
-        _CODEBOOK_CACHE[key] = books
-    return _CODEBOOK_CACHE[key]
+    sub = _subdim(spark, sf_dir)
+    if sub is None:
+        return None
+    e = _vectors_shifted(spark, sf_dir)  # quantized + shifted longs
+    stride = (e.count() + PQ_TRAIN_CAP - 1) // PQ_TRAIN_CAP
+    if stride > 1:
+        e = e.filter(F.col("vec_id") % stride == 0)
+    books = []
+    for m in range(PQ_M):
+        subv = e.select("vec_id", F.slice("vec", m * sub + 1, sub).alias("vec"))
+        cents = kmeans_fit(subv, k=PQ_K).orderBy("cell").collect()
+        books.append(np.vstack([np.asarray(r["centroid"], dtype=np.int64) for r in cents]))
+    return books
 
 
 def pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..query import Q
-from ..session import evict_stale
+from ..session import session_cached
 from ..sources import phab_fixtures
 from . import phab_pipelines as P
 
@@ -38,9 +38,7 @@ _TABLES = (
 NULL_MARK = "<null>"
 
 
-_WORLDS: dict[str, phab_fixtures.PhabSources] = {}
-
-
+@session_cached
 def _ensure_world(spark: SparkSession) -> phab_fixtures.PhabSources:
     """Generate the fixture world; materialize it to parquet once so the
     DuckDB oracles can scan the identical bytes.
@@ -48,9 +46,6 @@ def _ensure_world(spark: SparkSession) -> phab_fixtures.PhabSources:
     Memoized per session: generation is pure (fixed seed), so the 8 pipeline
     gate entries share ONE set of source DataFrames instead of re-running the
     driver-side createDataFrame x15 (and its Arrow conversion) per query."""
-    key = evict_stale(_WORLDS, spark)
-    if key in _WORLDS:
-        return _WORLDS[key]
     src = phab_fixtures.generate(spark, seed=FIXTURE_SEED)
     marker = os.path.join(FIXTURE_DIR, "_DONE")
     if not os.path.exists(marker):
@@ -61,7 +56,6 @@ def _ensure_world(spark: SparkSession) -> phab_fixtures.PhabSources:
             )
         with open(marker, "w") as f:
             f.write("ok\n")
-    _WORLDS[key] = src
     return src
 
 

@@ -1,262 +1,67 @@
 """Assembles the full query registry consumed by __spark_entry__.py.
 
-Import is deliberately lazy-tolerant: a module with an optional dependency
-failing to import should not take down the whole registry.
+Every query family is one ``(module, list name)`` row of ``QUERY_TABLE``;
+the registry is those lists concatenated in table order. Imports are not
+guarded: a module that fails to import raises here instead of silently
+dropping its queries from the bench and the oracle sweep.
 """
 
 from __future__ import annotations
 
+import importlib
+
 from .query import Q
+
+QUERY_TABLE: tuple[tuple[str, str], ...] = (
+    ("plans.relational", "RELATIONAL_QUERIES"),
+    ("plans.tpch_extra", "TPCH_EXTRA_QUERIES"),
+    ("plans.functions_battery", "FUNCTIONS_BATTERY_QUERIES"),
+    ("plans.sampling_stats", "SAMPLING_STATS_QUERIES"),
+    ("plans.sql_interface", "SQL_INTERFACE_QUERIES"),
+    ("plans.phab_queries", "PHAB_QUERIES"),
+    ("operators.dedup", "DEDUP_QUERIES"),
+    ("operators.similarity", "SIMILARITY_QUERIES"),
+    ("operators.spans", "SPAN_QUERIES"),
+    ("operators.search", "SEARCH_QUERIES"),
+    ("operators.features", "FEATURE_QUERIES"),
+    ("sources.pydatasource", "PYDATASOURCE_QUERIES"),
+    ("plans.association", "ASSOCIATION_QUERIES"),
+    ("plans.export", "EXPORT_QUERIES"),
+    ("operators.sketches", "SKETCH_QUERIES"),
+    ("operators.quantization", "QUANTIZATION_QUERIES"),
+    ("plans.event_analytics", "EVENT_ANALYTICS_QUERIES"),
+    ("operators.triangles", "TRIANGLE_QUERIES"),
+    ("plans.timeseries", "TIMESERIES_QUERIES"),
+    ("plans.profiling", "PROFILING_QUERIES"),
+    ("operators.pipeline_e2e", "PIPELINE_E2E_QUERIES"),
+    ("streaming.hll", "STREAM_HLL_QUERIES"),
+    ("plans.cdc", "CDC_QUERIES"),
+    ("streaming.funnel", "STREAM_FUNNEL_QUERIES"),
+    ("plans.maintenance", "MAINTENANCE_QUERIES"),
+    ("functions.text", "TEXT_QUERIES"),
+    ("functions.json_ops", "JSON_QUERIES"),
+    ("operators.multimodal", "MULTIMODAL_QUERIES"),
+    ("operators.iterative", "ITERATIVE_QUERIES"),
+    ("operators.clustering", "CLUSTERING_QUERIES"),
+    ("plans.extensions", "EXTENSION_QUERIES"),
+    ("plans.scale_techniques", "SCALE_QUERIES"),
+    ("plans.etl_e2e", "ETL_E2E_QUERIES"),
+    ("plans.incremental", "INCREMENTAL_QUERIES"),
+    ("streaming.events", "STREAMING_QUERIES"),
+    ("streaming.sessions", "SESSION_QUERIES"),
+    ("streaming.joins", "STREAM_JOIN_QUERIES"),
+    ("sources.formats", "FORMAT_QUERIES"),
+    ("sources.jdbc", "JDBC_QUERIES"),
+    ("operators.corpus", "CORPUS_QUERIES"),
+)
 
 
 def all_queries() -> list[Q]:
-    queries: list[Q] = []
-    from .plans.relational import RELATIONAL_QUERIES
-
-    queries.extend(RELATIONAL_QUERIES)
-    try:
-        from .plans.tpch_extra import TPCH_EXTRA_QUERIES
-
-        queries.extend(TPCH_EXTRA_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .plans.functions_battery import FUNCTIONS_BATTERY_QUERIES
-
-        queries.extend(FUNCTIONS_BATTERY_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .plans.sampling_stats import SAMPLING_STATS_QUERIES
-
-        queries.extend(SAMPLING_STATS_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .plans.sql_interface import SQL_INTERFACE_QUERIES
-
-        queries.extend(SQL_INTERFACE_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .plans.phab_queries import PHAB_QUERIES
-
-        queries.extend(PHAB_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .operators.dedup import DEDUP_QUERIES
-
-        queries.extend(DEDUP_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .operators.similarity import SIMILARITY_QUERIES
-
-        queries.extend(SIMILARITY_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .operators.spans import SPAN_QUERIES
-
-        queries.extend(SPAN_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .operators.search import SEARCH_QUERIES
-
-        queries.extend(SEARCH_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .operators.features import FEATURE_QUERIES
-
-        queries.extend(FEATURE_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .sources.pydatasource import PYDATASOURCE_QUERIES
-
-        queries.extend(PYDATASOURCE_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .plans.association import ASSOCIATION_QUERIES
-
-        queries.extend(ASSOCIATION_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .plans.export import EXPORT_QUERIES
-
-        queries.extend(EXPORT_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .operators.sketches import SKETCH_QUERIES
-
-        queries.extend(SKETCH_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .operators.quantization import QUANTIZATION_QUERIES
-
-        queries.extend(QUANTIZATION_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .plans.event_analytics import EVENT_ANALYTICS_QUERIES
-
-        queries.extend(EVENT_ANALYTICS_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .operators.triangles import TRIANGLE_QUERIES
-
-        queries.extend(TRIANGLE_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .plans.timeseries import TIMESERIES_QUERIES
-
-        queries.extend(TIMESERIES_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .plans.profiling import PROFILING_QUERIES
-
-        queries.extend(PROFILING_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .operators.pipeline_e2e import PIPELINE_E2E_QUERIES
-
-        queries.extend(PIPELINE_E2E_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .streaming.hll import STREAM_HLL_QUERIES
-
-        queries.extend(STREAM_HLL_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .plans.cdc import CDC_QUERIES
-
-        queries.extend(CDC_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .streaming.funnel import STREAM_FUNNEL_QUERIES
-
-        queries.extend(STREAM_FUNNEL_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .plans.maintenance import MAINTENANCE_QUERIES
-
-        queries.extend(MAINTENANCE_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .functions.text import TEXT_QUERIES
-
-        queries.extend(TEXT_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .functions.json_ops import JSON_QUERIES
-
-        queries.extend(JSON_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .operators.multimodal import MULTIMODAL_QUERIES
-
-        queries.extend(MULTIMODAL_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .operators.iterative import ITERATIVE_QUERIES
-
-        queries.extend(ITERATIVE_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .operators.clustering import CLUSTERING_QUERIES
-
-        queries.extend(CLUSTERING_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .plans.extensions import EXTENSION_QUERIES
-
-        queries.extend(EXTENSION_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .plans.scale_techniques import SCALE_QUERIES
-
-        queries.extend(SCALE_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .plans.etl_e2e import ETL_E2E_QUERIES
-
-        queries.extend(ETL_E2E_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .plans.incremental import INCREMENTAL_QUERIES
-
-        queries.extend(INCREMENTAL_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .streaming.events import STREAMING_QUERIES
-
-        queries.extend(STREAMING_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .streaming.sessions import SESSION_QUERIES
-
-        queries.extend(SESSION_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .streaming.joins import STREAM_JOIN_QUERIES
-
-        queries.extend(STREAM_JOIN_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .sources.formats import FORMAT_QUERIES
-
-        queries.extend(FORMAT_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .query import Q
-        from .sources.jdbc import SRC_JDBC_LIVE_ORACLE, src_jdbc_live
-
-        queries.append(
-            Q(
-                "src_jdbc_live",
-                src_jdbc_live,
-                SRC_JDBC_LIVE_ORACLE,
-                "live JDBC write->partitioned-read round-trip (embedded Derby)",
-            )
-        )
-    except ImportError:
-        pass
-    try:
-        from .operators.corpus import CORPUS_QUERIES
-
-        queries.extend(CORPUS_QUERIES)
-    except ImportError:
-        pass
-    return queries
+    return [
+        q
+        for module, attr in QUERY_TABLE
+        for q in getattr(importlib.import_module(f".{module}", __package__), attr)
+    ]
 
 
 # The driver's correctness gate records the FIRST 50 registry entries
@@ -306,7 +111,7 @@ GATE_PRIORITY = [
 
 def _gate_ordered(queries: list[Q]) -> list[Q]:
     by_name = {q.name: q for q in queries}
-    prio = [by_name[n] for n in GATE_PRIORITY if n in by_name]
+    prio = [by_name[n] for n in GATE_PRIORITY]
     prio_set = set(GATE_PRIORITY)
     rest = [q for q in queries if q.name not in prio_set]
     return prio + rest

@@ -15,6 +15,7 @@ Design notes (scale):
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import SparkSession
@@ -24,29 +25,46 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-def session_key(spark: SparkSession) -> str:
-    """Stable per-SparkContext cache key.
-
-    id(spark) is unsafe for process-lifetime caches: CPython can reuse an id
-    after GC, and cached artifacts (localCheckpoint blocks, temp views) die
-    with the context — a recycled id would hand a new session dead state.
-    applicationId is unique per context and survives session clones."""
-    return spark.sparkContext.applicationId
+# Every cache session_cached has created, in creation order. Measurement
+# harnesses snapshot and roll back exactly this list (benchutil), so a new
+# cached artifact can never be left out of the min-of-N discipline.
+SESSION_CACHES: list[dict] = []
 
 
 def evict_stale(cache: dict, spark: SparkSession) -> str:
-    """Drop cache entries owned by other (stopped) SparkContexts.
+    """Drop cache entries owned by other (stopped) SparkContexts and return
+    the live context's key.
 
-    Module-level caches keyed by session_key otherwise pin their artifacts
-    (localCheckpoint blocks, fixture worlds, trained models) for the process
-    lifetime across session restarts — e.g. scale_bench --fresh-per-query
-    creates dozens of contexts per process. Keys may be the bare
-    session_key string or tuples whose first element is it. Returns the
-    live session_key for the caller's own key construction."""
-    app_id = session_key(spark)
-    for stale in [k for k in cache if (k[0] if isinstance(k, tuple) else k) != app_id]:
+    The key is the applicationId, not id(spark): CPython can reuse an id
+    after GC, and cached artifacts (localCheckpoint blocks, temp views) die
+    with the context, so a recycled id would hand a new session dead state.
+    applicationId is unique per context and survives session clones.
+    Evicting on access keeps a process-lifetime cache from pinning its
+    artifacts across session restarts — e.g. scale_bench --fresh-per-query
+    creates dozens of contexts per process."""
+    app_id = spark.sparkContext.applicationId
+    for stale in [k for k in cache if k[0] != app_id]:
         del cache[stale]
     return app_id
+
+
+def session_cached(fn):
+    """Memoize ``fn(spark, *args)`` per live SparkContext and ``args``.
+
+    The cache is exposed as ``wrapper.cache`` and recorded in
+    SESSION_CACHES."""
+    cache: dict = {}
+    SESSION_CACHES.append(cache)
+
+    @functools.wraps(fn)
+    def wrapper(spark: SparkSession, *args):
+        key = (evict_stale(cache, spark), *args)
+        if key not in cache:
+            cache[key] = fn(spark, *args)
+        return cache[key]
+
+    wrapper.cache = cache
+    return wrapper
 
 
 def _mem_to_mb(mem: str) -> int:

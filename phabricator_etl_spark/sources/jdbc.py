@@ -29,6 +29,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 
+from ..query import Q
+
 # database suffix -> tables, mirroring Db.from_bases (stats.py:161-191)
 DATABASE_TABLES: dict[str, tuple[str, ...]] = {
     "user": ("user", "user_email"),
@@ -286,3 +288,13 @@ WHERE s_acctbal >= 0
 GROUP BY n_name
 ORDER BY n_name
 """
+
+
+JDBC_QUERIES = [
+    Q(
+        "src_jdbc_live",
+        src_jdbc_live,
+        SRC_JDBC_LIVE_ORACLE,
+        "live JDBC write->partitioned-read round-trip (embedded Derby)",
+    ),
+]

@@ -14,27 +14,59 @@ from phabricator_etl_spark.benchutil import (
     cache_snapshot,
     model_caches,
 )
+from phabricator_etl_spark.operators.clustering import _fitted
+from phabricator_etl_spark.operators.dedup import _shingle_postings
+from phabricator_etl_spark.operators.quantization import _codebooks
+from phabricator_etl_spark.plans.phab_queries import _ensure_world
+
+# keys shaped like the decorator's own: (applicationId, *args)
+PRE = ("app", "pre-existing")
+BUILT = ("app", "built-by-query")
 
 
 def test_rollback_evicts_only_keys_added_since_snapshot():
-    caches = model_caches()
+    fit, postings = _fitted.cache, _shingle_postings.cache
     try:
-        caches[0]["pre-existing"] = "warm-dep-model"
+        fit[PRE] = "warm-dep-model"
         snap = cache_snapshot()
         # rollback at rep 0 of the FIRST attempt: nothing added yet -> no-op
         cache_rollback(snap)
-        assert caches[0]["pre-existing"] == "warm-dep-model"
+        assert fit[PRE] == "warm-dep-model"
         # the timed query builds a model; the next rep must re-pay it
-        caches[0]["built-by-query"] = "fit"
-        caches[1]["postings-by-query"] = "index"
+        fit[BUILT] = "fit"
+        postings[BUILT] = "index"
         cache_rollback(snap)
-        assert "built-by-query" not in caches[0]
-        assert "postings-by-query" not in caches[1]
+        assert BUILT not in fit
+        assert BUILT not in postings
         # ...but the pre-populated dep model survives every rollback
-        assert caches[0]["pre-existing"] == "warm-dep-model"
+        assert fit[PRE] == "warm-dep-model"
     finally:
-        for c in caches:
-            c.clear()
+        fit.pop(PRE, None)
+
+
+def test_rollback_covers_every_session_cache():
+    """Every decorated cache is in the rollback set by construction — the PQ
+    codebooks were once missing from a hand-kept list, so ann_pq_adc's
+    repeats timed an apply with already-trained codebooks. A cache created
+    after the snapshot is emptied too."""
+    from phabricator_etl_spark.session import SESSION_CACHES, session_cached
+
+    decorated = [_fitted, _shingle_postings, _codebooks, _ensure_world]
+    assert all(any(fn.cache is c for c in model_caches()) for fn in decorated)
+    snap = cache_snapshot()
+
+    @session_cached
+    def late(spark):
+        return None
+
+    try:
+        for fn in [*decorated, late]:
+            fn.cache[BUILT] = "model"
+        cache_rollback(snap)
+        for fn in [*decorated, late]:
+            assert BUILT not in fn.cache, fn.__name__
+    finally:
+        SESSION_CACHES[:] = [c for c in SESSION_CACHES if c is not late.cache]
 
 
 def test_warm_deps_name_real_registry_queries():
@@ -151,6 +183,9 @@ def test_cache_owner_and_staged_input_declarations():
 
     names = set(entry.queries())
     assert set(CACHE_OWNERS) <= names
+    # an owner's cache is a decorated one, so rollback also covers it
+    for owner in CACHE_OWNERS.values():
+        assert any(owner.cache is c for c in model_caches())
     assert set(WARM_DEPS.values()) <= set(CACHE_OWNERS), (
         "a WARM_DEPS warm-up can pre-build a model; its builder must be "
         "declared an owner so harnesses clear it before measuring the owner"
@@ -166,19 +201,19 @@ def test_measure_reps_rerun_repays_model_build():
     rerun (the r8 bug) the assert below fires on the rerun's first rep."""
     from phabricator_etl_spark.benchutil import measure_reps
 
-    caches = model_caches()
+    fit = _fitted.cache
     try:
-        caches[0]["pre-existing"] = "warm-dep-model"
+        fit[PRE] = "warm-dep-model"
         builds = []
 
         def run_once():
             # a warm hit here IS the r8 bug: the rep would silently time
             # apply-with-warm-model under a tag that promises the fit
-            assert "built-by-query" not in caches[0]
+            assert BUILT not in fit
             # ...while caches predating the snapshot must stay warm
-            assert caches[0]["pre-existing"] == "warm-dep-model"
+            assert fit[PRE] == "warm-dep-model"
             builds.append(1)
-            caches[0]["built-by-query"] = "fit"
+            fit[BUILT] = "fit"
 
         ticks = iter(range(1000))
 
@@ -191,10 +226,10 @@ def test_measure_reps_rerun_repays_model_build():
         # contended-retry rerun: SAME snap, SAME holder
         measure_reps(run_once, 2, snap, holder, clock=clock)
         assert len(builds) == 4, "every rep of both runs must re-pay the fit"
-        assert caches[0]["pre-existing"] == "warm-dep-model"
+        assert fit[PRE] == "warm-dep-model"
     finally:
-        for c in caches:
-            c.clear()
+        fit.pop(PRE, None)
+        fit.pop(BUILT, None)
 
 
 def test_measure_reps_capture_only_on_global_best():

@@ -188,15 +188,17 @@ def test_kcore_shuffle_hash_arm_matches_python_oracle(spark, monkeypatch):
     shuffle_hash arm would otherwise go oracle-unchecked (r9 advisor): force
     it by zeroing the cap and re-run the adversarial-shape and deep-peel
     fixtures against the Python peeling oracle."""
+    from phabricator_etl_spark.operators import iterative
     from phabricator_etl_spark.operators.iterative import kcore_subgraph
 
-    monkeypatch.setenv("SPARK_GRAFT_KCORE_BCAST_CAP", "0")
+    monkeypatch.setattr(iterative, "_KCORE_BROADCAST_BAD_ROWS", 0)
 
     # K4 + pendant chain + disjoint triangle: 3-core must be exactly the K4
     k4 = [(0, 1), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3)]
     edges = k4 + [(3, 10), (10, 11)] + [(20, 21), (20, 22), (21, 22)]
     edf = spark.createDataFrame(edges, "a long, b long")
     got = {r["node"]: r["core_degree"] for r in kcore_subgraph(edf, 3).collect()}
+    assert iterative.STAGE_TIMES["round1_bcast"] == 0  # the shuffle_hash arm ran
     assert got == _py_kcore(edges, 3) == {0: 3, 1: 3, 2: 3, 3: 3}
 
     # deep peel (one vertex per round): endpoints of every chain edge die in

@@ -136,7 +136,12 @@ DEFAULT_QUERIES = [
 # methodologies (the r6 SCALE_BENCH artifact recorded exactly that:
 # dedup_semantic_kmeans 14.5x on the 3.33x sf3->sf10 step because sf3 was
 # shared-session warm-model and sf10 was fresh-JVM cold-fit).
-from phabricator_etl_spark.benchutil import WARM_DEPS  # noqa: E402 - shared with bench.py
+from phabricator_etl_spark.benchutil import (  # noqa: E402 - shared with bench.py
+    WARM_DEPS,
+    cache_rollback,
+    cache_snapshot,
+    model_caches,
+)
 
 # Bench-only variant rows: same registry query, measured WITHOUT the dep
 # warm-up (and with the fit evicted between repeats), so the fit-included
@@ -212,13 +217,13 @@ RATIO_NOTES = {
         "their shuffled volumes are linear by construction (stage_times "
         "n_edges and round1_n_bad both grow 3.0x). Heap pressure is RULED "
         "OUT: an 80g-heap rerun of the sf30 tmpfs cell measured 71.7 s vs "
-        "68.8 s at 48g (r9 probe, tools/kcore_probe.py). The remaining "
+        "68.8 s at 48g (r9 probe, recorded in BASELINE.md). The remaining "
         "~1.3x at the top step is unattributed single-host behavior "
         "(consistent with memory-bandwidth saturation pushing 3x shuffle "
         "volume through the same 32 cores); the 100TB-relevant properties "
         "— constant rounds, linear shuffle volumes, one edge scan and one "
         "broadcast build per round — are all verifiable above. Broadcast-"
-        "arm A/B (r8 brief #2a, SPARK_GRAFT_KCORE_BCAST_CAP, r9 probe): "
+        "arm A/B (r8 brief #2a, r9 probe, recorded in BASELINE.md): "
         "sf30 round-1 update 39 s broadcast vs 92 s shuffle_hash — the "
         "9.9M-row broadcast is the measured-right arm and a routine "
         "~150 MB relation on a real executor. r9 also halved the update's "
@@ -255,26 +260,6 @@ RATIO_NOTES = {
         "queries are at-or-below linear."
     ),
 }
-
-
-# Snapshot/rollback + warm-dep discipline shared with bench.py — see
-# phabricator_etl_spark/benchutil.py for the full rationale.
-def _model_caches() -> list[dict]:
-    from phabricator_etl_spark.benchutil import model_caches
-
-    return model_caches()
-
-
-def _cache_snapshot() -> list[set]:
-    from phabricator_etl_spark.benchutil import cache_snapshot
-
-    return cache_snapshot()
-
-
-def _cache_rollback(snap: list[set]) -> None:
-    from phabricator_etl_spark.benchutil import cache_rollback
-
-    cache_rollback(snap)
 
 
 # Round counters for the driver-orchestrated fixpoint operators, recorded
@@ -493,7 +478,7 @@ def main() -> None:
                 # a fit-included cell must start COLD: drop every session
                 # model (rollback can't evict keys that predate its
                 # snapshot); repeats then re-pay the fit via the rollback
-                for c in _model_caches():
+                for c in model_caches():
                     c.clear()
             else:
                 # a cache OWNER (kmeans_cells) measured in a session where a
@@ -512,7 +497,7 @@ def main() -> None:
                     warm_staged_inputs(spark, d, base)
                 except Exception:  # noqa: BLE001 - staged warm is best-effort
                     pass
-            snap = _cache_snapshot()
+            snap = cache_snapshot()
             # best-so-far across BOTH _run_reps invocations (first run and
             # the contended-retry rerun): a rerun rep slower than the first
             # run's min must NOT overwrite the stage decomposition, or the
@@ -529,7 +514,7 @@ def main() -> None:
                     # cold-start reset on a contended-retry rerun (the r8
                     # advisor caught rerun rep 0 measuring with the first
                     # run's warm model under a '+fit-included' tag)
-                    _cache_rollback(snap)
+                    cache_rollback(snap)
                     t0 = time.perf_counter()
                     try:
                         df = by_name[base].build(spark, d)
