@@ -1,7 +1,10 @@
 """Shared measurement discipline for the bench harnesses.
 
-Both bench.py (per-round sf0.1) and tools/scale_bench.py (sf1..sf30 curve)
-repeat queries min-of-N in controlled sessions. Staged artifacts memoized by
+bench.py (every registry query at sf0.1) and tools/opt_probe.py measure a
+cell with ``measure_cell`` in a session from ``fresh_session``;
+tools/scale_bench.py (the sf1..sf30 curve) uses the cache helpers directly.
+
+A cell is min-of-N, and staged artifacts memoized by
 ``session.session_cached`` complicate that — the k-means Lloyd fit
 (clustering._fitted: kmeans_cells owns it, ann_ivf_kmeans /
 dedup_semantic_kmeans reuse it), the shingle postings index, the PQ
@@ -12,19 +15,21 @@ Min-of-N must NOT let a repeat reuse a model the timed query itself built
 (the recorded number would silently become "apply with a warm model"), but
 a query DOWNSTREAM of a model it didn't build must keep seeing the
 pre-populated cache at every repeat. Snapshot/rollback gives both: evict
-only the keys added since the snapshot. The r8 advisor found the contended
--retry rerun skipping this reset entirely (its rep 0 measured with the
-first run's warm model under a '+fit-included' tag) — hence rollback now
-runs before EVERY rep, including rep 0 of a rerun, where it is a no-op on
-the very first attempt and a cold-start reset on any later one.
+only the keys added since the snapshot, before every rep.
+
+Wall time on a shared host swings with load, so each cell also records the
+Spark work of its best rep (jobs, stages, tasks, executor time, shuffle),
+read from the status store by job-id range. Those counters do not move
+with the host, and they name the layer a regression is in.
 """
 
 from __future__ import annotations
 
+import time
 from itertools import zip_longest
 
 from .operators.clustering import _fitted
-from .session import SESSION_CACHES
+from .session import SESSION_CACHES, default_parallelism, get_spark
 
 # Queries whose registry number deliberately isolates the APPLY stage of a
 # model that ANOTHER query builds. A measurement harness running such a
@@ -75,87 +80,70 @@ def warm_staged_inputs(spark, sf_dir: str, name: str) -> None:
         _shingle_postings(spark, sf_dir)
 
 
-def settle_verdict(
-    window_pres: list[float], post: float, floor: float
-) -> str | None:
-    """Classify an end-of-run settle re-measure of a contention-flagged cell.
+def _pass_through(batches):
+    import numpy as np  # the import a worker would otherwise pay in a cell
 
-    ``window_pres`` carries the canary reading taken at the START of every
-    measurement window the settle attempt ran (the pre-canary of the first
-    run, plus — if the attempt tripped its own contended retry — the
-    settle-loop exit reading the rerun started from). Returns
-    ``"confirmed"``, ``"confirmed-selfwear"``, or ``None`` (not
-    confirmable — the flag stays).
-
-    The ``+contended-retry`` flag exists to mark KNOWN-INFLATED numbers:
-    cells whose every measurement window ran under ambient host contention.
-    Host contention can only ADD wall time to a CPU-bound query, so once a
-    settle window verifiably BEGAN calm, min(recorded, settle_best) is a
-    legitimate >=calm-wall sample — the flag's "inflated" claim is refuted
-    by an actual measurement, not by waiting. A hot POST after calm starts
-    is the documented self-wear pattern (the cell's own execution leaves
-    GC/block-storage debt the canary reads — clean-pre + hot-post = self
-    wear, hot-pre = ambient contention); it is confirmed under a distinct
-    label so nothing is hidden. Judging window STARTS (not the retried
-    bit) matters for exactly those cells: their own wear re-trips the
-    retry on every attempt, so a retried-never-confirms rule would leave
-    etl_e2e_* flagged forever even when every window began at the floor.
-    A window that began hot keeps the flag.
-    """
-    clean = max(1.3 * floor, floor + 0.05)
-    if not window_pres or any(p > clean for p in window_pres):
-        return None
-    return "confirmed" if post <= clean else "confirmed-selfwear"
+    for pdf in batches:
+        pdf["id"] = pdf["id"] + int(np.int64(0))
+        yield pdf
 
 
-def measure_reps(
-    run_once,
-    repeats: int,
-    snap: list[set],
-    holder: list | None,
-    deadline: float | None = None,
-    clock=None,
-    prep=None,
-    capture=None,
-) -> float | None:
-    """Min-of-``repeats`` under the model-cache discipline: the session model
-    caches roll back to ``snap`` before EVERY rep, so repeats re-pay builds
-    the timed query itself performs. ``snap`` must be taken ONCE by the
-    caller (after dep warm-up, before the first run) and SHARED with any
-    contended-retry rerun — a snapshot taken inside the rerun would see the
-    first run's builds as pre-existing and never evict them (the r8 advisor
-    found exactly that: the rerun's rep 0 measured apply-with-warm-model
-    under a tag that promised the fit).
+def fresh_session(sf_dir: str):
+    """Stop the active session and return a new, warmed one.
 
-    ``holder`` is a shared one-element best-so-far spanning the first run AND
-    any rerun (and, for the settle pass, seeded with the already-recorded
-    cell): ``capture(dt)`` fires only when the GLOBAL min improves, so a
-    rerun rep slower than the first run's min can never overwrite a phase /
-    stage decomposition with one from a slower run (the r9 advisor hole in
-    both bench.py and scale_bench). ``prep()`` runs after the rollback,
-    outside the timed region. ``clock`` is injectable for tests.
-    """
-    import time as _time
+    The warm-up pays, untimed, what would otherwise land on whichever cell
+    runs first: JVM start and scan codegen, one pandas+numpy import per
+    Python worker, the file listing and parquet footers of every input
+    table, and the fixture world the phab_*/etl_e2e_* queries share."""
+    from pyspark.sql import SparkSession
 
-    if clock is None:
-        clock = _time.perf_counter
-    if holder is None:
-        holder = [None]
+    from .plans.phab_queries import _ensure_world
+    from .sources.catalog import DRIVER_TABLES, load_table
+
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        active.stop()
+    spark = get_spark("bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    cpus = default_parallelism()
+    spark.range(cpus * 4).repartition(cpus).mapInPandas(_pass_through, "id long").count()
+    for t in DRIVER_TABLES:
+        load_table(spark, sf_dir, t).count()
+    _ensure_world(spark)
+    return spark
+
+
+def measure_cell(spark, sf_dir: str, by_name: dict, name: str, repeats: int, reader):
+    """Min-of-``repeats`` wall seconds of ``by_name[name].build(...).count()``.
+
+    Returns ``(best_s, work, phases)``: ``work`` is
+    ``reader(spark).work_since(...)`` over the best rep's jobs and
+    ``phases`` a copy of ``incremental_runner.PHASE_LOG`` after it.
+
+    Untimed, before the single cache snapshot: the WARM_DEPS dependency
+    runs, an owned cache is cleared and staged inputs are built. Every rep
+    then starts from that snapshot, so it re-pays any model the query
+    itself builds."""
+    from .plans.incremental_runner import PHASE_LOG
+
+    dep = WARM_DEPS.get(name)
+    if dep is not None:
+        by_name[dep].build(spark, sf_dir).count()
+    clear_owned_caches(name)
+    warm_staged_inputs(spark, sf_dir, name)
+    snap = cache_snapshot()
+    status = reader(spark)
     best = None
     for _ in range(repeats):
         cache_rollback(snap)
-        if prep is not None:
-            prep()
-        t0 = clock()
-        run_once()
-        dt = clock() - t0
-        if holder[0] is None or dt < holder[0]:
-            if capture is not None:
-                capture(dt)
-            holder[0] = dt
-        best = dt if best is None else min(best, dt)
-        if deadline is not None and clock() > deadline:
-            break
+        PHASE_LOG.clear()
+        last_job = status.last_job_id()
+        t0 = time.perf_counter()
+        by_name[name].build(spark, sf_dir).count()
+        dt = time.perf_counter() - t0
+        if best is None or dt < best[0]:
+            best = (dt, status.work_since(last_job), [dict(p) for p in PHASE_LOG])
     return best
 
 

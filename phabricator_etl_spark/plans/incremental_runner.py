@@ -152,8 +152,9 @@ def merge_upsert(target: DataFrame | None, staging: DataFrame, key: str) -> Data
 
 # Wall-clock decomposition of every run_incremental call, appended per run
 # (r6 verdict #7: the e2e bench entry moved +30% r5->r6 and the phases were
-# not separable from the one total). bench.py snapshots this around the
-# etl_e2e_* entries and writes it to BENCH_DETAIL.json; it costs five
+# not separable from the one total). benchutil.measure_cell clears it before
+# every rep and returns the best rep's copy, which bench.py writes to
+# BENCH_DETAIL.json as phase_timings of the etl_e2e_* cells; it costs five
 # perf_counter() reads per run, nothing more. The branch_* keys are wall
 # time INSIDE the concurrent merge pool, so they overlap each other and sum
 # to more than merge_write_wall.

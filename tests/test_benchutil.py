@@ -1,9 +1,9 @@
 """Measurement-discipline helpers: shared by bench.py and tools/scale_bench.py.
 
-The contract under test is the r8 advisor finding: a min-of-N repeat (or a
-contended-retry rerun) must re-pay model builds the timed query itself
-performed, while keeping caches that predate its snapshot (the documented
-kmeans_cells -> ann_ivf_kmeans layering).
+The contract under test is the r8 advisor finding: every rep of a min-of-N
+cell must re-pay model builds the timed query itself performed, while
+keeping caches that predate its snapshot (the documented kmeans_cells ->
+ann_ivf_kmeans layering).
 """
 
 from __future__ import annotations
@@ -135,40 +135,6 @@ def test_initial_heap_floor_on_exhausted_host(monkeypatch, tmp_path):
     assert sess._mem_to_mb(sess._initial_heap("8g")) == 256
 
 
-def test_settle_verdict_clears_flags_only_on_calm_windows():
-    """The '+contended-retry' flag means KNOWN-INFLATED. A settle re-measure
-    may clear it only when every measurement window it ran verifiably BEGAN
-    calm (window-start canaries at the floor); a hot post after calm starts
-    is the documented self-wear pattern and confirms under a distinct label
-    instead of silently re-flagging forever (etl_e2e_*), including when the
-    wear trips the in-settle retry — the rerun window's own start canary is
-    what must be calm, not the retried bit."""
-    from phabricator_etl_spark.benchutil import settle_verdict
-
-    floor = 0.04  # clean threshold = max(1.3*0.04, 0.04+0.05) = 0.09
-    # calm start + calm post: flag refuted outright
-    assert settle_verdict([0.05], 0.08, floor) == "confirmed"
-    # calm start + hot post: self-wear — confirmed, but labelled as such
-    assert settle_verdict([0.05], 0.40, floor) == "confirmed-selfwear"
-    # hot start: the settle window itself started contended — flag stays
-    assert settle_verdict([0.30], 0.05, floor) is None
-    # self-wear tripped the in-settle retry, but BOTH windows began calm
-    # (first pre + settle-loop exit): still confirmable as self-wear
-    assert settle_verdict([0.05, 0.07], 0.40, floor) == "confirmed-selfwear"
-    # ...and if the retry's rerun window began calm and ended calm, the
-    # rerun was a fully calm-bracketed measurement: plain confirmation
-    assert settle_verdict([0.05, 0.07], 0.08, floor) == "confirmed"
-    # the settle loop never calmed before the rerun — flag stays
-    assert settle_verdict([0.05, 0.30], 0.05, floor) is None
-    # no measured window at all — nothing to confirm with
-    assert settle_verdict([], 0.05, floor) is None
-    # threshold is max(ratio, absolute): at a tiny ratcheted floor the
-    # absolute +0.05 margin governs, so ~60 ms canary noise still confirms
-    assert settle_verdict([0.055], 0.03, 0.01) == "confirmed"
-    # boundary: start exactly at the clean threshold confirms (gate is '>')
-    assert settle_verdict([0.09], 0.09, floor) == "confirmed"
-
-
 def test_cache_owner_and_staged_input_declarations():
     """The harness discipline tables must stay consistent with the operators:
     every CACHE_OWNERS key is a registry query, every WARM_DEPS value is an
@@ -193,71 +159,159 @@ def test_cache_owner_and_staged_input_declarations():
     assert POSTINGS_CONSUMERS <= names
 
 
-def test_measure_reps_rerun_repays_model_build():
-    """VERDICT r9 #4: the r8-shaped bug on a counting fake. A contended-retry
-    rerun shares the snapshot taken BEFORE the first run, so every rep —
-    including rep 0 of the rerun — must find the model the timed query
-    builds evicted and re-pay the fit. With a snapshot taken inside the
-    rerun (the r8 bug) the assert below fires on the rerun's first rep."""
-    from phabricator_etl_spark.benchutil import measure_reps
+class _FakeQuery:
+    """A registry entry whose build runs ``action`` and whose count() is
+    one Spark job."""
+
+    def __init__(self, action):
+        self.action = action
+
+    def build(self, spark, sf_dir):
+        self.action()
+        return self
+
+    def count(self):
+        _FakeStatus.jobs += 1
+        return 0
+
+
+class _FakeStatus:
+    """Stands in for perfbench.counters.StatusReader: job ids count up,
+    and the work since a job id is the number of jobs after it."""
+
+    jobs = 0
+
+    def __init__(self, spark):
+        pass
+
+    def last_job_id(self):
+        return _FakeStatus.jobs
+
+    def work_since(self, last_job_id):
+        return _FakeStatus.jobs - last_job_id
+
+
+def test_measure_cell_repays_model_build_every_rep():
+    """The documented kmeans_cells -> ann_ivf_kmeans layering: the WARM_DEPS
+    dependency runs once before the snapshot, so its model survives every
+    rollback, while the model the timed query builds itself is evicted and
+    re-paid at every rep."""
+    from phabricator_etl_spark.benchutil import measure_cell
 
     fit = _fitted.cache
-    try:
+    builds = []
+
+    def build_dep():
         fit[PRE] = "warm-dep-model"
-        builds = []
 
-        def run_once():
-            # a warm hit here IS the r8 bug: the rep would silently time
-            # apply-with-warm-model under a tag that promises the fit
-            assert BUILT not in fit
-            # ...while caches predating the snapshot must stay warm
-            assert fit[PRE] == "warm-dep-model"
-            builds.append(1)
-            fit[BUILT] = "fit"
-
-        ticks = iter(range(1000))
-
-        def clock():
-            return next(ticks)
-
-        snap = cache_snapshot()  # ONCE, before the first run
-        holder = [None]
-        measure_reps(run_once, 2, snap, holder, clock=clock)
-        # contended-retry rerun: SAME snap, SAME holder
-        measure_reps(run_once, 2, snap, holder, clock=clock)
-        assert len(builds) == 4, "every rep of both runs must re-pay the fit"
+    def build_timed():
+        # a warm hit here would time apply-with-warm-model
+        assert BUILT not in fit
         assert fit[PRE] == "warm-dep-model"
+        builds.append(1)
+        fit[BUILT] = "fit"
+
+    by_name = {
+        WARM_DEPS["ann_ivf_kmeans"]: _FakeQuery(build_dep),
+        "ann_ivf_kmeans": _FakeQuery(build_timed),
+    }
+    try:
+        _, work, phases = measure_cell(None, "sf", by_name, "ann_ivf_kmeans", 3, _FakeStatus)
+        assert len(builds) == 3, "every rep must re-pay the fit"
+        assert fit[PRE] == "warm-dep-model"
+        assert work == 1 and phases == []
     finally:
         fit.pop(PRE, None)
         fit.pop(BUILT, None)
 
 
-def test_measure_reps_capture_only_on_global_best():
-    """The r9 advisor hole: a rerun rep slower than the first run's min must
-    NOT re-capture the phase/stage decomposition — capture() fires only when
-    the shared best-so-far holder improves, across BOTH invocations."""
-    from phabricator_etl_spark.benchutil import measure_reps
+def test_measure_cell_reports_fastest_rep(monkeypatch):
+    """The counters and phases returned are those of the rep whose time is
+    returned: a later, slower rep must not overwrite them."""
+    from phabricator_etl_spark import benchutil
+    from phabricator_etl_spark.plans.incremental_runner import PHASE_LOG
 
-    # two calls x two reps with durations 5, 3, 9, 4 (clock ticks are
-    # consumed in (t0, t1) pairs per rep; no deadline -> no extra tick)
-    ticks = iter([0, 5, 10, 13, 100, 109, 200, 204])
+    # reps take 5, 3 and 9 (perf_counter is read at the start and end of each)
+    ticks = iter([0, 5, 10, 13, 100, 109])
+    monkeypatch.setattr(benchutil.time, "perf_counter", lambda: next(ticks))
+    reps = []
 
-    def clock():
-        return next(ticks)
+    def run():
+        reps.append(len(reps))
+        # the rep's own jobs and phase record: rep k runs k + 1 jobs
+        _FakeStatus.jobs += len(reps) - 1
+        PHASE_LOG.append({"rep": reps[-1]})
 
-    captured = []
-    snap = cache_snapshot()
-    holder = [None]
-    best1 = measure_reps(
-        lambda: None, 2, snap, holder, clock=clock, capture=captured.append
+    by_name = {"fake": _FakeQuery(run)}
+    try:
+        best, work, phases = benchutil.measure_cell(None, "sf", by_name, "fake", 3, _FakeStatus)
+    finally:
+        PHASE_LOG.clear()
+    assert reps == [0, 1, 2]
+    assert best == 3
+    assert work == 2 and phases == [{"rep": 1}]
+
+
+def test_bench_unknown_query_name_fails_before_any_session():
+    """A typo in SPARK_GRAFT_BENCH_ONLY must not measure zero queries and
+    report a 0 s total: the name lookup raises before a session starts."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "SPARK_GRAFT_BENCH_ONLY": "q1_pricing_summary,no_such_query"}
+    proc = subprocess.run(
+        [sys.executable, os.path.join(root, "bench.py")],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
     )
-    best2 = measure_reps(
-        lambda: None, 2, snap, holder, clock=clock, capture=captured.append
-    )
-    assert best1 == 3 and best2 == 4  # per-call mins (the recorded cell
-    # takes min(best1, best2) — unchanged)
-    assert holder[0] == 3
-    assert captured == [5, 3], (
-        "9 and 4 never beat the global min 3: their decompositions must not "
-        "overwrite the one paired with the recorded number"
-    )
+    assert proc.returncode != 0
+    assert "KeyError: 'no_such_query'" in proc.stderr
+    assert not proc.stdout.strip(), proc.stdout
+
+
+def test_bench_failed_session_restart_is_a_cell_error(monkeypatch, capsys):
+    """A session restart that raises costs the cell it was for, not the
+    bench line: the next cell retries the restart, and the stdout line and
+    detail still come out."""
+    import importlib.util
+    import json
+    import os
+
+    from perfbench.counters import Work
+    from phabricator_etl_spark import benchutil
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location("bench", os.path.join(root, "bench.py"))
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+
+    starts = []
+
+    def fresh_session(sf_dir):
+        starts.append(sf_dir)
+        if len(starts) == 1:
+            raise RuntimeError("JVM gateway exited")
+        return "spark"
+
+    def measure_cell(spark, sf_dir, by_name, name, repeats, reader):
+        assert spark == "spark"
+        return 1.5, Work(jobs=4, stages=4, tasks=8), {}
+
+    monkeypatch.setattr(benchutil, "fresh_session", fresh_session)
+    monkeypatch.setattr(benchutil, "measure_cell", measure_cell)
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_ONLY", "q1_pricing_summary,q3_shipping_priority")
+    bench.main()
+
+    line = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert len(starts) == 2
+    assert (line["n_queries"], line["n_errors"], line["spark_jobs"]) == (1, 1, 4)
+    assert line["queries"] == {"q3_shipping_priority": 1.5}
+    with open("/tmp/BENCH_DETAIL.smoke.json") as f:
+        detail = json.load(f)
+    assert detail["errors"] == {"q1_pricing_summary": "RuntimeError: JVM gateway exited"}
+    assert detail["counters"]["q3_shipping_priority"]["jobs"] == 4
+    assert "jobs_by_module" not in detail["counters"]["q3_shipping_priority"]

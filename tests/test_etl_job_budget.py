@@ -1,4 +1,4 @@
-"""Spark job budget of a first-load ETL run.
+"""Spark job budgets of a first-load ETL run and of five sentinel queries.
 
 At fixture size the runner is bound by scheduling, not data: each Spark job
 costs a driver round-trip whatever it moves. The job count is a
@@ -25,6 +25,7 @@ from phabricator_etl_spark.sources import phab_fixtures
 from phabricator_etl_spark.sources.phab_fixtures import PhabSources
 
 NOW = 2_000_000_000  # after every fixture timestamp
+SF_SMOKE_DIR = "/root/testdata/sf0.001"
 
 # Jobs of one first load of the gate-size world; the same at 1, 4, 8, 16
 # and 32 cores. The graph jobs are those of the small-graph
@@ -32,6 +33,18 @@ NOW = 2_000_000_000  # after every fixture timestamp
 # pipeline's query stages and fill the edge cache.
 JOB_BUDGET = 77
 GRAPH_JOB_BUDGET = 8
+
+# Jobs of one count() of each sentinel query at sf0.001: the most seen at
+# 1, 4, 8 and 16 cores, each count repeating over 10 runs (1 core runs
+# 3/7/20/8/4). phab_revisions is counted with the fixture world already
+# built, as bench.py warms it.
+QUERY_JOB_BUDGETS = {
+    "q1_pricing_summary": 4,
+    "q3_shipping_priority": 7,
+    "phab_revisions": 21,
+    "dedup_minhash_lsh": 10,
+    "ann_topk_vectorized": 7,
+}
 
 
 def _jobs_since(spark, last_job_id: int) -> list[tuple[int, str]]:
@@ -84,3 +97,19 @@ def test_read_back_schema_matches_written_files(spark, first_load):
     assert sorted(out) == sorted(R.MERGE_KEYS)
     for name, df in out.items():
         assert df.schema == spark.read.parquet(os.path.join(dest, name)).schema, name
+
+
+# The sentinels read the sf0.001 parquet fixtures, which CI does not have;
+# the first-load tests above generate their own world and always run.
+@pytest.mark.skipif(not os.path.isdir(SF_SMOKE_DIR), reason=f"{SF_SMOKE_DIR} missing")
+@pytest.mark.parametrize("name", sorted(QUERY_JOB_BUDGETS))
+def test_sentinel_query_job_budget(spark, sf_smoke, name):
+    from phabricator_etl_spark.plans.phab_queries import _ensure_world
+    from phabricator_etl_spark.registry import queries_dict
+
+    _ensure_world(spark)
+    build = queries_dict()[name]
+    before = max((i for i, _ in _jobs_since(spark, -1)), default=-1)
+    build(spark, sf_smoke).count()
+    jobs = _jobs_since(spark, before)
+    assert len(jobs) <= QUERY_JOB_BUDGETS[name], f"{len(jobs)} jobs: {sorted(jobs)}"
