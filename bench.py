@@ -26,8 +26,6 @@ before any session starts.
 
 from __future__ import annotations
 
-import dataclasses
-import gc
 import json
 import os
 import sys
@@ -67,21 +65,17 @@ def main() -> None:
             if spark is None or i % SESSION_CELLS == 0:
                 spark = None  # a failed restart is retried at the next cell
                 spark = fresh_session(sf_dir)
-            best, work, phases = measure_cell(spark, sf_dir, by_name, name, REPEATS, StatusReader)
+            cell = measure_cell(spark, sf_dir, by_name, name, REPEATS, StatusReader)
         except Exception as e:  # noqa: BLE001 - one broken query must not
             # take down the whole bench line
             errors[name] = f"{type(e).__name__}: {str(e)[:200]}"
             print(f"# {name}: ERROR {errors[name]}", file=sys.stderr)
             continue
-        timings[name] = round(best, 3)
-        counters[name] = {k: round(v, 3) for k, v in dataclasses.asdict(work).items() if k != "jobs_by_module"}
-        if phases:
-            phase_timings[name] = phases
-        print(f"# {name}: {best:.3f}s {work.jobs} jobs", file=sys.stderr)
-        if i % 10 == 9:
-            # drop dead DataFrame references so the ContextCleaner frees
-            # their blocks between cells, not in one GC stall inside a cell
-            gc.collect()
+        timings[name] = round(cell.seconds, 3)
+        counters[name] = cell.counters
+        if cell.phases:
+            phase_timings[name] = cell.phases
+        print(f"# {name}: {cell.seconds:.3f}s {cell.work.jobs} jobs", file=sys.stderr)
 
     total = round(sum(timings.values()), 3)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]

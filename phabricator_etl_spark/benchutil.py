@@ -1,8 +1,8 @@
 """Shared measurement discipline for the bench harnesses.
 
-bench.py (every registry query at sf0.1) and tools/opt_probe.py measure a
-cell with ``measure_cell`` in a session from ``fresh_session``;
-tools/scale_bench.py (the sf1..sf30 curve) uses the cache helpers directly.
+bench.py (every registry query at sf0.1), tools/scale_bench.py (the
+sf1..sf30 curve) and tools/opt_probe.py all measure a cell with
+``measure_cell`` in a session from ``fresh_session``.
 
 A cell is min-of-N, and staged artifacts memoized by
 ``session.session_cached`` complicate that — the k-means Lloyd fit
@@ -25,8 +25,11 @@ with the host, and they name the layer a regression is in.
 
 from __future__ import annotations
 
+import dataclasses
+import gc
 import time
 from itertools import zip_longest
+from typing import NamedTuple
 
 from .operators.clustering import _fitted
 from .session import SESSION_CACHES, default_parallelism, get_spark
@@ -93,8 +96,10 @@ def fresh_session(sf_dir: str):
 
     The warm-up pays, untimed, what would otherwise land on whichever cell
     runs first: JVM start and scan codegen, one pandas+numpy import per
-    Python worker, the file listing and parquet footers of every input
-    table, and the fixture world the phab_*/etl_e2e_* queries share."""
+    Python worker, every column page of every input table (``hash(*)``
+    reads them all into the OS page cache; at sf30 a cold first read of the
+    text and embedding tables took 2-8x the warm one), and the fixture
+    world the phab_*/etl_e2e_* queries share."""
     from pyspark.sql import SparkSession
 
     from .plans.phab_queries import _ensure_world
@@ -109,22 +114,38 @@ def fresh_session(sf_dir: str):
     cpus = default_parallelism()
     spark.range(cpus * 4).repartition(cpus).mapInPandas(_pass_through, "id long").count()
     for t in DRIVER_TABLES:
-        load_table(spark, sf_dir, t).count()
+        load_table(spark, sf_dir, t).selectExpr("count(hash(*))").collect()
     _ensure_world(spark)
     return spark
 
 
-def measure_cell(spark, sf_dir: str, by_name: dict, name: str, repeats: int, reader):
-    """Min-of-``repeats`` wall seconds of ``by_name[name].build(...).count()``.
+class Cell(NamedTuple):
+    """One measured cell. Every field after ``seconds`` belongs to the rep
+    whose time is ``seconds``."""
 
-    Returns ``(best_s, work, phases)``: ``work`` is
-    ``reader(spark).work_since(...)`` over the best rep's jobs and
-    ``phases`` a copy of ``incremental_runner.PHASE_LOG`` after it.
+    seconds: float
+    work: object  # perfbench.counters.Work over the rep's jobs
+    phases: list  # incremental_runner.PHASE_LOG after the rep
+    rows: int  # the rep's count()
+    stage_times: dict  # iterative.STAGE_TIMES after the rep
+
+    @property
+    def counters(self) -> dict:
+        """The work counters as recorded in BENCH_DETAIL.json/SCALE_BENCH.json."""
+        fields = dataclasses.asdict(self.work)
+        return {k: round(v, 3) for k, v in fields.items() if k != "jobs_by_module"}
+
+
+def measure_cell(spark, sf_dir: str, by_name: dict, name: str, repeats: int, reader) -> Cell:
+    """Min-of-``repeats`` wall seconds of ``by_name[name].build(...).count()``,
+    with the best rep's work (``reader(spark).work_since(...)`` over its
+    jobs), phase log, row count and stage decomposition.
 
     Untimed, before the single cache snapshot: the WARM_DEPS dependency
     runs, an owned cache is cleared and staged inputs are built. Every rep
     then starts from that snapshot, so it re-pays any model the query
     itself builds."""
+    from .operators.iterative import STAGE_TIMES
     from .plans.incremental_runner import PHASE_LOG
 
     dep = WARM_DEPS.get(name)
@@ -136,14 +157,21 @@ def measure_cell(spark, sf_dir: str, by_name: dict, name: str, repeats: int, rea
     status = reader(spark)
     best = None
     for _ in range(repeats):
+        # free the previous cell's or rep's dead DataFrames now, untimed, so
+        # the ContextCleaner drops their checkpoint blocks before this rep
+        # rather than in a GC stall inside it (three stacked reps of the
+        # sf30 k-core cell ran a 48g heap out of memory)
+        gc.collect()
         cache_rollback(snap)
         PHASE_LOG.clear()
+        STAGE_TIMES.clear()
         last_job = status.last_job_id()
         t0 = time.perf_counter()
-        by_name[name].build(spark, sf_dir).count()
+        rows = by_name[name].build(spark, sf_dir).count()
         dt = time.perf_counter() - t0
-        if best is None or dt < best[0]:
-            best = (dt, status.work_since(last_job), [dict(p) for p in PHASE_LOG])
+        if best is None or dt < best.seconds:
+            phases = [dict(p) for p in PHASE_LOG]
+            best = Cell(dt, status.work_since(last_job), phases, rows, dict(STAGE_TIMES))
     return best
 
 

@@ -36,7 +36,8 @@ ROUNDS: dict[str, int] = {}
 # this decomposition makes the growth attributable per materialization
 # barrier: edge checkpoint+count, initial degree aggregation, then per
 # round the peel-set count and the decremental degree update. Written by
-# kcore_subgraph, read by tools/scale_bench.py into SCALE_BENCH.json.
+# kcore_subgraph; benchutil.measure_cell keeps the best rep's copy, which
+# tools/scale_bench.py writes to SCALE_BENCH.json.
 STAGE_TIMES: dict[str, float] = {}
 
 

@@ -40,15 +40,21 @@ MERGE_KEYS = {  # merge key + recency column per table (stats.py:976-984)
 SNAPSHOT_TABLES = {"review_groups", "project_transactions"}
 
 
+def _hadoop_fs(spark: SparkSession, path: str):
+    """The Hadoop FileSystem holding ``path`` (file://, hdfs://, s3a://
+    alike) and the Path class to address it with."""
+    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
+    return jvm_path(path).getFileSystem(spark._jsc.hadoopConfiguration()), jvm_path
+
+
 def _dest_exists(spark: SparkSession, path: str) -> bool:
-    """Cluster-correct existence probe via the Hadoop FS API (file://,
-    hdfs://, s3a:// alike). Probing with a failing ``spark.read.parquet``
-    instead would store a PATH_NOT_FOUND analysis error that Spark 4's
-    ObservationManager listener re-raises into the log on every first run
-    (ERROR ExecutionListenerBus) — probe the filesystem, not the analyzer."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(jpath))
+    """Cluster-correct existence probe via the Hadoop FS API. Probing with a
+    failing ``spark.read.parquet`` instead would store a PATH_NOT_FOUND
+    analysis error that Spark 4's ObservationManager listener re-raises
+    into the log on every first run (ERROR ExecutionListenerBus) — probe
+    the filesystem, not the analyzer."""
+    fs, jvm_path = _hadoop_fs(spark, path)
+    return bool(fs.exists(jvm_path(path)))
 
 
 def read_watermark(spark: SparkSession, dest_dir: str) -> int | None:
@@ -219,9 +225,19 @@ def run_incremental(
         t_branch = time.perf_counter()
         key, recency = MERGE_KEYS[name]
         staging = dedup_latest(df, key, recency)
-        path = os.path.join(dest_dir, name)
+        path, stage = os.path.join(dest_dir, name), os.path.join(dest_dir, name + "__stage")
+        fs, jvm_path = _hadoop_fs(spark, path)
+        if fs.exists(jvm_path(stage)):
+            # A killed run left its swap (below) unfinished. The stage is
+            # fully written before the target is deleted, so with no target
+            # it is the complete new table: finish the rename. Next to a
+            # target it may be partial: drop it.
+            if fs.exists(jvm_path(path)):
+                fs.delete(jvm_path(stage), True)
+            elif not fs.rename(jvm_path(stage), jvm_path(path)):
+                raise IOError(f"rename {stage} -> {path} failed")
         target = None
-        if name not in SNAPSHOT_TABLES and _dest_exists(spark, path):
+        if name not in SNAPSHOT_TABLES and fs.exists(jvm_path(path)):
             # the stored revisions table carries its ym partition column;
             # strip it so target and staging schemas line up for the merge
             try:
@@ -249,17 +265,15 @@ def run_incremental(
         # swap. One materialization either way, and the swap is MORE
         # crash-safe than checkpoint+overwrite (the old table stays complete
         # until the new one is fully written).
-        write_path = path if target is None else path + "__stage"
+        write_path = path if target is None else stage
         writer = merged.write.mode("overwrite")
         if name == "revisions":
             writer = writer.partitionBy("ym")
         writer.parquet(write_path)
         if write_path != path:
-            jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-            fs = jvm_path(path).getFileSystem(spark._jsc.hadoopConfiguration())
             fs.delete(jvm_path(path), True)
-            if not fs.rename(jvm_path(write_path), jvm_path(path)):
-                raise IOError(f"rename {write_path} -> {path} failed")
+            if not fs.rename(jvm_path(stage), jvm_path(path)):
+                raise IOError(f"rename {stage} -> {path} failed")
         phases[f"branch_{name}"] = round(time.perf_counter() - t_branch, 3)
         # read back with the schema just written: inferring it would run
         # one more job per table to re-read the footers

@@ -1,4 +1,5 @@
-"""Measurement-discipline helpers: shared by bench.py and tools/scale_bench.py.
+"""Measurement-discipline helpers: shared by bench.py, tools/scale_bench.py
+and tools/opt_probe.py, which all measure through ``measure_cell``.
 
 The contract under test is the r8 advisor finding: every rep of a min-of-N
 cell must re-pay model builds the timed query itself performed, while
@@ -161,7 +162,9 @@ def test_cache_owner_and_staged_input_declarations():
 
 class _FakeQuery:
     """A registry entry whose build runs ``action`` and whose count() is
-    one Spark job."""
+    one Spark job returning ``rows``."""
+
+    rows = 0
 
     def __init__(self, action):
         self.action = action
@@ -172,7 +175,7 @@ class _FakeQuery:
 
     def count(self):
         _FakeStatus.jobs += 1
-        return 0
+        return self.rows
 
 
 class _FakeStatus:
@@ -216,19 +219,21 @@ def test_measure_cell_repays_model_build_every_rep():
         "ann_ivf_kmeans": _FakeQuery(build_timed),
     }
     try:
-        _, work, phases = measure_cell(None, "sf", by_name, "ann_ivf_kmeans", 3, _FakeStatus)
+        cell = measure_cell(None, "sf", by_name, "ann_ivf_kmeans", 3, _FakeStatus)
         assert len(builds) == 3, "every rep must re-pay the fit"
         assert fit[PRE] == "warm-dep-model"
-        assert work == 1 and phases == []
+        assert cell.work == 1 and cell.phases == []
     finally:
         fit.pop(PRE, None)
         fit.pop(BUILT, None)
 
 
 def test_measure_cell_reports_fastest_rep(monkeypatch):
-    """The counters and phases returned are those of the rep whose time is
-    returned: a later, slower rep must not overwrite them."""
+    """The counters, phases, row count and stage decomposition returned are
+    those of the rep whose time is returned: a later, slower rep must not
+    overwrite them, and no rep inherits an earlier rep's stage times."""
     from phabricator_etl_spark import benchutil
+    from phabricator_etl_spark.operators.iterative import STAGE_TIMES
     from phabricator_etl_spark.plans.incremental_runner import PHASE_LOG
 
     # reps take 5, 3 and 9 (perf_counter is read at the start and end of each)
@@ -241,15 +246,22 @@ def test_measure_cell_reports_fastest_rep(monkeypatch):
         # the rep's own jobs and phase record: rep k runs k + 1 jobs
         _FakeStatus.jobs += len(reps) - 1
         PHASE_LOG.append({"rep": reps[-1]})
+        # only rep 1 runs a staged operator; its rows differ per rep
+        if reps[-1] == 1:
+            STAGE_TIMES["edges_checkpoint"] = 1.5
+        fake.rows = 100 + reps[-1]
 
-    by_name = {"fake": _FakeQuery(run)}
+    fake = _FakeQuery(run)
     try:
-        best, work, phases = benchutil.measure_cell(None, "sf", by_name, "fake", 3, _FakeStatus)
+        cell = benchutil.measure_cell(None, "sf", {"fake": fake}, "fake", 3, _FakeStatus)
+        assert STAGE_TIMES == {}, "rep 2 must start from empty stage times"
     finally:
         PHASE_LOG.clear()
+        STAGE_TIMES.clear()
     assert reps == [0, 1, 2]
-    assert best == 3
-    assert work == 2 and phases == [{"rep": 1}]
+    assert cell.seconds == 3
+    assert cell.work == 2 and cell.phases == [{"rep": 1}]
+    assert cell.rows == 101 and cell.stage_times == {"edges_checkpoint": 1.5}
 
 
 def test_bench_unknown_query_name_fails_before_any_session():
@@ -283,6 +295,7 @@ def test_bench_failed_session_restart_is_a_cell_error(monkeypatch, capsys):
 
     from perfbench.counters import Work
     from phabricator_etl_spark import benchutil
+    from phabricator_etl_spark.benchutil import Cell
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     spec = importlib.util.spec_from_file_location("bench", os.path.join(root, "bench.py"))
@@ -299,7 +312,7 @@ def test_bench_failed_session_restart_is_a_cell_error(monkeypatch, capsys):
 
     def measure_cell(spark, sf_dir, by_name, name, repeats, reader):
         assert spark == "spark"
-        return 1.5, Work(jobs=4, stages=4, tasks=8), {}
+        return Cell(1.5, Work(jobs=4, stages=4, tasks=8), [], 0, {})
 
     monkeypatch.setattr(benchutil, "fresh_session", fresh_session)
     monkeypatch.setattr(benchutil, "measure_cell", measure_cell)

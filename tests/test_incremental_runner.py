@@ -86,3 +86,32 @@ def test_corrupted_dest_falls_back_to_first_run(spark):
             assert _rows(got[name]) == _rows(ref[name]), (
                 f"{name}: recovery run over corrupted dest != clean full run"
             )
+
+
+def test_interrupted_swap_is_finished_or_dropped(spark):
+    """A run killed inside the stage-then-swap write leaves one of two
+    states; the next incremental run must still equal a full recompute.
+    Killed after deleting the target: only ``comments__stage`` exists, and
+    it is the complete table, so the run finishes the rename instead of
+    treating ``comments`` as a first load (which kept only the changed
+    subset). Killed while writing the stage: ``diffs__stage`` may be
+    partial next to an intact ``diffs``, so the run drops it."""
+    import os
+    import shutil
+
+    full_src, early_src = _split_world(spark, seed=31)
+    with tempfile.TemporaryDirectory(prefix="swap_") as d1, tempfile.TemporaryDirectory(prefix="ref_") as d2:
+        R.run_incremental(spark, early_src, d1, now=NOW)
+        os.rename(os.path.join(d1, "comments"), os.path.join(d1, "comments__stage"))
+        partial = os.path.join(d1, "diffs__stage")
+        shutil.copytree(os.path.join(d1, "diffs"), partial)
+        for f in sorted(f for f in os.listdir(partial) if f.startswith("part-"))[1:]:
+            os.remove(os.path.join(partial, f))
+        with open(os.path.join(partial, "part-junk"), "w") as f:
+            f.write("not parquet\n")
+
+        got = R.run_incremental(spark, full_src, d1, now=NOW)
+        ref = R.run_incremental(spark, full_src, d2, now=NOW, full=True)
+        for name in R.MERGE_KEYS:
+            assert _rows(got[name]) == _rows(ref[name]), f"{name}: run after an interrupted swap != full recompute"
+        assert not [p for p in os.listdir(d1) if p.endswith("__stage")]
