@@ -98,8 +98,8 @@ def fresh_session(sf_dir: str):
     runs first: JVM start and scan codegen, one pandas+numpy import per
     Python worker, every column page of every input table (``hash(*)``
     reads them all into the OS page cache; at sf30 a cold first read of the
-    text and embedding tables took 2-8x the warm one), and the fixture
-    world the phab_*/etl_e2e_* queries share."""
+    text and embedding tables took 2-8x the warm one), and the landing of the
+    parquet fixture world the phab_*/etl_e2e_* queries share."""
     from pyspark.sql import SparkSession
 
     from .plans.phab_queries import _ensure_world

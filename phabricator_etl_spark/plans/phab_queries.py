@@ -3,9 +3,10 @@
 The driver's correctness gate compares each queries() entry against DuckDB
 oracle SQL. The Phabricator pipelines read fixture tables, not the driver's
 TPC-H-ish tables — so the fixture world (sources/phab_fixtures, fixed seed)
-is materialized once to parquet under the repo, and each oracle is a THIRD
-independent implementation of the reference's semantics, in pure DuckDB SQL
-over those parquet files (the second being the Python oracle in tests/).
+is landed once as parquet under the repo by ``phab_fixtures.land``. The
+pipelines scan those files, and each oracle is a THIRD independent
+implementation of the reference's semantics, in pure DuckDB SQL over the
+same files (the second being the Python oracle in tests/).
 
 Output conventions: arrays joined to '|' strings with an explicit NULL
 marker (review_groups keeps unresolved members as NULL — SURVEY §7.12);
@@ -28,35 +29,13 @@ FIXTURE_SEED = 7
 FIXTURE_DIR = os.path.join(os.path.dirname(__file__), "..", "..", ".phab_fixtures", f"seed{FIXTURE_SEED}")
 FIXTURE_DIR = os.path.abspath(FIXTURE_DIR)
 
-_TABLES = (
-    "user", "user_email", "project", "project_edge", "project_transaction",
-    "repository", "repository_uri", "revision", "diff", "changeset",
-    "differential_transaction", "transaction_comment", "reviewer",
-    "diff_edge", "customfieldstorage",
-)
-
 NULL_MARK = "<null>"
 
 
 @session_cached
 def _ensure_world(spark: SparkSession) -> phab_fixtures.PhabSources:
-    """Generate the fixture world; materialize it to parquet once so the
-    DuckDB oracles can scan the identical bytes.
-
-    Memoized per session: generation is pure (fixed seed), so the 8 pipeline
-    gate entries share ONE set of source DataFrames instead of re-running the
-    driver-side createDataFrame x15 (and its Arrow conversion) per query."""
-    src = phab_fixtures.generate(spark, seed=FIXTURE_SEED)
-    marker = os.path.join(FIXTURE_DIR, "_DONE")
-    if not os.path.exists(marker):
-        os.makedirs(FIXTURE_DIR, exist_ok=True)
-        for name in _TABLES:
-            getattr(src, name).coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(FIXTURE_DIR, name)
-            )
-        with open(marker, "w") as f:
-            f.write("ok\n")
-    return src
+    """Scans of the landed fixture world: the bytes the DuckDB oracles read."""
+    return phab_fixtures.land(spark, FIXTURE_DIR, seed=FIXTURE_SEED)
 
 
 def _pq(name: str) -> str:

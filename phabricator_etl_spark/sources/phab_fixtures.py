@@ -1,11 +1,13 @@
 """Deterministic Phabricator-shaped fixtures (FIXTURES.md §1).
 
-Generates the 15 source tables the reference reads (stats.py:161-191) as
-in-memory DataFrames with explicit schemas — the declared-StructType stand-in
-for the reference's automap reflection (SURVEY.md §1.1). Edge cases per
-FIXTURES.md: bmo- projects, PHID-RIDT diff authors, commit (landing) diffs,
-bool-true suggestion decoys, garbage JSON, dependency stacks with cross-bug
-decoys, multi/zero-URI repositories, users without primary emails.
+Generates the 15 source tables the reference reads (stats.py:161-191) with
+the declared schemas in SCHEMAS — the stand-in for the reference's automap
+reflection (SURVEY.md §1.1) — either as in-memory DataFrames (generate) or
+as parquet files that Spark and the DuckDB oracles both scan (land). Edge
+cases per FIXTURES.md: bmo- projects, PHID-RIDT diff authors, commit
+(landing) diffs, bool-true suggestion decoys, garbage JSON, dependency stacks
+with cross-bug decoys, multi/zero-URI repositories, users without primary
+emails.
 
 Seeded and pure: same seed -> identical tables, so pipeline tests and the
 Python oracle in tests/ see the same world.
@@ -14,11 +16,15 @@ Python oracle in tests/ see the same world.
 from __future__ import annotations
 
 import json
+import os
 import random
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 BUG_FIELD_INDEX = "zdMFYM6423ua"  # bug-id custom field (stats.py:1120-1123)
 
@@ -48,7 +54,33 @@ def _schema(*fields: tuple[str, T.DataType]) -> T.StructType:
 
 S = T.StringType()
 L = T.LongType()
-B = T.BooleanType()
+
+# Declared schema of each table, in PhabSources field order; generate() and
+# land() both build their frames from it.
+SCHEMAS = {
+    "user": _schema(("phid", S), ("userName", S)),
+    "user_email": _schema(("userPHID", S), ("address", S), ("isPrimary", L)),
+    "project": _schema(("id", L), ("phid", S), ("name", S), ("primarySlug", S)),
+    "project_edge": _schema(("src", S), ("type", L), ("dst", S)),
+    "project_transaction": _schema(("id", L), ("objectPHID", S), ("authorPHID", S), ("transactionType", S),
+                                   ("dateCreated", L), ("oldValue", S), ("newValue", S), ("metadata", S)),
+    "repository": _schema(("phid", S), ("name", S), ("details", S)),
+    "repository_uri": _schema(("repositoryPHID", S), ("uri", S)),
+    "revision": _schema(("id", L), ("phid", S), ("status", S), ("dateCreated", L),
+                        ("dateModified", L), ("repositoryPHID", S)),
+    "diff": _schema(("id", L), ("phid", S), ("revisionID", L), ("creationMethod", S),
+                    ("authorPHID", S), ("dateCreated", L)),
+    "changeset": _schema(("id", L), ("diffID", L), ("addLines", L), ("delLines", L), ("filename", S)),
+    "differential_transaction": _schema(("id", L), ("objectPHID", S), ("transactionType", S), ("commentPHID", S),
+                                        ("authorPHID", S), ("dateCreated", L), ("oldValue", S), ("newValue", S)),
+    "transaction_comment": _schema(("id", L), ("phid", S), ("revisionPHID", S), ("changesetID", L),
+                                   ("authorPHID", S), ("dateCreated", L), ("content", S), ("attributes", S)),
+    "reviewer": _schema(("id", L), ("revisionPHID", S), ("reviewerPHID", S), ("reviewerStatus", S),
+                        ("dateCreated", L), ("dateModified", L), ("lastActionDiffPHID", S),
+                        ("lastCommentDiffPHID", S)),
+    "diff_edge": _schema(("src", S), ("type", L), ("dst", S)),
+    "customfieldstorage": _schema(("objectPHID", S), ("fieldIndex", S), ("fieldValue", S)),
+}
 
 STATE_CHANGE_SAMPLE = [
     "differential.revision.abandon",
@@ -63,8 +95,9 @@ T0 = 1_640_995_200  # 2022-01-01 UTC
 MONTH = 2_629_746
 
 
-def generate(spark: SparkSession, *, seed: int = 7, n_users: int = 40, n_projects: int = 12,
-             n_repos: int = 8, n_revisions: int = 120) -> PhabSources:
+def _rows(seed: int, n_users: int = 40, n_projects: int = 12, n_repos: int = 8,
+          n_revisions: int = 120) -> dict[str, list[tuple]]:
+    """Each table's rows, in SCHEMAS column order."""
     rng = random.Random(seed)
 
     # --- users + emails -----------------------------------------------------
@@ -268,53 +301,41 @@ def generate(spark: SparkSession, *, seed: int = 7, n_users: int = 40, n_project
             reviewers.append((rv_id, rphid, rev_phid, status, base + j, base + j * 13 + 1,
                               action_diff, comment_diff))
 
-    return PhabSources(
-        user=spark.createDataFrame(users, _schema(("phid", S), ("userName", S))),
-        user_email=spark.createDataFrame(emails, _schema(("userPHID", S), ("address", S), ("isPrimary", L))),
-        project=spark.createDataFrame(projects, _schema(("id", L), ("phid", S), ("name", S), ("primarySlug", S))),
-        project_edge=spark.createDataFrame(project_edges, _schema(("src", S), ("type", L), ("dst", S))),
-        project_transaction=spark.createDataFrame(
-            ptxns,
-            _schema(("id", L), ("objectPHID", S), ("authorPHID", S), ("transactionType", S),
-                    ("dateCreated", L), ("oldValue", S), ("newValue", S), ("metadata", S)),
-        ),
-        repository=spark.createDataFrame(repos, _schema(("phid", S), ("name", S), ("details", S))),
-        repository_uri=spark.createDataFrame(repo_uris, _schema(("repositoryPHID", S), ("uri", S))),
-        revision=spark.createDataFrame(
-            revisions,
-            _schema(("id", L), ("phid", S), ("status", S), ("dateCreated", L),
-                    ("dateModified", L), ("repositoryPHID", S)),
-        ),
-        diff=spark.createDataFrame(
-            diffs,
-            _schema(("id", L), ("phid", S), ("revisionID", L), ("creationMethod", S),
-                    ("authorPHID", S), ("dateCreated", L)),
-        ),
-        changeset=spark.createDataFrame(
-            changesets,
-            _schema(("id", L), ("diffID", L), ("addLines", L), ("delLines", L), ("filename", S)),
-        ),
-        differential_transaction=spark.createDataFrame(
-            dtxns,
-            _schema(("id", L), ("objectPHID", S), ("transactionType", S), ("commentPHID", S),
-                    ("authorPHID", S), ("dateCreated", L), ("oldValue", S), ("newValue", S)),
-        ),
-        transaction_comment=spark.createDataFrame(
-            comments,
-            _schema(("id", L), ("phid", S), ("revisionPHID", S), ("changesetID", L),
-                    ("authorPHID", S), ("dateCreated", L), ("content", S), ("attributes", S)),
-        ),
-        reviewer=spark.createDataFrame(
-            reviewers,
-            _schema(("id", L), ("revisionPHID", S), ("reviewerPHID", S), ("reviewerStatus", S),
-                    ("dateCreated", L), ("dateModified", L), ("lastActionDiffPHID", S),
-                    ("lastCommentDiffPHID", S)),
-        ),
-        diff_edge=spark.createDataFrame(diff_edges, _schema(("src", S), ("type", L), ("dst", S))),
-        customfieldstorage=spark.createDataFrame(
-            cfs, _schema(("objectPHID", S), ("fieldIndex", S), ("fieldValue", S))
-        ),
-    )
+    return {
+        "user": users, "user_email": emails, "project": projects, "project_edge": project_edges,
+        "project_transaction": ptxns, "repository": repos, "repository_uri": repo_uris,
+        "revision": revisions, "diff": diffs, "changeset": changesets,
+        "differential_transaction": dtxns, "transaction_comment": comments,
+        "reviewer": reviewers, "diff_edge": diff_edges, "customfieldstorage": cfs,
+    }
+
+
+def generate(spark: SparkSession, *, seed: int = 7, **sizes: int) -> PhabSources:
+    """The world as in-memory DataFrames: one positional ``createDataFrame(rows,
+    schema)`` per table, so any object with that method can stand in for ``spark``."""
+    rows = _rows(seed, **sizes)
+    return PhabSources(**{name: spark.createDataFrame(rows[name], schema) for name, schema in SCHEMAS.items()})
+
+
+def land(spark: SparkSession, root: str, *, seed: int = 7, **sizes: int) -> PhabSources:
+    """Write the world to ``<root>/<table>/part-0.parquet`` with pyarrow (no
+    Spark job) and return scans of those files with the declared schemas.
+
+    Once ``<root>/_DONE`` exists nothing is rewritten: other processes, the
+    DuckDB oracles among them, may be reading the files. Each file is renamed
+    into place, so two processes landing at once never expose a partial one."""
+    if not os.path.exists(os.path.join(root, "_DONE")):
+        rows = _rows(seed, **sizes)
+        for name, schema in SCHEMAS.items():
+            arrow = to_arrow_schema(schema)
+            os.makedirs(os.path.join(root, name), exist_ok=True)
+            tmp = os.path.join(root, name, f".part-0.parquet.{os.getpid()}")
+            pq.write_table(pa.Table.from_pylist([dict(zip(arrow.names, r)) for r in rows[name]], arrow), tmp)
+            os.replace(tmp, os.path.join(root, name, "part-0.parquet"))
+        with open(os.path.join(root, "_DONE"), "w") as f:
+            f.write("ok\n")
+    return PhabSources(**{name: spark.read.schema(schema).parquet(os.path.join(root, name))
+                          for name, schema in SCHEMAS.items()})
 
 
 def inject_hot_object(src: PhabSources, *, n_hot: int = 10_000,

@@ -2,12 +2,12 @@
 
 At fixture size the runner is bound by scheduling, not data: each Spark job
 costs a driver round-trip whatever it moves. The job count is a
-host-independent counter, so it can be pinned. The world is landed as
-parquet first, as a production run reads it: in-memory sources never plan
-broadcasts, so they count differently. Each table lands as one file, so the
-scans' task counts do not follow the session's core count: landed one file
-per core, the count at 32 cores varied from run to run with the timing of
-AQE's query stages.
+host-independent counter, so it can be pinned. The world is read from the
+parquet ``phab_fixtures.land`` writes, as a production run reads stored
+tables: in-memory sources never plan broadcasts, so they count differently.
+land() writes each table as one file, so the scans' task counts do not
+follow the session's core count: landed one file per core, the count at 32
+cores varied from run to run with the timing of AQE's query stages.
 
 Jobs are counted by job-id range from Spark's status store: the runner
 submits from pool threads, which do not inherit a job group.
@@ -22,7 +22,6 @@ import pytest
 
 from phabricator_etl_spark.plans import incremental_runner as R
 from phabricator_etl_spark.sources import phab_fixtures
-from phabricator_etl_spark.sources.phab_fixtures import PhabSources
 
 NOW = 2_000_000_000  # after every fixture timestamp
 SF_SMOKE_DIR = "/root/testdata/sf0.001"
@@ -36,12 +35,12 @@ GRAPH_JOB_BUDGET = 8
 
 # Jobs of one count() of each sentinel query at sf0.001: the most seen at
 # 1, 4, 8 and 16 cores, each count repeating over 10 runs (1 core runs
-# 3/7/20/8/4). phab_revisions is counted with the fixture world already
-# built, as bench.py warms it.
+# 3/7/16/8/4). phab_revisions is counted with the fixture world already
+# landed, as bench.py warms it.
 QUERY_JOB_BUDGETS = {
     "q1_pricing_summary": 4,
     "q3_shipping_priority": 7,
-    "phab_revisions": 21,
+    "phab_revisions": 16,
     "dedup_minhash_lsh": 10,
     "ann_topk_vectorized": 7,
 }
@@ -64,16 +63,11 @@ def _jobs_since(spark, last_job_id: int) -> list[tuple[int, str]]:
 def first_load(spark):
     """A first load of the gate-size world over parquet sources: its jobs,
     returned frames and destination."""
-    src = phab_fixtures.generate(spark, seed=7)
     with tempfile.TemporaryDirectory(prefix="job_budget_") as d:
-        tables = {}
-        for name, df in src.__dict__.items():
-            path = os.path.join(d, "world", name)
-            df.coalesce(1).write.parquet(path)
-            tables[name] = spark.read.schema(df.schema).parquet(path)
+        src = phab_fixtures.land(spark, os.path.join(d, "world"), seed=7)
         dest = os.path.join(d, "dest")
         before = max((i for i, _ in _jobs_since(spark, -1)), default=-1)
-        out = R.run_incremental(spark, PhabSources(**tables), dest, now=NOW, full=True)
+        out = R.run_incremental(spark, src, dest, now=NOW, full=True)
         jobs = _jobs_since(spark, before)
         yield jobs, out, dest
 

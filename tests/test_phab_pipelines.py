@@ -9,6 +9,8 @@ components replacement (property-checked per §4.3).
 
 from __future__ import annotations
 
+from dataclasses import fields
+
 import pytest
 
 from phabricator_etl_spark.plans import phab_pipelines as P
@@ -20,13 +22,12 @@ from phab_oracle import Oracle
 @pytest.fixture(scope="module")
 def world(spark):
     src = phab_fixtures.generate(spark, seed=7)
-    rows = {name: [r.asDict() for r in getattr(src, name).collect()] for name in (
-        "user", "user_email", "project", "project_edge", "project_transaction",
-        "repository", "repository_uri", "revision", "diff", "changeset",
-        "differential_transaction", "transaction_comment", "reviewer",
-        "diff_edge", "customfieldstorage",
-    )}
-    return src, Oracle(rows), P.build_all(src)
+    return src, Oracle(_rows(src)), P.build_all(src)
+
+
+def _rows(src):
+    """Each PhabSources table as a list of row dicts, for the oracle."""
+    return {f.name: [r.asDict() for r in getattr(src, f.name).collect()] for f in fields(src)}
 
 
 def _norm(rows):
@@ -91,12 +92,7 @@ def test_stack_size_property_alt_seed(spark):
     must equal the reference's per-seed BFS-with-bug-filter for EVERY
     revision (the equivalence argument SURVEY.md asks to confirm)."""
     src = phab_fixtures.generate(spark, seed=23, n_revisions=60)
-    rows = {name: [r.asDict() for r in getattr(src, name).collect()] for name in (
-        "user", "user_email", "project", "project_edge", "project_transaction",
-        "repository", "repository_uri", "revision", "diff", "changeset",
-        "differential_transaction", "transaction_comment", "reviewer",
-        "diff_edge", "customfieldstorage",
-    )}
+    rows = _rows(src)
     oracle = Oracle(rows)
     got = {r["rev_phid"]: r["stack_size"] for r in P.stack_sizes(src).collect()}
     for rev in rows["revision"]:
