@@ -1,44 +1,31 @@
 """Rolling localCheckpoint for iterative fixpoints — with block disposal.
 
 Every iterative operator here (connected components, PageRank, pointer
-jumping, k-core peeling, Lloyd k-means) follows the same pattern: the new
-round's state is `localCheckpoint(eager=True)`-ed to cut lineage (SURVEY.md
-§4.2), making the previous round's checkpoint garbage. But Spark gives no
-sanctioned way to free it: `DataFrame.unpersist()` routes through the cache
-manager, which does not know about checkpoint RDDs (verified on 4.1.2 — the
-block count does not drop), so a 15M-vertex fixpoint accumulates one dead
-15M-row block set PER ROUND in block storage. At sf10 that measured as
-run-to-run degradation of the CC query from 52 s to 161 s — the executor
-spends the tail of the run in GC walking dead blocks.
+jumping, k-core peeling) follows the same pattern: the new round's state is
+`localCheckpoint(eager=True)`-ed to cut lineage (SURVEY.md §4.2), making the
+previous round's checkpoint garbage. But Spark gives no sanctioned way to
+free it: `DataFrame.unpersist()` routes through the cache manager, which
+does not know about checkpoint RDDs (verified on 4.1.2 — the block count
+does not drop), so a 15M-vertex fixpoint accumulates one dead 15M-row block
+set PER ROUND in block storage. At sf10 that measured as run-to-run
+degradation of the CC query from 52 s to 161 s — the executor spends the
+tail of the run in GC walking dead blocks.
 
-The fix is targeted: snapshot `sc.getPersistentRDDs()` ids around the
-checkpoint call, and dispose exactly the ids the checkpoint created once the
-NEXT round's state is materialized. Disposal invalidates the old DataFrame
-(a localCheckpoint is non-recomputable by design) — which is the point: it
-is garbage. The final round's state is intentionally never disposed — it
-backs the DataFrame returned to the caller.
+The fix is targeted: a checkpointed DataFrame's plan is a `LogicalRDD` over
+exactly the RDD the checkpoint persisted, so `free(df)` unpersists that RDD
+through the DataFrame's own plan, touching nothing else. Freeing invalidates
+the DataFrame (a localCheckpoint is non-recomputable by design) — which is
+the point: it is garbage. The final round's state is intentionally never
+freed — it backs the DataFrame returned to the caller.
 
-Concurrency (r5 ADVICE): the id-diff is only sound if no OTHER persist
-lands inside the snapshot window. Two guards make that hold in a process
-that also runs pooled incremental builds (plans/incremental_runner.py):
-
-- a module-level lock serializes every tracked capture window, so two
-  threads' diffs can never interleave with each other;
-- CheckpointChain records its owning thread and asserts on step/dispose,
-  so a chain can't migrate across pool threads and dispose blocks another
-  thread still reads.
-
-An UNtracked persist (plain .localCheckpoint/.persist) from a concurrent
-thread during a capture window would still pollute the diff; the lock plus
-the rule "iterative operators always checkpoint through this module" keeps
-that from arising — pooled build steps that call connected_components etc.
-go through CheckpointChain and therefore through the lock.
+CheckpointChain records its owning thread and asserts on step/dispose, so a
+chain can't migrate across pool threads (plans/incremental_runner.py builds
+tables in a pool) and free blocks another thread still reads.
 """
 
 from __future__ import annotations
 
 import threading
-from typing import Callable
 
 from pyspark.sql import DataFrame
 
@@ -55,44 +42,14 @@ from pyspark.sql import DataFrame
 # keep per-round state VERTEX-sized and checkpoint big immutable relations
 # once (see kcore_subgraph) — so the default level stays.
 
-# Serializes every (snapshot, checkpoint, snapshot) capture window — see
-# module docstring. Coarse by design: the eager checkpoint job runs inside
-# the window, so concurrent iterative operators take turns checkpointing.
-# That trade is deliberate: rounds are shuffle-bound, the checkpoint
-# materialization is a small fraction of a round, and the alternative is
-# two threads disposing each other's LIVE blocks.
-_CAPTURE_LOCK = threading.Lock()
 
+def free(df: DataFrame) -> None:
+    """Release the blocks of ``df``, a ``localCheckpoint(eager=True)`` result.
 
-def tracked_local_checkpoint(df: DataFrame) -> tuple[DataFrame, Callable[[], None]]:
-    """`df.localCheckpoint(eager=True)` plus a disposer freeing its blocks.
-
-    The disposer makes the returned DataFrame unusable — call it only once
-    every consumer of this state has materialized.
+    ``df`` is unusable afterwards — call this only once every consumer of
+    that state has materialized.
     """
-    jsc = df.sparkSession.sparkContext._jsc.sc()
-
-    def ids() -> set[int]:
-        out, it = set(), jsc.getPersistentRDDs().iterator()
-        while it.hasNext():
-            out.add(it.next()._1())
-        return out
-
-    with _CAPTURE_LOCK:
-        before = ids()
-        ckpt = df.localCheckpoint(eager=True)
-        created = ids() - before
-
-    def dispose() -> None:
-        try:
-            rdds = jsc.getPersistentRDDs()
-            for i in created:
-                if rdds.contains(i):
-                    rdds.apply(i).unpersist(False)
-        except Exception:  # pragma: no cover - disposal is best-effort
-            pass
-
-    return ckpt, dispose
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 class CheckpointChain:
@@ -102,14 +59,14 @@ class CheckpointChain:
     state against the previous one (CC's changed-count join, sum probes), so
     the previous generation is only provably garbage once the round AFTER it
     has materialized. Memory is O(2 states) instead of O(rounds). States
-    handed out in the last two steps are never disposed (one of them backs
+    handed out in the last two steps are never freed (one of them backs
     the operator's return value). One chain per evolving state (labels,
     ranks, edge set, ...), owned by the thread that created it.
     """
 
     def __init__(self) -> None:
-        self._prev: Callable[[], None] | None = None
-        self._cur: Callable[[], None] | None = None
+        self._prev: DataFrame | None = None
+        self._cur: DataFrame | None = None
         self._owner = threading.get_ident()
 
     def _assert_owner(self, op: str) -> None:
@@ -117,15 +74,15 @@ class CheckpointChain:
         assert tid == self._owner, (
             f"CheckpointChain.{op} from thread {tid}, but the chain is owned "
             f"by thread {self._owner} — a chain must not cross threads "
-            "(it would dispose blocks the owner still reads)"
+            "(it would free blocks the owner still reads)"
         )
 
     def step(self, df: DataFrame) -> DataFrame:
         self._assert_owner("step")
-        ckpt, dispose = tracked_local_checkpoint(df)
+        ckpt = df.localCheckpoint(eager=True)
         if self._prev is not None:
-            self._prev()
-        self._prev, self._cur = self._cur, dispose
+            free(self._prev)
+        self._prev, self._cur = self._cur, ckpt
         return ckpt
 
     def dispose_all(self) -> None:
@@ -133,7 +90,7 @@ class CheckpointChain:
         NOT returned to the caller (e.g. a loop-internal helper table that
         dies with the loop)."""
         self._assert_owner("dispose_all")
-        for d in (self._prev, self._cur):
-            if d is not None:
-                d()
+        for df in (self._prev, self._cur):
+            if df is not None:
+                free(df)
         self._prev = self._cur = None

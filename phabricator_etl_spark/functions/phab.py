@@ -94,8 +94,9 @@ def latest_approved_date(reviewer_status: Column, date_modified: Column) -> Colu
 
 def gate_date_approved(date_landed: Column, date_approved: Column) -> Column:
     """C1 (reference: stats.py:698-699): date_approved is only meaningful
-    once a landing exists."""
-    return F.when(date_landed.isNotNull(), date_approved)
+    once a landing exists, with the reference's truthiness: epoch 0 is no
+    landing either."""
+    return F.when(date_landed.isNotNull() & (date_landed != 0), date_approved)
 
 
 def should_include_diff(creation_method: Column, author_phid: Column) -> Column:

@@ -33,6 +33,7 @@ from pyspark.sql.window import Window
 from ..query import Q
 from ..session import session_cached
 from ..sources.catalog import load_table as _t
+from .graph import collect_if_small
 
 K_CELLS = 8
 ITERATIONS = 5
@@ -92,22 +93,18 @@ def kmeans_fit(
     *,
     k: int = K_CELLS,
     iterations: int = ITERATIONS,
-    local_threshold: int | None = None,
 ) -> DataFrame:
     """vectors: (vec_id long, vec array<long> — quantized, non-negative).
     Returns (cell, centroid array<long>).
 
     Lloyd's algorithm: assign to nearest centroid, recompute floored integer
     means. Empty cells keep their previous centroid (standard fix)."""
-    if local_threshold is None:
-        local_threshold = KMEANS_LOCAL_ROWS
-    if local_threshold > 0:
-        # LIMIT probe doubles as the Arrow transfer (see graph.py).
-        probe = vectors.select("vec_id", "vec").limit(local_threshold + 1).toPandas()
-        if probe.empty:  # no vectors, no model: empty centroid table
+    # The probe doubles as the Arrow transfer (see graph.collect_if_small).
+    vpd = collect_if_small(vectors.select("vec_id", "vec"), KMEANS_LOCAL_ROWS)
+    if vpd is not None:
+        if vpd.empty:  # no vectors, no model: empty centroid table
             return vectors.sparkSession.createDataFrame([], "cell int, centroid array<bigint>")
-        if len(probe) <= local_threshold:
-            return _local_kmeans(vectors, probe, k, iterations)
+        return _local_kmeans(vectors, vpd, k, iterations)
     # Distributed Lloyd with the MODEL ON THE DRIVER (the MLlib shape): the
     # corpus never shuffles; each round is ONE job — an Arrow pass that both
     # assigns each batch (same argmin matmul + first-min tie-break as
@@ -128,8 +125,6 @@ def kmeans_fit(
     init = sorted(
         vectors.orderBy("vec_id").limit(k).collect(), key=lambda r: r["vec_id"]
     )
-    if not init:  # reachable with local_threshold=0 (forced-distributed)
-        return vectors.sparkSession.createDataFrame([], "cell int, centroid array<bigint>")
     C = np.vstack([np.asarray(r["vec"], dtype=np.int64) for r in init])
     kk = len(C)
     spark = vectors.sparkSession

@@ -1,15 +1,12 @@
 """Iterative graph algorithms as driver-orchestrated DataFrame fixpoints.
 
 The reference's one graph computation is the stack_size BFS (SURVEY §4.3);
-connected components generalizes it. This module adds the other two shapes a
-graph workload needs — frontier BFS (shortest hop distance) and power
-iteration (PageRank) — using the same pattern: per-round equi-joins,
-localCheckpoint to cut lineage, convergence by cheap aggregate.
-
-Scale: every round is one join edges⋈frontier + one groupBy min — shuffle
-volume proportional to the frontier, not the graph. Pre-partitioning edges by
-src keeps one side exchange-free across rounds (same layout trick as
-operators/graph.py).
+connected components generalizes it. This module adds the other shapes a
+graph workload needs — hop distance over in-forests by pointer jumping,
+power iteration (PageRank) and k-core peeling — using the same pattern:
+per-round equi-joins, localCheckpoint to cut lineage (ckpt.py), convergence
+by cheap aggregate, and below graph.LOCAL_EDGE_THRESHOLD a driver-side path
+behind the same size probe as connected components (graph.collect_if_small).
 """
 
 from __future__ import annotations
@@ -18,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..ckpt import CheckpointChain, tracked_local_checkpoint
+from ..ckpt import CheckpointChain, free
 from ..query import Q
 from ..sources.catalog import load_table as _t
 
@@ -39,54 +36,6 @@ ROUNDS: dict[str, int] = {}
 # kcore_subgraph; benchutil.measure_cell keeps the best rep's copy, which
 # tools/scale_bench.py writes to SCALE_BENCH.json.
 STAGE_TIMES: dict[str, float] = {}
-
-
-def bfs_distances(seeds: DataFrame, edges: DataFrame, *, max_iterations: int = 50) -> DataFrame:
-    """Hop distance from a seed set over DIRECTED edges (src -> dst).
-
-    seeds: DataFrame(id); edges: DataFrame(src, dst).
-    Returns (id, distance) for every reachable vertex (seeds at 0).
-    """
-    # Size the per-round layout to the graph (same trick as graph.py):
-    # hash-partition edges by src once; every round's frontier join then
-    # exchanges only the (small) frontier side.
-    spark = edges.sparkSession
-    n_edges = edges.count()
-    default_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    parts = max(2, min(default_parts, n_edges // 100_000 + 2))
-    edges = edges.repartition(parts, "src").localCheckpoint(eager=True)
-
-    dist = (
-        seeds.select(F.col("id"), F.lit(0).cast("long").alias("distance"))
-        .repartition(parts, "id")
-        .localCheckpoint(eager=True)
-    )
-    frontier = dist
-    settled_chunks = [dist]  # checkpointed pieces; union only at the end
-    for hop in range(1, max_iterations + 1):
-        ROUNDS["bfs"] = hop
-        # one anti-join against the lazy union of checkpointed chunks: the
-        # union is a plan over already-cached partitions, so no extra
-        # materialization per round
-        settled_ids = settled_chunks[0].select("id")
-        for chunk in settled_chunks[1:]:
-            settled_ids = settled_ids.unionByName(chunk.select("id"))
-        reached = (
-            edges.join(frontier, edges.src == frontier.id)
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(settled_ids, "id", "left_anti")
-            .withColumn("distance", F.lit(hop).cast("long"))
-            .localCheckpoint(eager=True)
-        )
-        if reached.isEmpty():
-            break
-        settled_chunks.append(reached)
-        frontier = reached
-    out = settled_chunks[0]
-    for chunk in settled_chunks[1:]:
-        out = out.unionByName(chunk)
-    return out
 
 
 def _local_pointer_distances(seeds: DataFrame, epd, spd) -> DataFrame:
@@ -133,7 +82,6 @@ def pointer_jump_distances(
     edges: DataFrame,
     *,
     max_iterations: int = 40,
-    local_threshold: int | None = None,
 ) -> DataFrame:
     """Hop distance from seeds over an IN-FOREST (every vertex has at most one
     incoming edge; seeds are the roots) by pointer jumping — Wyllie's parallel
@@ -141,37 +89,32 @@ def pointer_jump_distances(
 
     Each round, every vertex's known-ancestor pointer jumps to its ancestor's
     ancestor, accumulating the hop count, so the compressed path length
-    doubles per round: O(log diameter) rounds and self-joins vs frontier
+    doubles per round: O(log diameter) rounds and self-joins vs a frontier
     BFS's O(diameter). At 100 TB this is the difference between ~30 shuffle
     rounds and ~5 for long chains (e.g. event/session successor graphs).
 
-    Falls under the same semantics as ``bfs_distances`` when the graph is a
-    forest rooted at the seeds; use ``bfs_distances`` for general graphs.
+    Only a forest rooted at the seeds is supported: there, the result is the
+    BFS hop distance from the seed set.
     """
-    from .graph import LOCAL_EDGE_THRESHOLD, LOCAL_VERTEX_THRESHOLD
+    from .graph import LOCAL_EDGE_THRESHOLD, LOCAL_VERTEX_THRESHOLD, collect_if_small
 
-    if local_threshold is None:
-        local_threshold = LOCAL_EDGE_THRESHOLD
     edges = edges.persist()
-    if local_threshold > 0:
-        # LIMIT probe doubles as the Arrow transfer (see graph.py); nulls
-        # dropped Spark-side to keep pandas dtypes integral.
-        probe = (
-            edges.select("dst", "src")
-            .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-            .limit(local_threshold + 1)
-            .toPandas()
-        )
-        if len(probe) <= local_threshold:
-            # Seed side gets its own probe (r6 verdict #2): a forest with
-            # few edges can still be seeded at millions of roots, and the
-            # driver set is O(|seeds|). Supercritical seeds -> distributed.
-            sprobe = seeds.select("id").limit(LOCAL_VERTEX_THRESHOLD + 1).toPandas()
-            if len(sprobe) <= LOCAL_VERTEX_THRESHOLD:
-                try:
-                    return _local_pointer_distances(seeds, probe, sprobe)
-                finally:
-                    edges.unpersist()
+    # The probe doubles as the Arrow transfer (see graph.collect_if_small);
+    # nulls dropped Spark-side to keep pandas dtypes integral.
+    epd = collect_if_small(
+        edges.select("dst", "src").filter(F.col("src").isNotNull() & F.col("dst").isNotNull()),
+        LOCAL_EDGE_THRESHOLD,
+    )
+    if epd is not None:
+        # Seed side gets its own probe (r6 verdict #2): a forest with few
+        # edges can still be seeded at millions of roots, and the driver
+        # set is O(|seeds|). Supercritical seeds -> distributed.
+        spd = collect_if_small(seeds.select("id"), LOCAL_VERTEX_THRESHOLD)
+        if spd is not None:
+            try:
+                return _local_pointer_distances(seeds, epd, spd)
+            finally:
+                edges.unpersist()
     seeds = seeds.select("id").localCheckpoint(eager=True)
     # Non-root vertices start pointing at their parent, one hop away.
     # Rolling two-generation checkpoint (see ckpt.py): frees each round's
@@ -297,30 +240,24 @@ def pagerank(
     edges: DataFrame,
     *,
     iterations: int = 10,
-    local_threshold: int | None = None,
 ) -> DataFrame:
     """Power-iteration PageRank over directed edges; dangling mass is
     redistributed uniformly. Returns (id, rank_micro) in integer micro-units
     (1.0 == PR_MICRO); damping is the exact rational PR_DAMP_NUM/PR_DAMP_DEN
     and every division floors, so the result is bit-identical across the
     numpy local path, this distributed loop, and the SQL oracle."""
-    from .graph import LOCAL_EDGE_THRESHOLD, LOCAL_VERTEX_THRESHOLD
+    from .graph import LOCAL_EDGE_THRESHOLD, LOCAL_VERTEX_THRESHOLD, collect_if_small
 
-    if local_threshold is None:
-        local_threshold = LOCAL_EDGE_THRESHOLD
-    if local_threshold > 0:
-        probe = (
-            edges.select("src", "dst")
-            .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-            .limit(local_threshold + 1)
-            .toPandas()
-        )
-        if len(probe) <= local_threshold:
-            # Vertex side probed separately (r6 verdict #2): the rank
-            # vector is O(|V|) driver memory regardless of edge count.
-            vprobe = vertices.select("id").limit(LOCAL_VERTEX_THRESHOLD + 1).toPandas()
-            if len(vprobe) <= LOCAL_VERTEX_THRESHOLD:
-                return _local_pagerank(vertices, probe, iterations, vprobe)
+    epd = collect_if_small(
+        edges.select("src", "dst").filter(F.col("src").isNotNull() & F.col("dst").isNotNull()),
+        LOCAL_EDGE_THRESHOLD,
+    )
+    if epd is not None:
+        # Vertex side probed separately (r6 verdict #2): the rank vector is
+        # O(|V|) driver memory regardless of edge count.
+        vpd = collect_if_small(vertices.select("id"), LOCAL_VERTEX_THRESHOLD)
+        if vpd is not None:
+            return _local_pagerank(vertices, epd, iterations, vpd)
     n = vertices.count()
     base = PR_MICRO - PR_MICRO * PR_DAMP_NUM // PR_DAMP_DEN
     out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
@@ -337,13 +274,13 @@ def pagerank(
     # invariant instead of an accident of join strategy. A/B at sf0.1/sf1:
     # neutral on local[32] (in-memory shuffle); the guard targets real
     # clusters where a per-iteration edge exchange is network traffic.
-    e, dispose_e = tracked_local_checkpoint(
-        edges.join(out_deg, "src").repartition(parts, "src")
-    )
+    e = edges.join(out_deg, "src").repartition(parts, "src").localCheckpoint(eager=True)
     # The dangling-vertex SET is static across iterations; precompute it once
     # so each round only sums ranks over it.
-    dangling_ids, dispose_dangling = tracked_local_checkpoint(
-        vertices.join(out_deg.withColumnRenamed("src", "id"), "id", "left_anti").select("id")
+    dangling_ids = (
+        vertices.join(out_deg.withColumnRenamed("src", "id"), "id", "left_anti")
+        .select("id")
+        .localCheckpoint(eager=True)
     )
     # Rolling two-generation checkpoint (ckpt.py): each round's ranks make
     # the round-before-last's blocks garbage — free them.
@@ -380,8 +317,8 @@ def pagerank(
             )
         )
     # loop-internal tables die with the loop; final ranks (returned) stay live
-    dispose_e()
-    dispose_dangling()
+    free(e)
+    free(dangling_ids)
     return ranks
 
 
@@ -531,8 +468,8 @@ _KCORE_BROADCAST_BAD_ROWS = 16_000_000
 # to sort-spill (measured 9.8 s -> 119.3 s, 12x on a 3x step, at 32
 # inherited partitions). Shuffling the union BY NODE first makes every
 # task's hash |V|/parts-sized and loses only a useless combine; this cap
-# sizes that shuffle's partition count to the data (same layout-to-graph
-# sizing as bfs_distances). Re-checkpointing the edges at a higher
+# sizes that shuffle's partition count to the data (the same layout-to-graph
+# sizing as connected_components). Re-checkpointing the edges at a higher
 # partition count instead was tried and rejected during the r8 rework: the
 # chain holds two generations, and two ~10 GB edge copies re-triggered the
 # storage thrash (a 602 s sf30 run vs 274 s without the re-checkpoint; both
@@ -808,7 +745,7 @@ def _kcore_bipartite_oracle() -> str:
 
 
 ITERATIVE_QUERIES = [
-    Q("graph_bfs_distance", graph_bfs_distance, BFS_ORACLE, "frontier BFS vs closed-form oracle"),
+    Q("graph_bfs_distance", graph_bfs_distance, BFS_ORACLE, "pointer-jump hop distance vs closed-form oracle"),
     Q("graph_pagerank", graph_pagerank, _pagerank_oracle(), "integer micro-unit PageRank (unrolled-CTE oracle)"),
     Q("graph_kcore", graph_kcore, _kcore_oracle(), "iterative k-core peeling (round-tagged recursive-CTE oracle)"),
     Q(

@@ -22,6 +22,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from ..functions.phab import revision_year_month
 from ..sources.phab_fixtures import PhabSources
 from . import phab_pipelines as P
 
@@ -253,9 +254,7 @@ def run_incremental(
                 target = None
         merged = staging if target is None else merge_upsert(target, staging, key)
         if name == "revisions":
-            merged = merged.withColumn(
-                "ym", F.date_format(F.timestamp_seconds("date_modified"), "yyyy-MM")
-            )
+            merged = merged.withColumn("ym", revision_year_month(F.col("date_modified")))
         # r10 optimization (guide §2.4/§5): the old path localCheckpointed
         # `merged` before every write — a full extra materialization of every
         # table on every run — because the merge plan may READ the very path

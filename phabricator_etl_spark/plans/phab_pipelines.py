@@ -159,7 +159,7 @@ def build_comments(src: PhabSources, users: DataFrame) -> DataFrame:
 
 def build_transactions(src: PhabSources, users: DataFrame, projects: DataFrame) -> DataFrame:
     rev = src.revision.select(F.col("id").alias("revision_id"), F.col("phid").alias("rev_phid"))
-    txn = src.differential_transaction.filter(F.col("transactionType").isin(phab.STATE_CHANGE_TYPES))
+    txn = phab.filter_state_changes(src.differential_transaction)
     txn = txn.join(rev, txn.objectPHID == rev.rev_phid)
 
     # F2: reviewers-map values resolve PHID keys to names, document order,
@@ -388,12 +388,10 @@ def build_revisions(
         .join(F.broadcast(repos.withColumnRenamed("phid", "repo_phid")),
               rev.repositoryPHID == F.col("repo_phid"), "left")
     )
-    # C1 with the reference's truthiness: epoch 0 is falsy too (stats.py:699)
-    gated = F.when(F.col("date_landed").isNotNull() & (F.col("date_landed") != 0), F.col("date_approved"))
     return out.select(
         "bug_id",
         F.col("id").alias("revision_id"),
-        gated.alias("date_approved"),
+        phab.gate_date_approved(F.col("date_landed"), F.col("date_approved")).alias("date_approved"),
         F.col("dateCreated").alias("date_created"),
         F.col("dateModified").alias("date_modified"),
         "date_landed",

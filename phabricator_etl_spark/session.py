@@ -125,17 +125,9 @@ def get_spark(app_name: str = "phabricator-etl-spark", *, shuffle_partitions: in
         # requires the build side to fit a per-partition hash map
         # (estimate-guarded), AQE's threshold below re-checks with ACTUAL
         # post-shuffle partition bytes at runtime, and AQE skew-join
-        # splitting applies to shuffled-hash joins too. Deployments joining
-        # unbounded build sides under wildly wrong stats can flip the env
-        # to re-prefer sort-merge.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP", str(64 * 1024 * 1024)),
-        )
+        # splitting applies to shuffled-hash joins too.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.parquet.filterPushdown", "true")

@@ -83,12 +83,15 @@ def test_pagerank_star_graph(spark):
     assert max(spokes) == min(spokes), "spokes must have identical integer rank"
 
 
-def test_kmeans_local_and_distributed_paths_agree(spark, vectors):
+def test_kmeans_local_and_distributed_paths_agree(spark, vectors, monkeypatch):
     """Same assignments from the numpy driver path and the DataFrame loop
     (float ulp differences can only flip exactly-equidistant points, absent
     in continuous synthetic data)."""
+    from phabricator_etl_spark.operators import clustering
+
     local = kmeans_fit(vectors, iterations=2)
-    dist = kmeans_fit(vectors, iterations=2, local_threshold=0)
+    monkeypatch.setattr(clustering, "KMEANS_LOCAL_ROWS", 0)
+    dist = kmeans_fit(vectors, iterations=2)
 
     def cells(cents):
         return {r["vec_id"]: r["cell"] for r in assign_cells(vectors, cents).collect()}
@@ -96,11 +99,13 @@ def test_kmeans_local_and_distributed_paths_agree(spark, vectors):
     assert cells(local) == cells(dist)
 
 
-def test_pagerank_local_and_distributed_paths_agree(spark):
+def test_pagerank_local_and_distributed_paths_agree(spark, monkeypatch):
     """Numpy driver path vs DataFrame loop: with integer micro-unit ranks
     the two paths must agree EXACTLY (no float tolerance — summation order
     cannot matter for int64 adds)."""
     import random
+
+    from phabricator_etl_spark.operators import graph
 
     rng = random.Random(13)
     v = spark.createDataFrame([(i,) for i in range(200)], "id long")
@@ -108,7 +113,8 @@ def test_pagerank_local_and_distributed_paths_agree(spark):
         [(rng.randrange(200), rng.randrange(200)) for _ in range(600)], "src long, dst long"
     )
     local = {r.id: r.rank_micro for r in pagerank(v, e, iterations=8).collect()}
-    dist = {r.id: r.rank_micro for r in pagerank(v, e, iterations=8, local_threshold=0).collect()}
+    monkeypatch.setattr(graph, "LOCAL_EDGE_THRESHOLD", 0)
+    dist = {r.id: r.rank_micro for r in pagerank(v, e, iterations=8).collect()}
     assert local == dist
 
 

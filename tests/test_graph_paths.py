@@ -8,9 +8,15 @@ must produce the identical (id, component=min-id) labeling.
 
 from __future__ import annotations
 
+import os
 import random
 
+import pytest
+
+from phabricator_etl_spark.operators import graph as graph_mod
 from phabricator_etl_spark.operators.graph import connected_components
+
+SF_SMOKE_DIR = "/root/testdata/sf0.001"
 
 
 def _random_graph(seed: int, n: int, m: int):
@@ -24,12 +30,13 @@ def _labels(df):
     return {r["id"]: r["component"] for r in df.collect()}
 
 
-def test_local_and_distributed_paths_agree(spark):
+def test_local_and_distributed_paths_agree(spark, monkeypatch):
     vertices, edges = _random_graph(seed=11, n=300, m=180)
     vdf = spark.createDataFrame([(v,) for v in vertices], "id long")
     edf = spark.createDataFrame(edges, "src long, dst long")
     local = _labels(connected_components(vdf, edf))
-    dist = _labels(connected_components(vdf, edf, local_threshold=0))
+    monkeypatch.setattr(graph_mod, "LOCAL_EDGE_THRESHOLD", 0)
+    dist = _labels(connected_components(vdf, edf))
     assert local == dist
 
 
@@ -59,7 +66,7 @@ def test_isolated_vertices_and_self_loops(spark):
     assert got == {1: 1, 2: 2, 3: 3, 9: 3}
 
 
-def test_pointer_jump_paths_agree(spark):
+def test_pointer_jump_paths_agree(spark, monkeypatch):
     """Local memoized root-walk == distributed Wyllie ranking, on a forest
     of chains of mixed length (including an unreachable chain whose root is
     not a seed)."""
@@ -83,7 +90,8 @@ def test_pointer_jump_paths_agree(spark):
         return {r["id"]: r["distance"] for r in df.collect()}
 
     local = dists(pointer_jump_distances(sdf, edf))
-    dist = dists(pointer_jump_distances(sdf, edf, local_threshold=-1))
+    monkeypatch.setattr(graph_mod, "LOCAL_EDGE_THRESHOLD", 0)
+    dist = dists(pointer_jump_distances(sdf, edf))
     assert local == dist
     assert all(v < 10_000 for v in local)  # orphan chain excluded
 
@@ -93,8 +101,6 @@ def test_supercritical_vertices_skip_local_path(spark, monkeypatch):
     (the 100 TB shape after a selective edge filter: few edges, oceans of
     isolated vertices) must take the distributed path — never a full
     vertices.toPandas() — and still produce the local path's labeling."""
-    from phabricator_etl_spark.operators import graph as graph_mod
-
     vertices, edges = _random_graph(seed=31, n=500, m=60)
     vdf = spark.createDataFrame([(v,) for v in vertices], "id long")
     edf = spark.createDataFrame(edges, "src long, dst long")
@@ -112,7 +118,6 @@ def test_supercritical_vertices_skip_local_path(spark, monkeypatch):
 
 def test_supercritical_seeds_and_vertices_skip_local_paths(spark, monkeypatch):
     """Same guard for pointer jumping (seed side) and PageRank (vertex side)."""
-    from phabricator_etl_spark.operators import graph as graph_mod
     from phabricator_etl_spark.operators import iterative as it_mod
 
     # forest: 50 chains of length 4 -> 200 vertices, 150 edges, 50 seeds
@@ -156,14 +161,15 @@ def _py_kcore(edges: list[tuple[int, int]], k: int) -> dict[int, int]:
         es = {(a, b) for a, b in es if a not in bad and b not in bad}
 
 
-def test_kcore_matches_python_oracle_on_fixture_graph(spark):
+# Reads the sf0.001 parquet fixtures, which CI does not have.
+@pytest.mark.skipif(not os.path.isdir(SF_SMOKE_DIR), reason=f"{SF_SMOKE_DIR} missing")
+def test_kcore_matches_python_oracle_on_fixture_graph(spark, sf_smoke):
     from phabricator_etl_spark.operators.iterative import KCORE_K, graph_kcore
     from phabricator_etl_spark.operators.triangles import _canonical_edges
 
-    sf = "/root/testdata/sf0.001"
-    edges = [(r["a"], r["b"]) for r in _canonical_edges(spark, sf).collect()]
+    edges = [(r["a"], r["b"]) for r in _canonical_edges(spark, sf_smoke).collect()]
     expect = _py_kcore(edges, KCORE_K)
-    got = {r["node"]: r["core_degree"] for r in graph_kcore(spark, sf).collect()}
+    got = {r["node"]: r["core_degree"] for r in graph_kcore(spark, sf_smoke).collect()}
     assert got == expect
     assert got, "2-core should be non-empty on the residue graph"
 

@@ -84,13 +84,13 @@ def test_latest_landed_and_approved_with_gate(spark):
     assert landed[1].landed is None, "no commit diffs -> None"
 
     reviews = spark.createDataFrame(
-        [(1, "accepted", 10), (1, "rejected", 99), (2, "rejected", 99)],
+        [(1, "accepted", 10), (1, "rejected", 99), (2, "rejected", 99), (3, "accepted", 20)],
         ["rev", "reviewerStatus", "dateModified"],
     )
     rows = (
         reviews.groupBy("rev")
         .agg(phab.latest_approved_date(F.col("reviewerStatus"), F.col("dateModified")).alias("approved"))
-        .join(spark.createDataFrame([(1, 250), (2, None)], T.StructType([
+        .join(spark.createDataFrame([(1, 250), (2, None), (3, 0)], T.StructType([
             T.StructField("rev", T.LongType()), T.StructField("landed", T.LongType())])), "rev")
         .select("rev", phab.gate_date_approved(F.col("landed"), F.col("approved")).alias("gated"))
         .orderBy("rev")
@@ -98,6 +98,7 @@ def test_latest_landed_and_approved_with_gate(spark):
     )
     assert rows[0].gated == 10, "approved passes through when a landing exists"
     assert rows[1].gated is None, "date_approved gated on date_landed (stats.py:698-699)"
+    assert rows[2].gated is None, "epoch 0 is no landing: the reference tests truthiness"
 
 
 # --- should_include_diff (transforms.py:109-123)
