@@ -65,11 +65,14 @@ def basket_frequent_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (basket, item) rows before the exchange, the cap is a size() filter
     # (no window, no sort), and the pair generation below happens in-row,
     # so no basket-keyed exchange remains after this one. Basket arrays are
-    # bounded by MAX_BASKET_ITEMS, so per-row width is capped.
+    # bounded by MAX_BASKET_ITEMS, so per-row width is capped. collect_set
+    # drops a NULL item, which the oracle's DISTINCT rows count toward the
+    # basket size: the same aggregate's max(isNull) adds it back to the cap.
+    item = F.col("l_partkey").cast("long")
     bsets = (
         li.groupBy(F.col("l_orderkey").cast("long").alias("basket"))
-        .agg(F.collect_set(F.col("l_partkey").cast("long")).alias("items"))
-        .filter(F.size("items") <= MAX_BASKET_ITEMS)
+        .agg(F.collect_set(item).alias("items"), F.max(item.isNull().cast("int")).alias("null_item"))
+        .filter(F.size("items") + F.col("null_item") <= MAX_BASKET_ITEMS)
     )
     # basket count + threshold as a broadcast 1-row scalar: keeps the whole
     # query ONE job instead of an eager mid-pipeline .count() that blocks

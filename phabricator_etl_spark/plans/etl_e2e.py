@@ -42,23 +42,34 @@ _TABLES = R.MERGE_KEYS
 
 
 def _summarize(out: dict[str, DataFrame]) -> DataFrame:
-    parts = []
-    for name in sorted(_TABLES):
-        key, recency = _TABLES[name]
-        df = out[name]
-        rec = F.sum(F.coalesce(F.col(recency), F.lit(0))) if recency else F.lit(0)
-        parts.append(
-            df.agg(
+    """One pass: every table's (table_name, key, rec) rows are unioned and
+    reduced by one groupBy. One zero-weight marker row per table keeps an
+    empty table's summary row (n_rows 0, key_sum NULL, and rec_sum NULL
+    for a recency table, 0 for one without, as a per-table aggregate gives)."""
+    spark = next(iter(out.values())).sparkSession
+    marker = spark.createDataFrame(
+        [(name, None, None if recency else 0, 0) for name, (_, recency) in sorted(_TABLES.items())],
+        "table_name string, key string, rec long, w int",
+    )
+    rows = marker
+    for name, (key, recency) in sorted(_TABLES.items()):
+        rows = rows.unionByName(
+            out[name].select(
                 F.lit(name).alias("table_name"),
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.sum(md5_long(F.col(key).cast("string")) % _SUM_P).cast("long").alias("key_sum"),
-                rec.cast("long").alias("rec_sum"),
+                F.col(key).cast("string").alias("key"),
+                (F.coalesce(F.col(recency), F.lit(0)) if recency else F.lit(0)).cast("long").alias("rec"),
+                F.lit(1).alias("w"),
             )
         )
-    res = parts[0]
-    for p in parts[1:]:
-        res = res.unionByName(p)
-    return res.orderBy("table_name")
+    return (
+        rows.groupBy("table_name")
+        .agg(
+            F.sum("w").cast("long").alias("n_rows"),
+            F.sum(md5_long(F.col("key")) % _SUM_P).cast("long").alias("key_sum"),
+            F.sum("rec").cast("long").alias("rec_sum"),
+        )
+        .orderBy("table_name")
+    )
 
 
 def _dest(tag: str) -> str:

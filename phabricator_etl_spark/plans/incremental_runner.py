@@ -97,7 +97,7 @@ def expand_by_stack_component(
     current and incremental == full recompute. The expansion is one join
     against the CC labels already needed for stack_size — free at scale.
     Pass `comp` to reuse an already-materialized component table (the
-    runner shares ONE CC pass between this expansion and stack_sizes)."""
+    runner shares ONE CC pass between this expansion and the stack sizes)."""
     if comp is None:
         comp = P.stack_components(src)
     changed_phids = changed.revision.select(F.col("phid").alias("rev_phid"))
@@ -182,7 +182,7 @@ def run_incremental(
     t_phase = time.perf_counter()
     last_run = None if full else read_watermark(spark, dest_dir)
     world = filter_changed_revisions(src, last_run, now)
-    # ONE CC pass feeds both the graph-aware invalidation and stack_sizes.
+    # ONE CC pass feeds both the graph-aware invalidation and the stack sizes.
     # connected_components returns its labels already materialized (a
     # driver-built local relation on the small-graph path, the final label
     # checkpoint on the distributed one), so they are used as they come.
@@ -205,10 +205,10 @@ def run_incremental(
     phases["expand_and_pin_dims"] = round(time.perf_counter() - t_phase, 3)
     t_phase = time.perf_counter()
     # stack sizes come from the FULL graph (the filtered world can't see
-    # unchanged stack members — stats.py:1117-1119 queries all_revisions)
-    full_stacks = P.stack_sizes_from_components(src, comp)
+    # unchanged stack members — stats.py:1117-1119 queries all_revisions),
+    # counted straight from the labels: no revision scan, no join
     built = {
-        "revisions": P.build_revisions(world, repos, projects, stacks=full_stacks),
+        "revisions": P.build_revisions(world, repos, projects, stacks=P.component_sizes(comp)),
         "diffs": P.build_diffs(world, users),
         "changesets": P.build_changesets(world),
         "comments": P.build_comments(world, users),

@@ -13,16 +13,23 @@ deterministic winner (documented per site). Divergence is semantic-free for
 well-formed data and reproducible for malformed data — the better trade at
 100 TB.
 
-Scale notes: user/project/repository dimensions are broadcast (they are
-orders of magnitude smaller than the fact tables); every fact-side join is
-a single shuffle on its key; revisions rollups are partial-aggregated before
-the shuffle. No Python UDFs anywhere (SURVEY.md §2.10).
+Scale notes: project/repository dimensions are broadcast (they are
+orders of magnitude smaller than the fact tables), and so is the user
+dimension, after one aggregate; every fact-side join is a single shuffle on
+its key. The revisions table, as executed over the landed gate world
+(plans/r12/phab_revisions_executed.txt): the bug, review, tag and stack-size
+rollups are one union, partial-aggregated before its one rev_phid exchange
+and joined to the revision scan once; date_landed is one aggregate on its
+revision-id exchange; the stack sizes add one exchange on the component
+label below the union. At that size AQE broadcasts both aggregates, so the
+revision scan is never shuffled. No Python UDFs anywhere (SURVEY.md §2.10).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..functions import phab
 from ..operators.graph import connected_components
@@ -36,11 +43,20 @@ from ..sources.phab_fixtures import BUG_FIELD_INDEX, PhabSources
 def dim_users(src: PhabSources) -> DataFrame:
     """user name + primary email per user phid (J10/J11). The reference's
     user_name_cache (stats.py:360-371) and uncached get_user_email
-    (stats.py:388-397) both collapse into this one broadcast dimension."""
-    primary = src.user_email.filter(F.col("isPrimary") == 1).select(
-        F.col("userPHID").alias("phid"), F.col("address").alias("email")
+    (stats.py:388-397) both collapse into this one broadcast dimension.
+    The reference's `.one()` fails on a user with two primary emails; this
+    engine takes MIN(address) (SURVEY §7.9), so no user row fans out. User
+    and primary-email rows meet in one union aggregate, one exchange in
+    place of the join's broadcast; ``u`` keeps only phids with a user row."""
+    users = src.user.select("phid", "userName", F.lit(1).alias("u"))
+    primary = src.user_email.filter(F.col("isPrimary") == 1).select(F.col("userPHID").alias("phid"), "address")
+    return (
+        users.unionByName(primary, allowMissingColumns=True)
+        .groupBy("phid")
+        .agg(F.max("u").alias("u"), F.max("userName").alias("username"), F.min("address").alias("email"))
+        .filter(F.col("u").isNotNull())
+        .drop("u")
     )
-    return src.user.select("phid", F.col("userName").alias("username")).join(primary, "phid", "left")
 
 
 def dim_projects(src: PhabSources) -> DataFrame:
@@ -309,23 +325,23 @@ def stack_components(src: PhabSources) -> DataFrame:
     return comp.select(F.col("id").alias("rev_phid"), "component")
 
 
+def component_sizes(comp: DataFrame) -> DataFrame:
+    """(rev_phid, stack_size) of every revision that has a component: the
+    size is a count over its ``component`` label, one exchange on the label.
+    Revisions without a component (no bug) are absent; their size is 1."""
+    size = F.count(F.lit(1)).over(Window.partitionBy("component"))
+    return comp.select("rev_phid", size.alias("stack_size"))
+
+
 def stack_sizes(src: PhabSources) -> DataFrame:
     """A8/§4.3: one global connected-components pass over dependency edges
     restricted to same-bug endpoints, replacing the reference's per-revision
     BFS (stats.py:310-357). Returns (rev_phid, stack_size) for every
     revision; no-bug or isolated revisions get 1."""
-    return stack_sizes_from_components(src, stack_components(src))
-
-
-def stack_sizes_from_components(src: PhabSources, comp: DataFrame) -> DataFrame:
-    """stack_sizes over an already-computed (rev_phid, component) table —
-    lets callers share one CC pass across consumers."""
-    sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("sz"))
-    per_rev = comp.join(sizes, "component").select("rev_phid", F.col("sz"))
     return (
         src.revision.select(F.col("phid").alias("rev_phid"))
-        .join(per_rev, "rev_phid", "left")
-        .select("rev_phid", F.coalesce("sz", F.lit(1)).cast("long").alias("stack_size"))
+        .join(component_sizes(stack_components(src)), "rev_phid", "left")
+        .select("rev_phid", F.coalesce("stack_size", F.lit(1)).alias("stack_size"))
     )
 
 
@@ -336,55 +352,65 @@ def build_revisions(
     *,
     stacks: DataFrame | None = None,
 ) -> DataFrame:
-    """``stacks`` (rev_phid, stack_size) may be precomputed over the FULL
-    revision graph — required in incremental runs, where the revision table
-    here is watermark-filtered but stack membership must consult every
-    revision (the reference's BFS queries unfiltered all_revisions,
-    stats.py:1117-1119)."""
+    """``stacks`` holds the (rev_phid, stack_size) rows of revisions that
+    have a component (``component_sizes``); a revision without one gets 1.
+    Pass it computed over the FULL revision graph in incremental runs,
+    where the revision table here is watermark-filtered but stack
+    membership must consult every revision (the reference's BFS queries
+    unfiltered all_revisions, stats.py:1117-1119)."""
     rev = src.revision
 
     # A2: date_landed = max dateCreated over commit diffs (over ALL diffs,
-    # inclusion filter does not apply here — stats.py:455-467)
+    # inclusion filter does not apply here — stats.py:455-467). Keyed by
+    # revision id, so it stays its own aggregate.
     landed = src.diff.groupBy("revisionID").agg(
         phab.latest_landed_date(F.col("creationMethod"), F.col("dateCreated")).alias("date_landed")
     )
 
-    # A3 + W1 fused into ONE reviewer pass (r10, guide §2.4: two operations
-    # keyed the same way share one exchange): date_approved = max dateModified
-    # over accepted reviews, and last_review_id = the id of the
-    # (dateModified, id)-max row — max_by with the unique id in the ordering
-    # struct picks exactly the W1 window's desc/desc top-1, deterministically,
-    # without the second exchange + sort + window + join the separate
-    # formulation paid.
-    approved = (
-        src.reviewer.groupBy("revisionPHID")
-        .agg(
-            phab.latest_approved_date(F.col("reviewerStatus"), F.col("dateModified")).alias("date_approved"),
-            F.max_by("id", F.struct("dateModified", "id")).alias("last_review_id"),
-        )
-        .withColumnRenamed("revisionPHID", "rev_phid")
+    # The four rollups keyed by revision phid share ONE aggregate: their
+    # rows are unioned (each source fills its own columns, NULL elsewhere)
+    # and reduced by one groupBy(rev_phid), one exchange and one join. Every
+    # aggregate below skips the NULLs the other sources' rows carry.
+    # J1 bug id: at most one per revision (SURVEY J1 one_or_none), so max()
+    # is that one.
+    bug = _bug_ids(src)
+    # A3 + W1: date_approved = max dateModified over accepted reviews, and
+    # last_review_id = the id of the (dateModified, id)-max review. max_by
+    # with the unique id in the ordering struct picks the W1 window's
+    # desc/desc top-1 deterministically; the ordering is NULL on rows that
+    # are not reviews, which max_by skips.
+    reviews = src.reviewer.select(
+        F.col("revisionPHID").alias("rev_phid"), "reviewerStatus", "dateModified", F.col("id").alias("review_id")
     )
-
     # J9: project tag slugs (type-41 edges); deterministic sorted order
     # (the reference emits DB-arbitrary order, SURVEY §7.9)
     tags = (
         src.diff_edge.filter(F.col("type") == phab.OBJECT_HAS_PROJECT)
         .select(F.col("src").alias("rev_phid"), F.col("dst").alias("proj_phid"))
         .join(F.broadcast(projects.select(F.col("phid").alias("proj_phid"), "slug")), "proj_phid")
+        .select("rev_phid", "slug")
+    )
+    # A8: stack sizes straight from the component labels
+    if stacks is None:
+        stacks = component_sizes(stack_components(src))
+    is_review = F.col("review_id").isNotNull()
+    rolled = (
+        bug.unionByName(reviews, allowMissingColumns=True)
+        .unionByName(tags, allowMissingColumns=True)
+        .unionByName(stacks, allowMissingColumns=True)
         .groupBy("rev_phid")
-        .agg(F.array_sort(F.collect_set("slug")).alias("project_tags"))
+        .agg(
+            F.max("bug_id").alias("bug_id"),
+            phab.latest_approved_date(F.col("reviewerStatus"), F.col("dateModified")).alias("date_approved"),
+            F.max_by("review_id", F.when(is_review, F.struct("dateModified", "review_id"))).alias("last_review_id"),
+            F.array_sort(F.collect_set("slug")).alias("project_tags"),
+            F.max("stack_size").alias("stack_size"),
+        )
     )
 
-    bug = _bug_ids(src)
-    if stacks is None:
-        stacks = stack_sizes(src)
-
     out = (
-        rev.join(F.broadcast(bug), rev.phid == bug.rev_phid, "left").drop("rev_phid")
+        rev.join(rolled, rev.phid == rolled.rev_phid, "left").drop("rev_phid")
         .join(landed, rev.id == landed.revisionID, "left").drop("revisionID")
-        .join(approved, rev.phid == approved.rev_phid, "left").drop("rev_phid")
-        .join(tags, rev.phid == tags.rev_phid, "left").drop("rev_phid")
-        .join(stacks, rev.phid == stacks.rev_phid, "left").drop("rev_phid")
         .join(F.broadcast(repos.withColumnRenamed("phid", "repo_phid")),
               rev.repositoryPHID == F.col("repo_phid"), "left")
     )
@@ -415,9 +441,14 @@ def build_review_groups(src: PhabSources, users: DataFrame) -> DataFrame:
     unresolved Nones (stats.py:574-580, SURVEY §7.12); we order by member
     phid for determinism and keep the Nones via struct-collect."""
     proj = src.project.filter(~F.col("name").startswith("bmo-"))
-    members = src.project_edge.filter(F.col("type") == phab.PROJECT_HAS_MEMBER).select(
-        F.col("src").alias("proj_phid"), F.col("dst").alias("member_phid")
-    ).dropDuplicates(["proj_phid", "member_phid"])
+    # Hash partitioning on proj_phid clusters both the (proj, member) dedup
+    # and the per-project collect, so the two share this one exchange.
+    members = (
+        src.project_edge.filter(F.col("type") == phab.PROJECT_HAS_MEMBER)
+        .select(F.col("src").alias("proj_phid"), F.col("dst").alias("member_phid"))
+        .repartition("proj_phid")
+        .dropDuplicates(["proj_phid", "member_phid"])
+    )
     u = users.select(F.col("phid").alias("member_phid"), "username", "email")
     rolled = (
         members.join(F.broadcast(u), "member_phid", "left")
@@ -429,8 +460,10 @@ def build_review_groups(src: PhabSources, users: DataFrame) -> DataFrame:
             F.transform("ms", lambda m: m["email"]).alias("group_emails"),
         )
     )
+    # one rollup row per project: broadcast it rather than let AQE shuffle
+    # the project side before it turns the join into a broadcast
     return (
-        proj.join(rolled, proj.phid == rolled.proj_phid, "left")
+        proj.join(F.broadcast(rolled), proj.phid == rolled.proj_phid, "left")
         .select(
             F.col("id").alias("group_id"),
             F.col("name").alias("group_name"),

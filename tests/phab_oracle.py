@@ -33,9 +33,11 @@ class Oracle:
     def __init__(self, rows: dict[str, list]):
         self.r = rows
         self.user_name = {u["phid"]: u["userName"] for u in rows["user"]}
-        self.user_email = {
-            e["userPHID"]: e["address"] for e in rows["user_email"] if e["isPrimary"] == 1
-        }
+        self.user_email = {}  # the engine's MIN(address) over a user's primary emails
+        for e in rows["user_email"]:
+            if e["isPrimary"] == 1 and e["address"] is not None:
+                prev = self.user_email.get(e["userPHID"])
+                self.user_email[e["userPHID"]] = e["address"] if prev is None else min(prev, e["address"])
         self.proj_by_phid = {p["phid"]: p for p in rows["project"]}
         self.repo_by_phid = {p["phid"]: p for p in rows["repository"]}
         self.repo_uri = defaultdict(list)
@@ -254,12 +256,14 @@ class Oracle:
             date_landed = max(commit_dates) if commit_dates else None
             accepted = [
                 r["dateModified"] for r in self.reviewers_by_rev[rev["phid"]]
-                if r["reviewerStatus"] == "accepted"
+                if r["reviewerStatus"] == "accepted" and r["dateModified"] is not None
             ]
             date_approved = max(accepted) if accepted else None
             reviews = self.reviewers_by_rev[rev["phid"]]
+            # (dateModified, id)-max with a NULL dateModified lowest
             last_review_id = (
-                max(reviews, key=lambda r: (r["dateModified"], r["id"]))["id"] if reviews else None
+                max(reviews, key=lambda r: (r["dateModified"] is not None, r["dateModified"] or 0, r["id"]))["id"]
+                if reviews else None
             )
             repo = self.repo_by_phid.get(rev["repositoryPHID"])
             details = json.loads(repo["details"]) if repo and repo["details"] else {}

@@ -26,21 +26,25 @@ from phabricator_etl_spark.sources import phab_fixtures
 NOW = 2_000_000_000  # after every fixture timestamp
 SF_SMOKE_DIR = "/root/testdata/sf0.001"
 
-# Jobs of one first load of the gate-size world; the same at 1, 4, 8, 16
-# and 32 cores. The graph jobs are those of the small-graph
-# connected-components path: its two LIMIT probes, which also run the edge
-# pipeline's query stages and fill the edge cache.
-JOB_BUDGET = 77
+# Jobs of one first load of the gate-size world; the same at 1, 4, 8 and
+# 16 cores. The revisions branch reduces its four phid-keyed rollups in one
+# aggregate, with stack sizes counted straight from the component labels,
+# and review_groups shares one exchange between its dedup and its collect.
+# The graph jobs are those of the small-graph connected-components path:
+# its two LIMIT probes, which also run the edge pipeline's query stages and
+# fill the edge cache.
+JOB_BUDGET = 69
 GRAPH_JOB_BUDGET = 8
 
 # Jobs of one count() of each sentinel query at sf0.001: the most seen at
 # 1, 4, 8 and 16 cores, each count repeating over 10 runs (1 core runs
-# 3/7/16/8/4). phab_revisions is counted with the fixture world already
-# landed, as bench.py warms it.
+# 3/7/11/8/4; phab_revisions runs 11 at every core count, 8 of them the
+# connected-components pass). phab_revisions is counted with the fixture
+# world already landed, as bench.py warms it.
 QUERY_JOB_BUDGETS = {
     "q1_pricing_summary": 4,
     "q3_shipping_priority": 7,
-    "phab_revisions": 16,
+    "phab_revisions": 11,
     "dedup_minhash_lsh": 10,
     "ann_topk_vectorized": 7,
 }

@@ -9,19 +9,24 @@ components replacement (property-checked per §4.3).
 
 from __future__ import annotations
 
+import os
 from dataclasses import fields
 
 import pytest
 
 from phabricator_etl_spark.plans import phab_pipelines as P
 from phabricator_etl_spark.sources import phab_fixtures
+from phabricator_etl_spark.sources.phab_fixtures import BUG_FIELD_INDEX, SCHEMAS, PhabSources
 
 from phab_oracle import Oracle
 
 
 @pytest.fixture(scope="module")
-def world(spark):
-    src = phab_fixtures.generate(spark, seed=7)
+def world(spark, tmp_path_factory):
+    """The gate world read from parquet, as production reads stored tables:
+    in-memory sources never plan broadcasts, so they would skip the join
+    and exchange shapes the pipelines are planned for."""
+    src = phab_fixtures.land(spark, str(tmp_path_factory.mktemp("phab_world")), seed=7)
     return src, Oracle(_rows(src)), P.build_all(src)
 
 
@@ -100,3 +105,54 @@ def test_stack_size_property_alt_seed(spark):
         assert got[rev["phid"]] == want, (
             f"stack_size({rev['phid']}): spark={got[rev['phid']]} bfs-oracle={want}"
         )
+
+
+def _edge_world(spark, root):
+    """A hand-built world of the rollup edge cases, written as parquet:
+    duplicate membership edges, a user with two primary emails, unresolved
+    members and tags, a revision with no reviewer/tag/bug/stack rows, NULL
+    and tied reviewer dateModified, an empty bug id and a cross-bug edge."""
+    u1, u2, u3 = "PHID-USER-1", "PHID-USER-2", "PHID-USER-3"
+    p1, p2, p3, p4 = "PHID-PROJ-1", "PHID-PROJ-2", "PHID-PROJ-3", "PHID-PROJ-4"
+    r = {i: f"PHID-DREV-{i}" for i in range(1, 6)}
+    repo = "PHID-REPO-1"
+    rows = {
+        "user": [(u1, "alice"), (u2, "bob"), (u3, "carol")],
+        "user_email": [(u1, "a@x", 1), (u2, "b0@x", 0), (u2, "b1@x", 1), (u2, "b2@x", 1)],
+        "project": [(1, p1, "devs", "devs"), (2, p2, "bmo-hidden", "bmo"), (3, p3, "empty", "empty"),
+                    (4, p4, "infra", "infra")],
+        "project_edge": [(p1, 13, u1), (p1, 13, u1), (p1, 13, u2), (p1, 13, "PHID-USER-ghost"),
+                         (p4, 13, u3), (p4, 13, u3), (p2, 13, u3), (p1, 99, u3)],
+        "repository": [(repo, "repo", '{"default-branch": "main"}')],
+        "repository_uri": [(repo, "https://hg.example.com/b"), (repo, "https://hg.example.com/a")],
+        "revision": [(i, r[i], "accepted", 10 * i, 10 * i + 5, repo if i != 3 else None) for i in r],
+        "diff": [(1, "PHID-DIFF-1", 1, "commit", u1, 50), (2, "PHID-DIFF-2", 2, "commit", u1, 60),
+                 (3, "PHID-DIFF-3", 4, "commit", u2, 70), (4, "PHID-DIFF-4", 1, "web", u1, 40)],
+        # r1: NULL-dated accepted review beside a dated one (NULL orders
+        # lowest); r2: two reviews tied on dateModified (higher id wins);
+        # r4: its only review is NULL-dated; r3, r5: none
+        "reviewer": [(10, r[1], u1, "accepted", 1, None, None, None),
+                     (11, r[1], u2, "accepted", 1, 100, "PHID-DIFF-4", None),
+                     (20, r[2], u1, "accepted", 1, 200, None, None),
+                     (21, r[2], p1, "rejected", 1, 200, None, None),
+                     (12, r[4], u2, "accepted", 1, None, None, None)],
+        "diff_edge": [(r[1], 41, p1), (r[1], 41, p4), (r[1], 41, p1), (r[2], 41, "PHID-PROJ-gone"),
+                      (r[1], 5, r[2]), (r[2], 6, r[1]), (r[4], 5, r[5]), (r[4], 5, r[1])],
+        "customfieldstorage": [(r[1], BUG_FIELD_INDEX, "B1"), (r[2], BUG_FIELD_INDEX, "B1"),
+                               (r[4], BUG_FIELD_INDEX, "B2"), (r[5], BUG_FIELD_INDEX, ""),
+                               (r[3], "otherField", "B1")],
+    }
+    frames = {}
+    for name, schema in SCHEMAS.items():
+        path = os.path.join(root, name)
+        spark.createDataFrame(rows.get(name, []), schema).write.parquet(path)
+        frames[name] = spark.read.schema(schema).parquet(path)
+    return PhabSources(**frames)
+
+
+def test_rollup_edge_cases(spark, tmp_path):
+    src = _edge_world(spark, str(tmp_path))
+    oracle = Oracle(_rows(src))
+    users, projects, repos = P.dim_users(src), P.dim_projects(src), P.dim_repositories(src)
+    _compare(P.build_revisions(src, repos, projects), oracle.revisions(), "revisions")
+    _compare(P.build_review_groups(src, users), oracle.review_groups(), "review_groups")

@@ -208,3 +208,37 @@ def test_basket_cap_bounds_hot_basket_fanout(spark, skew_dir):
     expected = {tuple(r) for r in con.execute(BASKET_PAIRS_ORACLE).fetchall()}
     got = {tuple(r) for r in basket_frequent_pairs(spark, skew_dir).collect()}
     assert got == expected
+
+
+def test_basket_cap_counts_a_null_item(spark, tmp_path):
+    """A NULL item counts toward the basket cap as the oracle's DISTINCT
+    (basket, item) rows count it: 256 items plus a NULL exceed
+    MAX_BASKET_ITEMS, 255 plus a NULL do not. Pair (1, 2) has support 4
+    with the first basket dropped and 5 if it were kept."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from phabricator_etl_spark.plans.association import (
+        BASKET_PAIRS_ORACLE,
+        MAX_BASKET_ITEMS,
+        basket_frequent_pairs,
+    )
+
+    baskets = {
+        1: [*range(1, MAX_BASKET_ITEMS + 1), None],  # 257 distinct: over the cap
+        6: [*range(1, MAX_BASKET_ITEMS), None],  # 256 distinct: at the cap
+        2: [1, 2], 3: [1, 2, 2], 4: [2, 1],
+        5: [None],
+    }
+    rows = [(b, i) for b, items in baskets.items() for i in items]
+    li = pa.table({"l_orderkey": [b for b, _ in rows], "l_partkey": [i for _, i in rows]},
+                  schema=pa.schema([("l_orderkey", pa.int64()), ("l_partkey", pa.int64())]))
+    pq.write_table(li, str(tmp_path / "lineitem.parquet"))
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW lineitem AS SELECT * FROM '{tmp_path / 'lineitem.parquet'}'")
+    expected = {tuple(r) for r in con.execute(BASKET_PAIRS_ORACLE).fetchall()}
+    got = {tuple(r) for r in basket_frequent_pairs(spark, str(tmp_path)).collect()}
+    assert (1, 2) in {(a, b) for a, b, _, _ in expected}
+    assert got == expected
