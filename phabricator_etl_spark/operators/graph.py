@@ -17,12 +17,15 @@ localCheckpoint()s to cut lineage (SURVEY.md §4.2) — without it the plan tree
 doubles per iteration and the driver OOMs on plan size long before data size
 is a problem.
 
-At 100 TB: the edge list shuffles on src/dst each iteration; pre-partitioning
-edges by src (and caching) keeps one side shuffle-free. Skewed hub vertices
-are handled by AQE skew-join splitting.
+At 100 TB: the edge list shuffles on its join key each iteration (a
+localCheckpoint keeps no hash partitioning on Spark 4.1, so pre-partitioning
+the checkpointed edges saves nothing). Skewed hub vertices are handled by AQE
+skew-join splitting.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -63,12 +66,12 @@ def _local_components(vertices: DataFrame, epd, vpd) -> DataFrame:
     result back as a (tiny) local relation. Exact same contract as the
     distributed path (min-id labeling), asserted equal in tests.
 
-    ``epd``/``vpd``: the pandas edge and vertex frames from the caller's
-    ``collect_if_small`` probes, which double as the transfer: the local
-    path is two collects and never collects an unprobed side. In the
-    gate-size first load those two collects run 7 + 1 Spark jobs, because
-    the edge probe also runs the edge pipeline's query stages (see
-    GRAPH_JOB_BUDGET in tests/test_etl_job_budget.py). Arrow both ways.
+    ``epd``/``vpd``: the pandas edge and vertex frames of the caller's
+    ``probe_graph``, which doubles as the transfer: the local path is one
+    collect. In the gate-size first load that collect runs 5 Spark jobs:
+    the edge and vertex pipelines' query stages run inside it, and no cache
+    is filled (see GRAPH_JOB_BUDGET in tests/test_etl_job_budget.py).
+    Arrow both ways.
     """
     import pandas as pd
 
@@ -84,8 +87,6 @@ def _local_components(vertices: DataFrame, epd, vpd) -> DataFrame:
         return root
 
     for a, b in zip(epd["src"].tolist(), epd["dst"].tolist()):
-        if a is None or b is None:
-            continue
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
@@ -117,6 +118,58 @@ def collect_if_small(df: DataFrame, limit: int):
     return pdf if len(pdf) <= limit else None
 
 
+class GraphProbe(NamedTuple):
+    """What ``probe_graph`` learned. ``edges`` (src, dst) and ``vertices``
+    (id) hold every row of their side, or are None when the probe was
+    truncated; ``local`` says both sides are within their cutovers."""
+
+    edges: object
+    vertices: object
+    local: bool
+
+
+def graph_rows(vertices: DataFrame, edges: DataFrame) -> DataFrame:
+    """A graph as ONE frame of (tag, a, b) rows: a vertex row (tag 0) per
+    ``id``, with a = b = id, and an edge row (tag 1) per non-null edge, with
+    a = ``src`` and b = ``dst`` cast to the vertex id type.
+
+    It is what ``probe_graph`` collects and what the distributed paths lay
+    out after a probe that is not local: both sides' pipelines run in one
+    query and share its exchanges. A vertex row carries its id twice, so no
+    column holds a NULL: a nullable long would arrive as float64 + NaN in
+    pandas and poison the id comparisons, which is also why null edge
+    endpoints are dropped Spark-side.
+    """
+    id_type = vertices.schema["id"].dataType
+    v = vertices.select(F.lit(0).alias("tag"), F.col("id").alias("a"), F.col("id").alias("b"))
+    e = edges.select(
+        F.lit(1).alias("tag"), F.col("src").cast(id_type).alias("a"), F.col("dst").cast(id_type).alias("b")
+    ).filter(F.col("a").isNotNull() & F.col("b").isNotNull())
+    return v.unionByName(e)
+
+
+def probe_graph(vertices: DataFrame, edges: DataFrame) -> GraphProbe:
+    """One size probe for both sides of a graph: the cutover of every
+    driver-side graph path (connected components, pointer jumping,
+    PageRank).
+
+    The graph's rows (``graph_rows``) go through ONE ``collect_if_small``
+    with limit LOCAL_EDGE_THRESHOLD + LOCAL_VERTEX_THRESHOLD. An untruncated
+    result holds every row, so each side is checked against its own cutover
+    exactly; a truncated one means at least one side is over its cutover,
+    which is the same decision as probing the sides one by one. Either way
+    a probe that is not local falls through to the caller's distributed
+    path.
+    """
+    pdf = collect_if_small(graph_rows(vertices, edges), LOCAL_EDGE_THRESHOLD + LOCAL_VERTEX_THRESHOLD)
+    if pdf is None:
+        return GraphProbe(None, None, False)
+    is_edge = pdf["tag"] == 1
+    epd = pdf.loc[is_edge, ["a", "b"]].rename(columns={"a": "src", "b": "dst"})
+    vpd = pdf.loc[~is_edge, ["a"]].rename(columns={"a": "id"})
+    return GraphProbe(epd, vpd, len(epd) <= LOCAL_EDGE_THRESHOLD and len(vpd) <= LOCAL_VERTEX_THRESHOLD)
+
+
 def connected_components(
     vertices: DataFrame,
     edges: DataFrame,
@@ -127,7 +180,8 @@ def connected_components(
 
     Parameters
     ----------
-    vertices: DataFrame with one column ``id`` (any orderable/comparable type).
+    vertices: DataFrame with a column ``id`` (any orderable/comparable
+        type); other columns are ignored.
     edges: DataFrame with columns ``src``, ``dst`` (same type as ``id``).
         Treated as undirected; self-loops and duplicates are fine.
         Graphs within LOCAL_EDGE_THRESHOLD edges and LOCAL_VERTEX_THRESHOLD
@@ -136,62 +190,45 @@ def connected_components(
     Returns DataFrame(id, component) where ``component`` is the min vertex id
     of the component.
     """
-    # Size the iteration's partitioning to the graph: a fixed 32-partition
-    # layout on a small graph means every round pays 32x task overhead.
-    # Pre-hash-partition edges by join side and labels by id so each round's
-    # equi-join reuses the layout instead of exchanging both sides again.
-    # Persist the edge list before the first action: the size probe, the
-    # local-path collect, and the symmetrize union (which reads edges TWICE)
-    # would otherwise each re-execute the upstream plan — often a multi-join
-    # pipeline far more expensive than the edge list itself. MEMORY_AND_DISK
-    # (the default) spills rather than OOMs at scale — the GraphX pattern.
-    edges = edges.persist()
-    # Null endpoints are dropped Spark-side — a nullable long would arrive
-    # as float64 + NaN in pandas and poison the id comparisons.
-    epd = collect_if_small(
-        edges.select("src", "dst").filter(F.col("src").isNotNull() & F.col("dst").isNotNull()),
-        LOCAL_EDGE_THRESHOLD,
-    )
-    if epd is not None:
-        # Edge side subcritical — now probe the VERTEX side the same way
-        # before shipping it to the driver (r6 verdict #2): a sparse edge
-        # set says nothing about vertex count, and the union-find dict is
-        # O(|V|) driver memory. Supercritical vertices fall through to the
-        # distributed fixpoint below.
-        vpd = collect_if_small(vertices.select("id"), LOCAL_VERTEX_THRESHOLD)
-        if vpd is not None:
-            try:
-                return _local_components(vertices, epd, vpd)
-            finally:
-                edges.unpersist()
-    n_edges = edges.count()
-    spark = edges.sparkSession
-    default_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    parts = max(2, min(default_parts, (2 * n_edges) // 100_000 + 2))
-
-    # Symmetrize once: each undirected edge appears in both directions, so one
-    # equi-join per iteration covers both traversal directions (the
+    probe = probe_graph(vertices, edges)
+    if probe.local:
+        return _local_components(vertices, probe.edges, probe.vertices)
+    # Symmetrize once: each undirected edge appears in both directions, so
+    # one equi-join per iteration covers both traversal directions (the
     # reference's `or_(src IN frontier, dst IN frontier)`, stats.py:327-331).
     # Duplicates and self-loops are NOT removed — min-propagation is
-    # idempotent over them, and the dropDuplicates shuffle costs more than the
-    # marginal groupBy work they add. One shuffle (the repartition) + one
-    # materialization covers symmetrize + layout.
-    sym = (
-        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .unionByName(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .repartition(parts, "b")
-        .localCheckpoint(eager=True)
-    )
-    edges.unpersist()
-
+    # idempotent over them, and the dropDuplicates shuffle costs more than
+    # the marginal groupBy work they add.
+    #
+    # Both states are read from ONE cache of the graph's rows, which the
+    # first labels checkpoint fills: after the probe, the input pipelines
+    # run once more, in one query that shares their exchanges, and the
+    # label and edge checkpoints carry the cache's measured size, so the
+    # rounds plan broadcasts where they fit. Neither state is pre-
+    # partitioned: a localCheckpoint does not keep its plan's hash
+    # partitioning (Spark 4.1), so each round's join exchanges both sides
+    # whatever layout they were written in. MEMORY_AND_DISK (the default)
+    # spills rather than OOMs at scale — the GraphX pattern.
+    rows = graph_rows(vertices, edges).persist()
     # Rolling checkpoint: each round's labels checkpoint makes the previous
     # round's blocks garbage; the chain frees them (15M-row blocks per round
     # at sf10 — leaving them measured as 52 s -> 161 s GC degradation).
     chain = CheckpointChain()
     labels = chain.step(
-        vertices.select(F.col("id"), F.col("id").alias("component")).repartition(parts, "id")
+        rows.filter(F.col("tag") == 0).select(F.col("a").alias("id"), F.col("a").alias("component"))
     )
+    e = rows.filter(F.col("tag") == 1)
+    # The rows hold no NULL endpoint; the not-null filter is restated so
+    # the checkpoint's constraints carry it. Without it each round infers
+    # it once per reference to the hop (the ptr self-join infers more), and
+    # the two scans of sym no longer share one exchange.
+    sym = (
+        e.select("a", "b")
+        .unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
+        .localCheckpoint(eager=True)
+    )
+    rows.unpersist()
 
     # Convergence detection: labels are elementwise NON-INCREASING (every
     # update takes a min), so for numeric ids the global sum(component)
@@ -247,7 +284,7 @@ def connected_components(
             if changed == 0:
                 break
 
-    # the edge layout dies with the loop; the final labels checkpoint (the
+    # the symmetrized edges die with the loop; the final labels checkpoint (the
     # return value) stays live — the chain never frees its last two states
     free(sym)
     return labels

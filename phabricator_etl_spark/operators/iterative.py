@@ -6,7 +6,7 @@ graph workload needs — hop distance over in-forests by pointer jumping,
 power iteration (PageRank) and k-core peeling — using the same pattern:
 per-round equi-joins, localCheckpoint to cut lineage (ckpt.py), convergence
 by cheap aggregate, and below graph.LOCAL_EDGE_THRESHOLD a driver-side path
-behind the same size probe as connected components (graph.collect_if_small).
+behind the same size probe as connected components (graph.probe_graph).
 """
 
 from __future__ import annotations
@@ -43,9 +43,9 @@ def _local_pointer_distances(seeds: DataFrame, epd, spd) -> DataFrame:
     cutover as graph._local_components (see LOCAL_EDGE_THRESHOLD's cost
     model there). Memoized root-walk: O(E) driver work, exact same output
     contract as the distributed path (asserted in tests). ``epd``/``spd``
-    are the caller's probe results (pandas edge frame dst/src, pandas seed
-    frame id) — both probes double as transfers, so no unprobed side is
-    ever collected."""
+    are the two sides of the caller's ``graph.probe_graph`` (pandas edge
+    frame src/dst, pandas seed frame id): the probe doubles as the
+    transfer."""
     import pandas as pd
 
     seed_ids = set(spd["id"].tolist())
@@ -96,38 +96,32 @@ def pointer_jump_distances(
     Only a forest rooted at the seeds is supported: there, the result is the
     BFS hop distance from the seed set.
     """
-    from .graph import LOCAL_EDGE_THRESHOLD, LOCAL_VERTEX_THRESHOLD, collect_if_small
+    from .graph import graph_rows, probe_graph
 
-    edges = edges.persist()
-    # The probe doubles as the Arrow transfer (see graph.collect_if_small);
-    # nulls dropped Spark-side to keep pandas dtypes integral.
-    epd = collect_if_small(
-        edges.select("dst", "src").filter(F.col("src").isNotNull() & F.col("dst").isNotNull()),
-        LOCAL_EDGE_THRESHOLD,
-    )
-    if epd is not None:
-        # Seed side gets its own probe (r6 verdict #2): a forest with few
-        # edges can still be seeded at millions of roots, and the driver
-        # set is O(|seeds|). Supercritical seeds -> distributed.
-        spd = collect_if_small(seeds.select("id"), LOCAL_VERTEX_THRESHOLD)
-        if spd is not None:
-            try:
-                return _local_pointer_distances(seeds, epd, spd)
-            finally:
-                edges.unpersist()
-    seeds = seeds.select("id").localCheckpoint(eager=True)
+    # One probe for both sides (graph.probe_graph), which doubles as the
+    # Arrow transfer: a forest with few edges can still be seeded at
+    # millions of roots, and the driver set is O(|seeds|).
+    probe = probe_graph(seeds.select("id"), edges)
+    if probe.local:
+        return _local_pointer_distances(seeds, probe.edges, probe.vertices)
+    # Seeds and edges are often built from one input (graph_bfs_distance's
+    # both come out of one window): their rows (graph.graph_rows) are cached
+    # together, so that input runs once more after the probe, and the seed
+    # set and the first pointers are both read from the cache.
+    rows = graph_rows(seeds.select("id"), edges).persist()
+    seeds = rows.filter(F.col("tag") == 0).select(F.col("a").alias("id")).localCheckpoint(eager=True)
     # Non-root vertices start pointing at their parent, one hop away.
     # Rolling two-generation checkpoint (see ckpt.py): frees each round's
     # dead ptr blocks instead of accumulating one n-row block set per round.
     chain = CheckpointChain()
     ptr = chain.step(
-        edges.select(
-            F.col("dst").alias("id"),
-            F.col("src").alias("anc"),
+        rows.filter(F.col("tag") == 1).select(
+            F.col("b").alias("id"),
+            F.col("a").alias("anc"),
             F.lit(1).cast("long").alias("distance"),
         )
     )
-    edges.unpersist()
+    rows.unpersist()
     # distance is elementwise non-decreasing and strictly increases somewhere
     # iff any pointer can still jump, so one scalar sum detects the fixpoint.
     prev_sum = ptr.agg(F.sum("distance")).collect()[0][0] or 0
@@ -200,9 +194,9 @@ def _local_pagerank(
     vertices: DataFrame, epd, iterations: int, vpd
 ) -> DataFrame:
     """Driver numpy power iteration for subcritical graphs (same cutover +
-    probe mechanics as graph._local_components; ``vpd`` is the caller's
-    vertex probe — no unprobed side is ever collected). Identical INTEGER
-    update rule to the distributed loop and the SQL oracle."""
+    probe as graph._local_components; ``epd``/``vpd`` are the two sides of
+    the caller's ``graph.probe_graph``). Identical INTEGER update rule to
+    the distributed loop and the SQL oracle."""
     import numpy as np
     import pandas as pd
 
@@ -246,18 +240,13 @@ def pagerank(
     (1.0 == PR_MICRO); damping is the exact rational PR_DAMP_NUM/PR_DAMP_DEN
     and every division floors, so the result is bit-identical across the
     numpy local path, this distributed loop, and the SQL oracle."""
-    from .graph import LOCAL_EDGE_THRESHOLD, LOCAL_VERTEX_THRESHOLD, collect_if_small
+    from .graph import probe_graph
 
-    epd = collect_if_small(
-        edges.select("src", "dst").filter(F.col("src").isNotNull() & F.col("dst").isNotNull()),
-        LOCAL_EDGE_THRESHOLD,
-    )
-    if epd is not None:
-        # Vertex side probed separately (r6 verdict #2): the rank vector is
-        # O(|V|) driver memory regardless of edge count.
-        vpd = collect_if_small(vertices.select("id"), LOCAL_VERTEX_THRESHOLD)
-        if vpd is not None:
-            return _local_pagerank(vertices, epd, iterations, vpd)
+    # One probe for both sides (graph.probe_graph): the rank vector is
+    # O(|V|) driver memory regardless of edge count.
+    probe = probe_graph(vertices, edges)
+    if probe.local:
+        return _local_pagerank(vertices, probe.edges, iterations, probe.vertices)
     n = vertices.count()
     base = PR_MICRO - PR_MICRO * PR_DAMP_NUM // PR_DAMP_DEN
     out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))

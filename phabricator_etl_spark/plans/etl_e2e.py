@@ -44,11 +44,12 @@ _TABLES = R.MERGE_KEYS
 def _summarize(out: dict[str, DataFrame]) -> DataFrame:
     """One pass: every table's (table_name, key, rec) rows are unioned and
     reduced by one groupBy. One zero-weight marker row per table keeps an
-    empty table's summary row (n_rows 0, key_sum NULL, and rec_sum NULL
-    for a recency table, 0 for one without, as a per-table aggregate gives)."""
+    empty table's summary row: n_rows 0, key_sum NULL and rec_sum 0, the
+    oracle's ``COALESCE(SUM(...), 0)`` (the marker's rec is 0, so it moves
+    no other sum)."""
     spark = next(iter(out.values())).sparkSession
     marker = spark.createDataFrame(
-        [(name, None, None if recency else 0, 0) for name, (_, recency) in sorted(_TABLES.items())],
+        [(name, None, 0, 0) for name in sorted(_TABLES)],
         "table_name string, key string, rec long, w int",
     )
     rows = marker

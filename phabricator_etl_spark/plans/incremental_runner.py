@@ -22,6 +22,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 from ..functions.phab import revision_year_month
 from ..sources.phab_fixtures import PhabSources
 from . import phab_pipelines as P
@@ -94,26 +95,34 @@ def expand_by_stack_component(
     its dependency stack (inherent to its per-revision protocol). This
     engine widens the changed set to every revision sharing a same-bug
     dependency component with a changed one, so stack_size is always
-    current and incremental == full recompute. The expansion is one join
-    against the CC labels already needed for stack_size — free at scale.
-    Pass `comp` to reuse an already-materialized component table (the
-    runner shares ONE CC pass between this expansion and the stack sizes)."""
+    current and incremental == full recompute.
+
+    One window does the widening, over narrow (phid, changed, component)
+    rows: a revision is hit when max(changed) over its component is 1; one
+    without a component is its own partition (``coalesce(component,
+    phid)``), hit only when it changed itself. The rows come from one
+    aggregate per phid over the changed phids (changed 1) and the labels
+    (changed 0), not from a revision ⋈ comp join: a join's size estimate
+    is the product of its sides, so the hits would never be broadcast
+    statically, and AQE would shuffle the revision table before turning
+    the semi-join into a broadcast (one wasted job, measured). The hits
+    are semi-joined back to the revision table. Pass `comp` to reuse an
+    already-materialized component table (the runner shares ONE CC pass
+    between this expansion and the stack sizes)."""
     if comp is None:
         comp = P.stack_components(src)
-    changed_phids = changed.revision.select(F.col("phid").alias("rev_phid"))
-    hot = (
-        comp.join(changed_phids, "rev_phid")
-        .select("component")
-        .distinct()
+    rows = (
+        changed.revision.select("phid", F.lit(1).alias("changed"))
+        .unionByName(
+            comp.select(F.col("rev_phid").alias("phid"), F.lit(0).alias("changed"), "component"),
+            allowMissingColumns=True,
+        )
+        .groupBy("phid")
+        .agg(F.max("changed").alias("changed"), F.max("component").alias("component"))
     )
-    expanded_phids = (
-        comp.join(hot, "component")
-        .select("rev_phid")
-        .unionByName(changed_phids)
-        .distinct()
-        .withColumnRenamed("rev_phid", "phid")
-    )
-    expanded = src.revision.join(expanded_phids, "phid")
+    hit = F.max("changed").over(Window.partitionBy(F.coalesce("component", "phid")))
+    hits = rows.select("phid", hit.alias("hit")).filter(F.col("hit") == 1)
+    expanded = src.revision.join(hits, "phid", "left_semi")
     return PhabSources(**{**src.__dict__, "revision": expanded})
 
 
@@ -193,8 +202,9 @@ def run_incremental(
     # Pin rule: pin a frame only when two or more branches read it and
     # rebuilding it needs its own shuffle or broadcast. Two frames qualify:
     # the expanded revision table (four branches; rebuilding re-runs the
-    # CC-label join + distinct) and dim_users (six branches; a user x
-    # user_email join). The project dim is a bare projection and the
+    # invalidation aggregate and window, two exchanges, and the hits'
+    # broadcast) and dim_users (six branches; the user and primary-email
+    # union aggregate). The project dim is a bare projection and the
     # repository dim feeds one branch, so both are built inline where read.
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_rev = pool.submit(world.revision.localCheckpoint, eager=True)

@@ -149,8 +149,14 @@ def build_comments(src: PhabSources, users: DataFrame) -> DataFrame:
         .select("revision_id", *c.columns)
     )
 
-    # a row can satisfy both arms for the same revision -> dedup on pair key
-    both = arm1.unionByName(arm2).dropDuplicates(["revision_id", "id"])
+    # A row can satisfy both arms for the same revision -> dedup on the pair
+    # key. The union is hash-partitioned by the comment id, which the pair
+    # dedup accepts as its own layout: as executed over the landed gate
+    # world (plans/r12/phab_comments_executed.txt) the dedup's partial and
+    # final aggregates share that one exchange, and the changeset and
+    # author broadcast joins after it keep the layout, so the runner's
+    # dedup_latest on comment_id needs no exchange of its own.
+    both = arm1.unionByName(arm2).repartition("id").dropDuplicates(["revision_id", "id"])
 
     # J8: comment -> changeset -> diff id (null-propagating)
     cs = src.changeset.select(F.col("id").alias("__cs_id"), F.col("diffID").alias("diff_id"))
@@ -302,26 +308,19 @@ def stack_components(src: PhabSources) -> DataFrame:
     endpoints — the global CC pass behind stack_size, exposed separately so
     the incremental runner can do graph-aware invalidation."""
     bug = _bug_ids(src).filter(F.col("bug_id").isNotNull())
-    # rb (revision -> bug) feeds BOTH edge endpoints and the vertex set;
-    # without the persist the JSON custom-field parse + join runs once for
-    # the edge probe and again for the vertex collect. Safe to unpersist
-    # immediately after: connected_components returns checkpointed (or
-    # driver-local) labels with no lineage back to rb on either path.
-    rb = (
-        src.revision.select(F.col("phid")).join(bug, src.revision.phid == bug.rev_phid).select(
-            F.col("phid"), F.col("bug_id")
-        )
-    ).persist()
-    try:
-        e = src.diff_edge.filter(F.col("type").isin(phab.DEPENDS_ON, phab.DEPENDED_ON))
-        sb = rb.withColumnsRenamed({"phid": "src", "bug_id": "src_bug"})
-        db = rb.withColumnsRenamed({"phid": "dst", "bug_id": "dst_bug"})
-        same_bug_edges = (
-            e.join(sb, "src").join(db, "dst").filter(F.col("src_bug") == F.col("dst_bug")).select("src", "dst")
-        )
-        comp = connected_components(rb.select(F.col("phid").alias("id")), same_bug_edges)
-    finally:
-        rb.unpersist()
+    # rb (revision -> bug) is the vertex set and feeds BOTH edge endpoints.
+    # It is not persisted: on the small-graph path connected_components
+    # reads it in one probe query, where exchange reuse shares the bug
+    # broadcast, and on the distributed path it caches the graph's rows,
+    # vertex and edge rows together, in one more query of that shape.
+    rb = src.revision.select(F.col("phid").alias("id")).join(bug, F.col("id") == bug.rev_phid).select("id", "bug_id")
+    e = src.diff_edge.filter(F.col("type").isin(phab.DEPENDS_ON, phab.DEPENDED_ON))
+    sb = rb.withColumnsRenamed({"id": "src", "bug_id": "src_bug"})
+    db = rb.withColumnsRenamed({"id": "dst", "bug_id": "dst_bug"})
+    same_bug_edges = (
+        e.join(sb, "src").join(db, "dst").filter(F.col("src_bug") == F.col("dst_bug")).select("src", "dst")
+    )
+    comp = connected_components(rb, same_bug_edges)
     return comp.select(F.col("id").alias("rev_phid"), "component")
 
 

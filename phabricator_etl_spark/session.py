@@ -106,6 +106,15 @@ def _initial_heap(mem: str) -> str:
         return mem  # no /proc (non-Linux): keep the old equal-to-Xmx behavior
 
 
+# Directories a file read lists on the driver before it hands the listing
+# to a Spark job (Spark's default: 32). Reading the ym-partitioned revisions
+# table back lists one directory per month of date_modified: 72 over the
+# perfbench world (seed 1), which at the default ran as one 72-task listing
+# job per read. A few hundred month directories list faster on the driver
+# than a job schedules.
+PARTITION_DISCOVERY_THRESHOLD = 256
+
+
 def get_spark(app_name: str = "phabricator-etl-spark", *, shuffle_partitions: int | None = None) -> SparkSession:
     cpus = default_parallelism()
     mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
@@ -131,6 +140,7 @@ def get_spark(app_name: str = "phabricator-etl-spark", *, shuffle_partitions: in
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.parquet.filterPushdown", "true")
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(PARTITION_DISCOVERY_THRESHOLD))
         .config("spark.driver.memory", mem)
         # Commit and pre-touch the whole heap at JVM start. Under this
         # microVM kernel, demand-growing the heap mid-query page-faults at

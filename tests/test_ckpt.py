@@ -74,11 +74,23 @@ def test_chain_keeps_exactly_two_generations(spark):
 def test_connected_components_no_block_accumulation(spark, monkeypatch):
     """The CC fixpoint must not leave per-round blocks behind: after the
     result is collected, at most the final two label generations (one of
-    them the result) hold blocks — nothing from sym or the edge cache."""
+    them the result) hold blocks — nothing from sym or the input caches."""
     from phabricator_etl_spark.operators import graph
 
-    monkeypatch.setattr(graph, "LOCAL_EDGE_THRESHOLD", 0)  # distributed path
+    # both cutovers at 0: the probe is truncated, so the distributed path
+    # caches the graph's rows
+    monkeypatch.setattr(graph, "LOCAL_EDGE_THRESHOLD", 0)
+    monkeypatch.setattr(graph, "LOCAL_VERTEX_THRESHOLD", 0)
     taken = _record_checkpoints(spark, monkeypatch)
+    cached: list[DataFrame] = []
+    cls = type(spark.range(0))
+    real_persist = cls.persist
+
+    def recording_persist(self, *args, **kwargs):
+        cached.append(real_persist(self, *args, **kwargs))
+        return cached[-1]
+
+    monkeypatch.setattr(cls, "persist", recording_persist)
     n = 3_000
     v = spark.range(n).select(F.col("id"))
     # a path graph -> many pointer-jumping rounds
@@ -88,8 +100,9 @@ def test_connected_components_no_block_accumulation(spark, monkeypatch):
     assert len(taken) > 4, "expected sym + several label rounds"
     live = [df for df in taken if _blocks(spark, df) > 0]
     assert 1 <= len(live) <= 2 and _rdd_id(out) in {_rdd_id(df) for df in live}
-    assert _blocks(spark, taken[0]) == 0  # sym, the first checkpoint
-    assert not e.is_cached  # the edge persist is released too
+    assert _blocks(spark, taken[0]) == 0 and _blocks(spark, taken[1]) == 0  # first labels, sym
+    assert not e.is_cached and not v.is_cached  # the inputs are never cached
+    assert cached and not any(df.is_cached for df in cached)  # the rows cache is released
 
 
 def test_chain_rejects_foreign_thread(spark):

@@ -66,6 +66,87 @@ def test_isolated_vertices_and_self_loops(spark):
     assert got == {1: 1, 2: 2, 3: 3, 9: 3}
 
 
+def _oracle_labels(vertices, edges):
+    """Min-id labels by repeated relaxation to a fixpoint (None endpoints
+    are no edge)."""
+    label = {v: v for v in vertices}
+    changed = True
+    while changed:
+        changed = False
+        for a, b in edges:
+            if a is None or b is None:
+                continue
+            lo = min(label[a], label[b])
+            if label[a] != lo or label[b] != lo:
+                label[a] = label[b] = lo
+                changed = True
+    return label
+
+
+def _spy_paths(monkeypatch):
+    """Record which path each connected_components call takes and whether
+    its probe came back truncated."""
+    taken = []
+    local, probe = graph_mod._local_components, graph_mod.collect_if_small
+
+    def spy_local(*a, **k):
+        taken.append("local")
+        return local(*a, **k)
+
+    def spy_probe(*a, **k):
+        pdf = probe(*a, **k)
+        taken.append("truncated" if pdf is None else "whole")
+        return pdf
+
+    monkeypatch.setattr(graph_mod, "_local_components", spy_local)
+    monkeypatch.setattr(graph_mod, "collect_if_small", spy_probe)
+    return taken
+
+
+@pytest.mark.parametrize(
+    "edge_limit, vertex_limit, path",
+    [
+        (0, 0, ["whole", "local"]),  # E edges, V vertices: both at their cutover
+        (-1, 0, ["truncated"]),  # E = edge cutover + 1, V at its cutover
+        (0, -1, ["truncated"]),  # V = vertex cutover + 1, E at its cutover
+        (-1, 10, ["whole"]),  # E over by 1 within the combined limit
+        (10, -1, ["whole"]),  # V over by 1 within the combined limit
+        (-40, -40, ["truncated"]),  # both far over
+    ],
+)
+def test_probe_cutover_is_exact_per_side(spark, monkeypatch, edge_limit, vertex_limit, path):
+    """One probe collects both sides; each side is held to its own cutover
+    exactly, a probe that is not local (whole or truncated) falls through
+    to the one distributed path, and every path gives the oracle's labels.
+    NULL endpoints are no edge and do not count."""
+    vertices, edges = _random_graph(seed=41, n=80, m=50)
+    edges += [(None, 3), (5, None)]
+    vdf = spark.createDataFrame([(v,) for v in vertices], "id long")
+    edf = spark.createDataFrame(edges, "src long, dst long")
+    monkeypatch.setattr(graph_mod, "LOCAL_EDGE_THRESHOLD", 50 + edge_limit)
+    monkeypatch.setattr(graph_mod, "LOCAL_VERTEX_THRESHOLD", 80 + vertex_limit)
+    taken = _spy_paths(monkeypatch)
+    got = _labels(connected_components(vdf, edf))
+    assert taken == path
+    assert got == _oracle_labels(vertices, edges)
+
+
+@pytest.mark.parametrize("vertex_type, edge_type", [("int", "long"), ("long", "int")])
+@pytest.mark.parametrize("edge_limit", [None, 0])  # local path, distributed path
+def test_mixed_width_id_types(spark, monkeypatch, vertex_type, edge_type, edge_limit):
+    """Edge endpoints of another integer width than the vertex ids are cast
+    to the vertex id type for the probe; both paths give the oracle's
+    labels."""
+    vertices, edges = _random_graph(seed=53, n=60, m=40)
+    vdf = spark.createDataFrame([(v,) for v in vertices], f"id {vertex_type}")
+    edf = spark.createDataFrame(edges, f"src {edge_type}, dst {edge_type}")
+    if edge_limit is not None:
+        monkeypatch.setattr(graph_mod, "LOCAL_EDGE_THRESHOLD", edge_limit)
+    taken = _spy_paths(monkeypatch)
+    assert _labels(connected_components(vdf, edf)) == _oracle_labels(vertices, edges)
+    assert ("local" in taken) == (edge_limit is None)
+
+
 def test_pointer_jump_paths_agree(spark, monkeypatch):
     """Local memoized root-walk == distributed Wyllie ranking, on a forest
     of chains of mixed length (including an unreachable chain whose root is
