@@ -250,20 +250,7 @@ def pagerank(
     n = vertices.count()
     base = PR_MICRO - PR_MICRO * PR_DAMP_NUM // PR_DAMP_DEN
     out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    spark = edges.sparkSession
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    # Pin the (static) edge table's partitioning to src ONCE, before the
-    # checkpoint. When the deg join runs as SMJ its output is already
-    # src-partitioned and this repartition is a no-op cost-wise; but if
-    # Catalyst BROADCASTS out_deg (likely once AQE sees its true size) the
-    # join output inherits the scan's unknown partitioning, and every
-    # round's `e.src == ranks.id` join would then re-exchange the (larger,
-    # 2x-wide) edge table. localCheckpoint preserves outputPartitioning, so
-    # pinning here makes "only the ranks side shuffles per iteration" an
-    # invariant instead of an accident of join strategy. A/B at sf0.1/sf1:
-    # neutral on local[32] (in-memory shuffle); the guard targets real
-    # clusters where a per-iteration edge exchange is network traffic.
-    e = edges.join(out_deg, "src").repartition(parts, "src").localCheckpoint(eager=True)
+    e = edges.join(out_deg, "src").localCheckpoint(eager=True)
     # The dangling-vertex SET is static across iterations; precompute it once
     # so each round only sums ranks over it.
     dangling_ids = (

@@ -4,9 +4,20 @@ process() in the reference (stats.py:1094-1164) per run: read the
 destination's MAX(date_modified) watermark -> filter sources to changed
 revisions -> build rows -> stage -> monthly MERGE with recency-winner dedup.
 This module is the Spark-native runner: same watermark semantics, the merge
-as the deterministic join-rewrite, the month unit as a ym partition column,
-crash-safety from write atomicity instead of staging tables (S3/S6/S7
-disappear — Delta MERGE INTO is the drop-in upgrade where available).
+as the deterministic join-rewrite, the month unit as a ym partition column.
+
+A run commits all eight tables or none (the smallest form of Delta Lake's
+log-then-pointer commit, Armbrust et al., VLDB 2020):
+- stage: every table, merged or snapshot, first load or not, is written to
+  ``<table>__stage`` while the committed ``<table>`` stays readable;
+- mark: once every stage is complete, ``<dest>/_COMMIT`` is created;
+- swap: ``_commit`` replaces each table with its stage, then deletes the
+  marker.
+The next run calls ``_commit`` before it reads the watermark: a marker
+means a killed swap, which it finishes; stages without one are partial
+output, which it drops. So a table directory only ever holds a complete,
+committed table, the watermark moves only with all eight tables, and a
+committed table that cannot be read fails the run.
 
 The invariant tests/test_incremental_runner.py checks is the one that
 matters: incremental run over (old ∪ new) == full recompute over the same
@@ -22,6 +33,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 from ..functions.phab import revision_year_month
 from ..sources.phab_fixtures import PhabSources
@@ -41,6 +53,8 @@ MERGE_KEYS = {  # merge key + recency column per table (stats.py:976-984)
 # snapshot tables are fully recomputed every run (stats.py:1125-1138)
 SNAPSHOT_TABLES = {"review_groups", "project_transactions"}
 
+COMMIT_MARKER = "_COMMIT"  # present only while the staged tables are being swapped in
+
 
 def _hadoop_fs(spark: SparkSession, path: str):
     """The Hadoop FileSystem holding ``path`` (file://, hdfs://, s3a://
@@ -49,28 +63,35 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return jvm_path(path).getFileSystem(spark._jsc.hadoopConfiguration()), jvm_path
 
 
-def _dest_exists(spark: SparkSession, path: str) -> bool:
-    """Cluster-correct existence probe via the Hadoop FS API. Probing with a
-    failing ``spark.read.parquet`` instead would store a PATH_NOT_FOUND
-    analysis error that Spark 4's ObservationManager listener re-raises
-    into the log on every first run (ERROR ExecutionListenerBus) — probe
-    the filesystem, not the analyzer."""
-    fs, jvm_path = _hadoop_fs(spark, path)
-    return bool(fs.exists(jvm_path(path)))
+def _commit(spark: SparkSession, dest_dir: str) -> None:
+    """Swap every staged table into place if ``_COMMIT`` marks the stages
+    complete, else drop them; then delete the marker. Each step is safe to
+    repeat, so a run killed anywhere in here is finished by the next."""
+    fs, jvm_path = _hadoop_fs(spark, dest_dir)
+    marker = jvm_path(os.path.join(dest_dir, COMMIT_MARKER))
+    committed = fs.exists(marker)
+    for name in MERGE_KEYS:
+        path, stage = (jvm_path(os.path.join(dest_dir, t)) for t in (name, name + "__stage"))
+        if not committed:
+            fs.delete(stage, True)
+        elif fs.exists(stage):
+            fs.delete(path, True)
+            if not fs.rename(stage, path):
+                raise IOError(f"rename {stage} -> {path} failed")
+    if committed:
+        fs.delete(marker, False)
 
 
 def read_watermark(spark: SparkSession, dest_dir: str) -> int | None:
     """S2: MAX(date_modified) of the loaded revisions table; None on first
-    run (destination absent/empty)."""
+    run. The probe goes through the Hadoop FS API: a failing
+    ``spark.read.parquet`` would log Spark 4's stored PATH_NOT_FOUND error
+    (ERROR ExecutionListenerBus) on every first run."""
     path = os.path.join(dest_dir, "revisions")
-    if not _dest_exists(spark, path):
+    fs, jvm_path = _hadoop_fs(spark, path)
+    if not fs.exists(jvm_path(path)):
         return None
-    try:
-        df = spark.read.parquet(path)
-    except Exception:
-        return None
-    row = df.agg(F.max("date_modified").alias("wm")).collect()[0]
-    return row.wm
+    return spark.read.parquet(path).agg(F.max("date_modified").alias("wm")).collect()[0].wm
 
 
 def filter_changed_revisions(src: PhabSources, last_run: int | None, now: int) -> PhabSources:
@@ -85,9 +106,7 @@ def filter_changed_revisions(src: PhabSources, last_run: int | None, now: int) -
     return PhabSources(**{**src.__dict__, "revision": filtered})
 
 
-def expand_by_stack_component(
-    src: PhabSources, changed: PhabSources, comp: DataFrame | None = None
-) -> PhabSources:
+def expand_by_stack_component(src: PhabSources, changed: PhabSources, comp: DataFrame) -> PhabSources:
     """Graph-aware invalidation — a deliberate IMPROVEMENT on the reference.
 
     The reference recomputes stack_size only for CHANGED revisions, so an
@@ -106,11 +125,8 @@ def expand_by_stack_component(
     is the product of its sides, so the hits would never be broadcast
     statically, and AQE would shuffle the revision table before turning
     the semi-join into a broadcast (one wasted job, measured). The hits
-    are semi-joined back to the revision table. Pass `comp` to reuse an
-    already-materialized component table (the runner shares ONE CC pass
-    between this expansion and the stack sizes)."""
-    if comp is None:
-        comp = P.stack_components(src)
+    are semi-joined back to the revision table. `comp` is the component
+    table of ``P.stack_components(src)``."""
     rows = (
         changed.revision.select("phid", F.lit(1).alias("changed"))
         .unionByName(
@@ -157,12 +173,10 @@ def dedup_latest(df: DataFrame, key: str, recency: str | None) -> DataFrame:
     return win.select(key, *[F.col(f"__w.{c}").alias(c) for c in ordered]).select(*df.columns)
 
 
-def merge_upsert(target: DataFrame | None, staging: DataFrame, key: str) -> DataFrame:
+def merge_upsert(target: DataFrame, staging: DataFrame, key: str) -> DataFrame:
     """S5 join-rewrite: matched -> replaced by staging, unmatched target
     kept, new staging keys inserted. Delta MERGE INTO compiles to the same
     plan for whole-row updates."""
-    if target is None:
-        return staging
     return target.join(staging.select(key), key, "left_anti").unionByName(staging)
 
 
@@ -170,7 +184,7 @@ def merge_upsert(target: DataFrame | None, staging: DataFrame, key: str) -> Data
 # (r6 verdict #7: the e2e bench entry moved +30% r5->r6 and the phases were
 # not separable from the one total). benchutil.measure_cell clears it before
 # every rep and returns the best rep's copy, which bench.py writes to
-# BENCH_DETAIL.json as phase_timings of the etl_e2e_* cells; it costs five
+# BENCH_DETAIL.json as phase_timings of the etl_e2e_* cells; it costs 22
 # perf_counter() reads per run, nothing more. The branch_* keys are wall
 # time INSIDE the concurrent merge pool, so they overlap each other and sum
 # to more than merge_write_wall.
@@ -189,6 +203,7 @@ def run_incremental(
     revisions ym-partitioned per SURVEY §4.4)."""
     phases: dict[str, float] = {}
     t_phase = time.perf_counter()
+    _commit(spark, dest_dir)  # finish or drop what a killed run left
     last_run = None if full else read_watermark(spark, dest_dir)
     world = filter_changed_revisions(src, last_run, now)
     # ONE CC pass feeds both the graph-aware invalidation and the stack sizes.
@@ -232,61 +247,26 @@ def run_incremental(
         "project_transactions": P.build_project_transactions(src, users, projects),
     }
 
-    def _merge_and_write(name: str, df: DataFrame) -> DataFrame:
+    def _stage(name: str, df: DataFrame) -> StructType:
         t_branch = time.perf_counter()
         key, recency = MERGE_KEYS[name]
-        staging = dedup_latest(df, key, recency)
-        path, stage = os.path.join(dest_dir, name), os.path.join(dest_dir, name + "__stage")
+        merged = dedup_latest(df, key, recency)
+        path = os.path.join(dest_dir, name)
         fs, jvm_path = _hadoop_fs(spark, path)
-        if fs.exists(jvm_path(stage)):
-            # A killed run left its swap (below) unfinished. The stage is
-            # fully written before the target is deleted, so with no target
-            # it is the complete new table: finish the rename. Next to a
-            # target it may be partial: drop it.
-            if fs.exists(jvm_path(path)):
-                fs.delete(jvm_path(stage), True)
-            elif not fs.rename(jvm_path(stage), jvm_path(path)):
-                raise IOError(f"rename {stage} -> {path} failed")
-        target = None
         if name not in SNAPSHOT_TABLES and fs.exists(jvm_path(path)):
             # the stored revisions table carries its ym partition column;
             # strip it so target and staging schemas line up for the merge
-            try:
-                target = spark.read.parquet(path).drop("ym")
-            except Exception:
-                # the path exists but holds no readable parquet (e.g. a
-                # killed previous run left an empty/partial dir): treat
-                # as first run rather than failing the whole batch. The
-                # failed read does leave one ExecutionListenerBus log
-                # line (the Spark 4 ObservationManager gotcha) — fine
-                # for this corruption-recovery arm, which the happy path
-                # never enters thanks to the FS-API probe above.
-                target = None
-        merged = staging if target is None else merge_upsert(target, staging, key)
+            merged = merge_upsert(spark.read.parquet(path).drop("ym"), merged, key)
         if name == "revisions":
             merged = merged.withColumn("ym", revision_year_month(F.col("date_modified")))
-        # r10 optimization (guide §2.4/§5): the old path localCheckpointed
-        # `merged` before every write — a full extra materialization of every
-        # table on every run — because the merge plan may READ the very path
-        # it overwrites. Instead, write straight to the destination when
-        # nothing reads it (first run / snapshot overwrite), and otherwise
-        # write to a sibling tmp dir while the old files stay readable, then
-        # swap. One materialization either way, and the swap is MORE
-        # crash-safe than checkpoint+overwrite (the old table stays complete
-        # until the new one is fully written).
-        write_path = path if target is None else stage
+        # Never write the committed path: the merge plan reads it, and the
+        # commit swaps all eight stages in or none.
         writer = merged.write.mode("overwrite")
         if name == "revisions":
             writer = writer.partitionBy("ym")
-        writer.parquet(write_path)
-        if write_path != path:
-            fs.delete(jvm_path(path), True)
-            if not fs.rename(jvm_path(stage), jvm_path(path)):
-                raise IOError(f"rename {stage} -> {path} failed")
+        writer.parquet(path + "__stage")
         phases[f"branch_{name}"] = round(time.perf_counter() - t_branch, 3)
-        # read back with the schema just written: inferring it would run
-        # one more job per table to re-read the footers
-        return spark.read.schema(merged.schema).parquet(path)
+        return merged.schema
 
     # The eight table branches are independent (distinct dest paths, shared
     # inputs all read-only) — submit them as CONCURRENT Spark jobs from a
@@ -296,8 +276,14 @@ def run_incremental(
     # (SparkSession job submission is thread-safe; FIFO scheduling lets
     # later jobs use idle slots).
     with ThreadPoolExecutor(max_workers=len(built)) as pool:
-        futures = {name: pool.submit(_merge_and_write, name, df) for name, df in built.items()}
-        out = {name: fut.result() for name, fut in futures.items()}
+        futures = {name: pool.submit(_stage, name, df) for name, df in built.items()}
+        schemas = {name: fut.result() for name, fut in futures.items()}
+    fs, jvm_path = _hadoop_fs(spark, dest_dir)
+    fs.create(jvm_path(os.path.join(dest_dir, COMMIT_MARKER)), True).close()
+    _commit(spark, dest_dir)
+    # read back with the schema just written: inferring it would run one
+    # more job per table to re-read the footers
+    out = {name: spark.read.schema(schema).parquet(os.path.join(dest_dir, name)) for name, schema in schemas.items()}
     phases["merge_write_wall"] = round(time.perf_counter() - t_phase, 3)
     phases["full" if full else "incremental"] = 1.0
     PHASE_LOG.append(phases)

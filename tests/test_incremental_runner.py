@@ -1,12 +1,16 @@
 """The incremental invariant the reference never tests: running the ETL in
 two incremental batches must produce exactly the tables a single full run
-produces — for the reference's own watermark/merge/snapshot semantics."""
+produces — for the reference's own watermark/merge/snapshot semantics, and
+after a run that died at any step of its commit."""
 
 from __future__ import annotations
 
+import os
+import shutil
 import tempfile
 
 import pytest
+from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
 from phabricator_etl_spark.plans import incremental_runner as R
@@ -66,52 +70,121 @@ def test_watermark_skips_unchanged(spark):
         )
 
 
-def test_corrupted_dest_falls_back_to_first_run(spark):
-    """A destination table dir that EXISTS but holds no readable parquet
-    (the footprint of a killed previous run) must be treated as a first run
-    (insert path), not fail the batch (r5 ADVICE: the _dest_exists probe
-    alone can't distinguish 'present' from 'present and readable')."""
-    import os
+class _Killed(Exception):
+    """The run dies here."""
 
+
+@pytest.fixture(scope="module")
+def crash_world(spark, tmp_path_factory):
+    """The median-split world, a destination holding its first run over the
+    early half, and the rows of a full recompute over the whole world."""
     full_src, early_src = _split_world(spark, seed=31)
-    with tempfile.TemporaryDirectory(prefix="corrupt_") as d1, tempfile.TemporaryDirectory(prefix="ref_") as d2:
-        # simulate the killed run: an existing dir with a garbage file
-        for name in ("diffs", "comments"):
-            os.makedirs(os.path.join(d1, name), exist_ok=True)
-            with open(os.path.join(d1, name, "part-junk"), "w") as f:
-                f.write("not parquet\n")
-        got = R.run_incremental(spark, full_src, d1, now=NOW)
-        ref = R.run_incremental(spark, full_src, d2, now=NOW, full=True)
-        for name in R.MERGE_KEYS:
-            assert _rows(got[name]) == _rows(ref[name]), (
-                f"{name}: recovery run over corrupted dest != clean full run"
-            )
+    early = str(tmp_path_factory.mktemp("early"))
+    R.run_incremental(spark, early_src, early, now=NOW)
+    ref = R.run_incremental(spark, full_src, str(tmp_path_factory.mktemp("ref")), now=NOW, full=True)
+    return full_src, early_src, early, {name: _rows(ref[name]) for name in R.MERGE_KEYS}
 
 
-def test_interrupted_swap_is_finished_or_dropped(spark):
-    """A run killed inside the stage-then-swap write leaves one of two
-    states; the next incremental run must still equal a full recompute.
-    Killed after deleting the target: only ``comments__stage`` exists, and
-    it is the complete table, so the run finishes the rename instead of
-    treating ``comments`` as a first load (which kept only the changed
-    subset). Killed while writing the stage: ``diffs__stage`` may be
-    partial next to an intact ``diffs``, so the run drops it."""
-    import os
-    import shutil
+def _assert_recovers(spark, crash_world, dest):
+    """The next incremental run over the whole world equals a full
+    recompute on every table and leaves no stage and no marker."""
+    full_src, _, _, ref = crash_world
+    got = R.run_incremental(spark, full_src, dest, now=NOW)
+    for name in R.MERGE_KEYS:
+        assert _rows(got[name]) == ref[name], f"{name}: run after the crash != full recompute"
+    assert sorted(os.listdir(dest)) == sorted(R.MERGE_KEYS)
 
-    full_src, early_src = _split_world(spark, seed=31)
-    with tempfile.TemporaryDirectory(prefix="swap_") as d1, tempfile.TemporaryDirectory(prefix="ref_") as d2:
-        R.run_incremental(spark, early_src, d1, now=NOW)
-        os.rename(os.path.join(d1, "comments"), os.path.join(d1, "comments__stage"))
-        partial = os.path.join(d1, "diffs__stage")
-        shutil.copytree(os.path.join(d1, "diffs"), partial)
-        for f in sorted(f for f in os.listdir(partial) if f.startswith("part-"))[1:]:
-            os.remove(os.path.join(partial, f))
-        with open(os.path.join(partial, "part-junk"), "w") as f:
-            f.write("not parquet\n")
 
-        got = R.run_incremental(spark, full_src, d1, now=NOW)
-        ref = R.run_incremental(spark, full_src, d2, now=NOW, full=True)
-        for name in R.MERGE_KEYS:
-            assert _rows(got[name]) == _rows(ref[name]), f"{name}: run after an interrupted swap != full recompute"
-        assert not [p for p in os.listdir(d1) if p.endswith("__stage")]
+def _table_files(dest):
+    """Size of every file of the committed tables."""
+    return {
+        os.path.relpath(os.path.join(root, f), dest): os.path.getsize(os.path.join(root, f))
+        for name in R.MERGE_KEYS
+        for root, _, files in os.walk(os.path.join(dest, name))
+        for f in files
+    }
+
+
+@pytest.mark.parametrize("first_load", [False, True], ids=["incremental", "first_load"])
+def test_failed_table_write_commits_no_table(spark, crash_world, tmp_path, monkeypatch, first_load):
+    """A run whose comments write fails must commit none of its tables: a
+    committed revisions table would move the watermark past the lost
+    comments, and no later run would load them."""
+    full_src, early_src, early, _ = crash_world
+    dest = str(tmp_path / "dest")
+    if not first_load:
+        shutil.copytree(early, dest)
+    write = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        if os.path.basename(path).startswith("comments"):
+            raise _Killed(path)
+        return write(self, path, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", parquet)
+        with pytest.raises(_Killed):
+            R.run_incremental(spark, early_src if first_load else full_src, dest, now=NOW)
+    _assert_recovers(spark, crash_world, dest)
+
+
+@pytest.mark.parametrize(
+    "op,name",
+    [
+        ("create", R.COMMIT_MARKER),
+        ("delete", "revisions"),
+        ("delete", "comments"),
+        ("rename", "comments__stage"),
+        ("delete", R.COMMIT_MARKER),
+    ],
+    ids=["before_marker", "0_of_8_swaps", "3_of_8_swaps", "between_delete_and_rename", "8_of_8_swaps"],
+)
+def test_killed_commit_is_finished_or_dropped(spark, crash_world, tmp_path, monkeypatch, op, name):
+    """A run killed anywhere in its commit, the Hadoop FS call ``op`` on
+    ``name`` never made: killed before the marker, the next run drops the
+    stages and loads the delta again; killed after it, the next run
+    finishes the swap (tables go in MERGE_KEYS order, comments fourth)."""
+    full_src, _, early, _ = crash_world
+    dest = str(tmp_path / "dest")
+    shutil.copytree(early, dest)
+    hadoop_fs = R._hadoop_fs
+
+    class KillAt:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, attr):
+            def call(path, *args):
+                if (attr, path.getName()) == (op, name):
+                    raise _Killed(f"{attr} {path}")
+                return getattr(self._fs, attr)(path, *args)
+
+            return call
+
+    def killing_fs(spark, path):
+        fs, jvm_path = hadoop_fs(spark, path)
+        return KillAt(fs), jvm_path
+
+    with monkeypatch.context() as m:
+        m.setattr(R, "_hadoop_fs", killing_fs)
+        with pytest.raises(_Killed):
+            R.run_incremental(spark, full_src, dest, now=NOW)
+    assert os.path.exists(os.path.join(dest, R.COMMIT_MARKER)) == (op != "create")
+    _assert_recovers(spark, crash_world, dest)
+
+
+def test_unreadable_committed_table_fails_the_run(spark, crash_world, tmp_path):
+    """A committed table that cannot be read fails the run loudly and
+    leaves every committed table as it was, instead of being taken for a
+    first load that keeps only the changed rows."""
+    full_src, _, early, _ = crash_world
+    dest = str(tmp_path / "dest")
+    shutil.copytree(early, dest)
+    comments = os.path.join(dest, "comments")
+    part = next(f for f in sorted(os.listdir(comments)) if f.startswith("part-"))
+    with open(os.path.join(comments, part), "w") as f:
+        f.write("not parquet\n")
+    before = _table_files(dest)
+    with pytest.raises(Exception, match="comments/part-"):
+        R.run_incremental(spark, full_src, dest, now=NOW)
+    assert _table_files(dest) == before
