@@ -218,33 +218,32 @@ def run_incremental(
     # rebuilding it needs its own shuffle or broadcast. Two frames qualify:
     # the expanded revision table (four branches; rebuilding re-runs the
     # invalidation aggregate and window, two exchanges, and the hits'
-    # broadcast) and dim_users (six branches; the user and primary-email
-    # union aggregate). The project dim is a bare projection and the
-    # repository dim feeds one branch, so both are built inline where read.
+    # broadcast) and dim_principals (six branches; the user, primary-email
+    # and project union aggregate). The repository dim feeds one branch, so
+    # it is built inline where read.
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_rev = pool.submit(world.revision.localCheckpoint, eager=True)
-        f_users = pool.submit(P.dim_users(world).localCheckpoint, eager=True)
-        revision, users = f_rev.result(), f_users.result()
+        f_principals = pool.submit(P.dim_principals(world).localCheckpoint, eager=True)
+        revision, principals = f_rev.result(), f_principals.result()
     world = PhabSources(**{**world.__dict__, "revision": revision})
-    projects, repos = P.dim_projects(world), P.dim_repositories(world)
     phases["expand_and_pin_dims"] = round(time.perf_counter() - t_phase, 3)
     t_phase = time.perf_counter()
     # stack sizes come from the FULL graph (the filtered world can't see
     # unchanged stack members — stats.py:1117-1119 queries all_revisions),
     # counted straight from the labels: no revision scan, no join
     built = {
-        "revisions": P.build_revisions(world, repos, projects, stacks=P.component_sizes(comp)),
-        "diffs": P.build_diffs(world, users),
+        "revisions": P.build_revisions(world, P.dim_repositories(world), stacks=P.component_sizes(comp)),
+        "diffs": P.build_diffs(world, principals),
         "changesets": P.build_changesets(world),
-        "comments": P.build_comments(world, users),
-        "review_requests": P.build_review_requests(world, users, projects),
-        "transactions": P.build_transactions(world, users, projects),
-        # snapshots run over the UNFILTERED world every time; the user and
-        # project dims are safe to share — they read only the
-        # user/user_email/project tables, which the changed-revision filter
-        # never touches (src and the expanded world agree on them)
-        "review_groups": P.build_review_groups(src, users),
-        "project_transactions": P.build_project_transactions(src, users, projects),
+        "comments": P.build_comments(world, principals),
+        "review_requests": P.build_review_requests(world, principals),
+        "transactions": P.build_transactions(world, principals),
+        # snapshots run over the UNFILTERED world every time; the principal
+        # dim is safe to share — it reads only the user/user_email/project
+        # tables, which the changed-revision filter never touches (src and
+        # the expanded world agree on them)
+        "review_groups": P.build_review_groups(src, principals),
+        "project_transactions": P.build_project_transactions(src, principals),
     }
 
     def _stage(name: str, df: DataFrame) -> StructType:

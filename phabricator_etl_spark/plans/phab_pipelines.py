@@ -13,16 +13,22 @@ deterministic winner (documented per site). Divergence is semantic-free for
 well-formed data and reproducible for malformed data — the better trade at
 100 TB.
 
-Scale notes: project/repository dimensions are broadcast (they are
-orders of magnitude smaller than the fact tables), and so is the user
-dimension, after one aggregate; every fact-side join is a single shuffle on
-its key. The revisions table, as executed over the landed gate world
-(plans/r12/phab_revisions_executed.txt): the bug, review, tag and stack-size
-rollups are one union, partial-aggregated before its one rev_phid exchange
-and joined to the revision scan once; date_landed is one aggregate on its
-revision-id exchange; the stack sizes add one exchange on the component
-label below the union. At that size AQE broadcasts both aggregates, so the
-revision scan is never shuffled. No Python UDFs anywhere (SURVEY.md §2.10).
+Scale notes: the dimensions are broadcast (they are orders of magnitude
+smaller than the fact tables), each after one union aggregate: the
+principal dimension (users, their primary emails and projects) and the
+repository dimension. Each is looked up once per key a branch resolves.
+Every fact-side join is a broadcast or a single shuffle on its key:
+comments, transactions and project_transactions hash-partition their rows
+by id once, and the pair dedup or the name regroup, and the runner's
+dedup_latest, reuse that exchange. The revisions table, as executed over
+the landed gate world (plans/r12/phab_revisions_executed.txt): the bug,
+review, tag and stack-size rollups are one union, partial-aggregated before
+its one rev_phid exchange and joined to the revision scan once; date_landed
+is one aggregate on its revision-id exchange; the stack sizes add one
+exchange on the component label below the union; the repository dimension
+is one union aggregate on its phid exchange. At that size AQE broadcasts
+the rollup and date_landed aggregates, so the revision scan is never
+shuffled. No Python UDFs anywhere (SURVEY.md §2.10).
 """
 
 from __future__ import annotations
@@ -40,52 +46,71 @@ from ..sources.phab_fixtures import BUG_FIELD_INDEX, PhabSources
 # Dimension layer (Phase 2): resolved users / projects / repositories.
 # ---------------------------------------------------------------------------
 
-def dim_users(src: PhabSources) -> DataFrame:
-    """user name + primary email per user phid (J10/J11). The reference's
-    user_name_cache (stats.py:360-371) and uncached get_user_email
-    (stats.py:388-397) both collapse into this one broadcast dimension.
-    The reference's `.one()` fails on a user with two primary emails; this
-    engine takes MIN(address) (SURVEY §7.9), so no user row fans out. User
-    and primary-email rows meet in one union aggregate, one exchange in
-    place of the join's broadcast; ``u`` keeps only phids with a user row."""
+def dim_principals(src: PhabSources) -> DataFrame:
+    """Every phid a user or project row names, with the user name and
+    primary email (J10/J11) and the project id, name and slug. The
+    reference's user_name_cache and project lookups (stats.py:360-371,
+    412-418) and its uncached get_user_email (stats.py:388-397) collapse
+    into this one broadcast dimension, so a reviewer phid that may be a
+    user or a project resolves in one lookup and ``is_project_reviewer``
+    picks the column. User, primary-email and project rows meet in one
+    union aggregate, one exchange. Determinism (SURVEY §7.9): the
+    reference's `.one()` fails on a user with two primary emails, this
+    engine takes MIN(address); a project phid listed twice resolves to one
+    row, the one with the max name. The email is NULL for a phid without a
+    user row, and a phid with only email rows is dropped."""
     users = src.user.select("phid", "userName", F.lit(1).alias("u"))
     primary = src.user_email.filter(F.col("isPrimary") == 1).select(F.col("userPHID").alias("phid"), "address")
+    projects = src.project.select("phid", F.struct("name", "id", "primarySlug").alias("p"))
     return (
         users.unionByName(primary, allowMissingColumns=True)
+        .unionByName(projects, allowMissingColumns=True)
         .groupBy("phid")
-        .agg(F.max("u").alias("u"), F.max("userName").alias("username"), F.min("address").alias("email"))
-        .filter(F.col("u").isNotNull())
-        .drop("u")
-    )
-
-
-def dim_projects(src: PhabSources) -> DataFrame:
-    return src.project.select(
-        F.col("id").alias("project_id"),
-        F.col("phid"),
-        F.col("name").alias("project_name"),
-        F.col("primarySlug").alias("slug"),
+        .agg(
+            F.max("u").alias("u"),
+            F.max("userName").alias("username"),
+            F.min("address").alias("email"),
+            F.max("p").alias("p"),
+        )
+        .filter(F.col("u").isNotNull() | F.col("p").isNotNull())
+        .select(
+            "phid",
+            "username",
+            F.when(F.col("u").isNotNull(), F.col("email")).alias("email"),
+            F.col("p.id").alias("project_id"),
+            F.col("p.name").alias("project_name"),
+            F.col("p.primarySlug").alias("slug"),
+        )
     )
 
 
 def dim_repositories(src: PhabSources) -> DataFrame:
     """repository name/default-branch/URI per phid (J12, F5). The reference
     takes `.first()` of multiple URIs (stats.py:238-247) with no order — we
-    take MIN(uri) for determinism (SURVEY §7.9)."""
-    uri = src.repository_uri.groupBy("repositoryPHID").agg(F.min("uri").alias("uri"))
-    return (
-        src.repository.select(
-            "phid",
+    take MIN(uri) for determinism (SURVEY §7.9), and a repository phid
+    listed twice resolves to the row with the max name. Repository and URI
+    rows meet in one union aggregate, one exchange in place of the URI
+    aggregate and its join; ``r`` keeps only phids with a repository row."""
+    repos = src.repository.select(
+        "phid",
+        F.struct(
             F.col("name").alias("repo_name"),
             F.get_json_object("details", "$['default-branch']").alias("default_branch"),
-        )
-        .join(uri.withColumnRenamed("repositoryPHID", "phid"), "phid", "left")
+        ).alias("r"),
+    )
+    uris = src.repository_uri.select(F.col("repositoryPHID").alias("phid"), "uri")
+    return (
+        repos.unionByName(uris, allowMissingColumns=True)
+        .groupBy("phid")
+        .agg(F.max("r").alias("r"), F.min("uri").alias("uri"))
+        .filter(F.col("r").isNotNull())
+        .select("phid", "r.repo_name", "r.default_branch", "uri")
     )
 
 
-def _author_cols(df: DataFrame, users: DataFrame, author_col: str = "authorPHID") -> DataFrame:
+def _author_cols(df: DataFrame, principals: DataFrame, author_col: str = "authorPHID") -> DataFrame:
     """Broadcast-join author username/email (J10/J11 at every author site)."""
-    u = users.select(
+    u = principals.select(
         F.col("phid").alias("__author_phid"),
         F.col("username").alias("author_username"),
         F.col("email").alias("author_email"),
@@ -97,10 +122,10 @@ def _author_cols(df: DataFrame, users: DataFrame, author_col: str = "authorPHID"
 # diffs + changesets (Phase 1/3).
 # ---------------------------------------------------------------------------
 
-def build_diffs(src: PhabSources, users: DataFrame) -> DataFrame:
+def build_diffs(src: PhabSources, principals: DataFrame) -> DataFrame:
     """One row per non-landing diff (stats.py:455-464; P8 filter)."""
     kept = src.diff.filter(phab.should_include_diff(F.col("creationMethod"), F.col("authorPHID")))
-    return _author_cols(kept, users).select(
+    return _author_cols(kept, principals).select(
         F.col("creationMethod").alias("creation_method"),
         F.col("id").alias("diff_id"),
         F.col("revisionID").alias("revision_id"),
@@ -130,7 +155,7 @@ def build_changesets(src: PhabSources) -> DataFrame:
 # comments (Phase 3): the OR-join decomposition (J6/J7/J8).
 # ---------------------------------------------------------------------------
 
-def build_comments(src: PhabSources, users: DataFrame) -> DataFrame:
+def build_comments(src: PhabSources, principals: DataFrame) -> DataFrame:
     rev = src.revision.select(F.col("id").alias("revision_id"), F.col("phid").alias("rev_phid"))
     c = src.transaction_comment
 
@@ -162,7 +187,7 @@ def build_comments(src: PhabSources, users: DataFrame) -> DataFrame:
     cs = src.changeset.select(F.col("id").alias("__cs_id"), F.col("diffID").alias("diff_id"))
     both = both.join(cs, both.changesetID == F.col("__cs_id"), "left").drop("__cs_id")
 
-    return _author_cols(both, users).select(
+    return _author_cols(both, principals).select(
         "revision_id",
         "diff_id",
         F.col("changesetID").alias("changeset_id"),
@@ -179,73 +204,73 @@ def build_comments(src: PhabSources, users: DataFrame) -> DataFrame:
 # transactions (Phase 3): P10 + C3 + F2 reviewers resolution.
 # ---------------------------------------------------------------------------
 
-def build_transactions(src: PhabSources, users: DataFrame, projects: DataFrame) -> DataFrame:
+def _keyed(side: str, phids: F.Column) -> F.Column:
+    """(side, pos, phid) of each phid of an array in order; none when the
+    array is NULL."""
+    return F.transform(
+        F.coalesce(phids, F.array().cast("array<string>")),
+        lambda phid, pos: F.struct(F.lit(side).alias("side"), pos.alias("pos"), phid.alias("phid")),
+    )
+
+
+def build_transactions(src: PhabSources, principals: DataFrame) -> DataFrame:
+    """P10 + C3 + F2: one row per state-change transaction of a revision.
+    F2 resolves a reviewers row's map keys to names in the pass that moves
+    the rows: as executed over the landed gate world
+    (plans/r12/phab_transactions_executed.txt) the transactions are
+    hash-partitioned by id once, each row explodes its keys in place (one
+    row with a NULL key when it has none), one principal broadcast resolves
+    them, and the regroup by the transaction's own columns keeps that
+    layout, as does the author broadcast after it. So each row is resolved
+    on its own (two rows equal in every column come out as one), and the
+    runner's dedup_latest on transaction_id plans no exchange of its own.
+    Over unpinned sources, as in that dump, each principal lookup also runs
+    the dim's own union aggregate; the runner pins the dim once."""
     rev = src.revision.select(F.col("id").alias("revision_id"), F.col("phid").alias("rev_phid"))
     txn = phab.filter_state_changes(src.differential_transaction)
-    txn = txn.join(rev, txn.objectPHID == rev.rev_phid)
+    txn = (
+        txn.join(rev, txn.objectPHID == rev.rev_phid)
+        .select("revision_id", "id", "transactionType", "authorPHID", "dateCreated", "oldValue", "newValue")
+        .repartition("id")
+    )
 
     # F2: reviewers-map values resolve PHID keys to names, document order,
-    # unresolved dropped (stats.py:717-754). posexplode keeps the key order
-    # from_json preserves; one resolution pass covers both old and new.
-    rv = txn.filter(F.col("transactionType") == "differential.revision.reviewers")
-    sides = rv.select(
-        F.col("id").alias("txn_id"),
-        F.explode(
-            F.array(
-                F.struct(F.lit("old").alias("side"), F.col("oldValue").alias("val")),
-                F.struct(F.lit("new").alias("side"), F.col("newValue").alias("val")),
-            )
-        ).alias("sv"),
-    ).select("txn_id", F.col("sv.side").alias("side"), F.col("sv.val").alias("val"))
-    keys = sides.select(
-        "txn_id",
-        "side",
-        F.posexplode_outer(F.map_keys(F.from_json("val", "map<string,string>"))).alias("pos", "phid"),
-    )
-    u = users.select(F.col("phid").alias("u_phid"), F.col("username").alias("u_name"))
-    p = projects.select(F.col("phid").alias("p_phid"), F.col("project_name").alias("p_name"))
-    resolved = (
-        keys.join(F.broadcast(u), keys.phid == u.u_phid, "left")
-        .join(F.broadcast(p), keys.phid == p.p_phid, "left")
-        .withColumn(
-            "name",
-            F.when(phab.is_project_reviewer(F.col("phid")), F.col("p_name")).otherwise(F.col("u_name")),
-        )
-    )
-    # r10 (guide §2.4): ONE conditional aggregation replaces the former
-    # groupBy(txn_id, side) + pivot(side) pair — two exchanges collapsed
-    # into one. collect_list skips nulls, so the side split rides the WHEN
-    # inside the aggregate; output lists are identical (sorted by pos).
-    def _side_names(side: str) -> F.Column:
-        return F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.when(F.col("side") == side, F.struct("pos", "name"))
-                )
-            ),
-            lambda x: x["name"],
-        )
+    # unresolved dropped (stats.py:717-754). The (side, pos, phid) entries
+    # keep the key order from_json preserves; one lookup covers both sides.
+    is_rv = F.col("transactionType") == "differential.revision.reviewers"
 
-    wide = (
-        resolved.filter(F.col("name").isNotNull())
-        .groupBy("txn_id")
+    def reviewer_keys(value: str) -> F.Column:
+        return F.map_keys(F.from_json(value, "map<string,string>"))
+
+    entries = F.when(
+        is_rv, F.concat(_keyed("old", reviewer_keys("oldValue")), _keyed("new", reviewer_keys("newValue")))
+    )
+    keys = txn.select("*", F.explode_outer(entries).alias("k"))
+    p = principals.select(F.col("phid").alias("k_phid"), F.col("username").alias("u_name"), "project_name")
+    name = F.when(phab.is_project_reviewer(F.col("k.phid")), F.col("project_name")).otherwise(F.col("u_name"))
+
+    # collect_list skips nulls, so the side split and the unresolved drop
+    # ride the WHEN inside the aggregate; sorting the (pos, name) structs
+    # restores the document order
+    def _side_names(side: str) -> F.Column:
+        picked = F.when((F.col("k.side") == side) & name.isNotNull(), F.struct(F.col("k.pos"), name.alias("name")))
+        return F.transform(F.array_sort(F.collect_list(picked)), lambda x: x["name"])
+
+    txn = (
+        keys.join(F.broadcast(p), F.col("k.phid") == p.k_phid, "left")
+        .groupBy(*txn.columns)
         .agg(_side_names("old").alias("rv_old"), _side_names("new").alias("rv_new"))
     )
-
-    txn = txn.join(wide, txn.id == wide.txn_id, "left").drop("txn_id")
-    is_rv = F.col("transactionType") == "differential.revision.reviewers"
-    return _author_cols(txn, users).select(
+    return _author_cols(txn, principals).select(
         "revision_id",
         F.col("id").alias("transaction_id"),
         F.col("transactionType").alias("transaction_type"),
         "author_email",
         "author_username",
         F.col("dateCreated").alias("date_created"),
-        F.when(is_rv, F.coalesce("rv_old", F.array()))
-        .otherwise(phab.convert_value_to_string_list(F.col("oldValue")))
+        F.when(is_rv, F.col("rv_old")).otherwise(phab.convert_value_to_string_list(F.col("oldValue")))
         .alias("old_value"),
-        F.when(is_rv, F.coalesce("rv_new", F.array()))
-        .otherwise(phab.convert_value_to_string_list(F.col("newValue")))
+        F.when(is_rv, F.col("rv_new")).otherwise(phab.convert_value_to_string_list(F.col("newValue")))
         .alias("new_value"),
     )
 
@@ -254,17 +279,19 @@ def build_transactions(src: PhabSources, users: DataFrame, projects: DataFrame) 
 # review_requests (Phase 3): P9 dispatch + J5 diff-phid resolution.
 # ---------------------------------------------------------------------------
 
-def build_review_requests(src: PhabSources, users: DataFrame, projects: DataFrame) -> DataFrame:
+def build_review_requests(src: PhabSources, principals: DataFrame) -> DataFrame:
     rev = src.revision.select(F.col("id").alias("revision_id"), F.col("phid").alias("rev_phid"))
     r = src.reviewer.join(rev, src.reviewer.revisionPHID == rev.rev_phid)
 
-    u = users.select(F.col("phid").alias("u_phid"), F.col("username").alias("u_name"), F.col("email").alias("u_email"))
-    p = projects.select(F.col("phid").alias("p_phid"), F.col("project_name").alias("p_name"))
-    is_group = phab.is_project_reviewer(F.col("reviewerPHID"))
-    r = (
-        r.join(F.broadcast(u), r.reviewerPHID == u.u_phid, "left")
-        .join(F.broadcast(p), r.reviewerPHID == p.p_phid, "left")
+    # P9: one principal lookup; is_group picks the project or user columns
+    p = principals.select(
+        F.col("phid").alias("p_phid"),
+        F.col("username").alias("u_name"),
+        F.col("email").alias("u_email"),
+        F.col("project_name").alias("p_name"),
     )
+    is_group = phab.is_project_reviewer(F.col("reviewerPHID"))
+    r = r.join(F.broadcast(p), r.reviewerPHID == p.p_phid, "left")
 
     # J5: lastActionDiffPHID / lastCommentDiffPHID -> diff ids (two aliased
     # broadcast joins against the diff key map; null-propagating)
@@ -310,10 +337,12 @@ def stack_components(src: PhabSources) -> DataFrame:
     bug = _bug_ids(src).filter(F.col("bug_id").isNotNull())
     # rb (revision -> bug) is the vertex set and feeds BOTH edge endpoints.
     # It is not persisted: on the small-graph path connected_components
-    # reads it in one probe query, where exchange reuse shares the bug
-    # broadcast, and on the distributed path it caches the graph's rows,
-    # vertex and edge rows together, in one more query of that shape.
-    rb = src.revision.select(F.col("phid").alias("id")).join(bug, F.col("id") == bug.rev_phid).select("id", "bug_id")
+    # reads it in one probe query, where exchange reuse shares the revision
+    # phid broadcast among the vertex side and both endpoints, and on the
+    # distributed path it caches the graph's rows, vertex and edge rows
+    # together, in one more query of that shape.
+    revs = src.revision.select(F.col("phid").alias("id"))
+    rb = bug.join(F.broadcast(revs), bug.rev_phid == revs.id).select("id", "bug_id")
     e = src.diff_edge.filter(F.col("type").isin(phab.DEPENDS_ON, phab.DEPENDED_ON))
     sb = rb.withColumnsRenamed({"id": "src", "bug_id": "src_bug"})
     db = rb.withColumnsRenamed({"id": "dst", "bug_id": "dst_bug"})
@@ -344,13 +373,7 @@ def stack_sizes(src: PhabSources) -> DataFrame:
     )
 
 
-def build_revisions(
-    src: PhabSources,
-    repos: DataFrame,
-    projects: DataFrame,
-    *,
-    stacks: DataFrame | None = None,
-) -> DataFrame:
+def build_revisions(src: PhabSources, repos: DataFrame, *, stacks: DataFrame | None = None) -> DataFrame:
     """``stacks`` holds the (rev_phid, stack_size) rows of revisions that
     have a component (``component_sizes``); a revision without one gets 1.
     Pass it computed over the FULL revision graph in incremental runs,
@@ -382,11 +405,15 @@ def build_revisions(
         F.col("revisionPHID").alias("rev_phid"), "reviewerStatus", "dateModified", F.col("id").alias("review_id")
     )
     # J9: project tag slugs (type-41 edges); deterministic sorted order
-    # (the reference emits DB-arbitrary order, SURVEY §7.9)
+    # (the reference emits DB-arbitrary order, SURVEY §7.9). The lookup
+    # reads the project scan, not the pinned principal dim: through the
+    # dim the planner shuffles the revision scan before AQE broadcasts the
+    # rollup (one more job, measured).
     tags = (
         src.diff_edge.filter(F.col("type") == phab.OBJECT_HAS_PROJECT)
         .select(F.col("src").alias("rev_phid"), F.col("dst").alias("proj_phid"))
-        .join(F.broadcast(projects.select(F.col("phid").alias("proj_phid"), "slug")), "proj_phid")
+        .join(F.broadcast(src.project.select(F.col("phid").alias("proj_phid"), F.col("primarySlug").alias("slug"))),
+              "proj_phid")
         .select("rev_phid", "slug")
     )
     # A8: stack sizes straight from the component labels
@@ -434,7 +461,7 @@ def build_revisions(
 # review_groups + project_transactions (Phase 6, snapshot tables).
 # ---------------------------------------------------------------------------
 
-def build_review_groups(src: PhabSources, users: DataFrame) -> DataFrame:
+def build_review_groups(src: PhabSources, principals: DataFrame) -> DataFrame:
     """One row per non-bmo- project (P7) with member names/emails (J13).
     The reference iterates a SET of member phids — unordered, KEEPING
     unresolved Nones (stats.py:574-580, SURVEY §7.12); we order by member
@@ -448,7 +475,7 @@ def build_review_groups(src: PhabSources, users: DataFrame) -> DataFrame:
         .repartition("proj_phid")
         .dropDuplicates(["proj_phid", "member_phid"])
     )
-    u = users.select(F.col("phid").alias("member_phid"), "username", "email")
+    u = principals.select(F.col("phid").alias("member_phid"), "username", "email")
     rolled = (
         members.join(F.broadcast(u), "member_phid", "left")
         .groupBy("proj_phid")
@@ -472,68 +499,66 @@ def build_review_groups(src: PhabSources, users: DataFrame) -> DataFrame:
     )
 
 
-def build_project_transactions(src: PhabSources, users: DataFrame, projects: DataFrame) -> DataFrame:
-    """P10/P11/F3/F4/A7/J14/J15 in one pipeline (stats.py:626-680)."""
+def build_project_transactions(src: PhabSources, principals: DataFrame) -> DataFrame:
+    """P10/P11/F3/F4/A7/J14/J15 in one pipeline (stats.py:626-680). J14
+    resolves a core:edge row's member delta in the pass that moves the
+    rows, as build_transactions does its reviewers: as executed over the
+    landed gate world (plans/r12/phab_project_transactions_executed.txt)
+    the transactions are hash-partitioned by id once, each row explodes its
+    delta phids in place (one row with a NULL phid when it has none), one
+    principal broadcast resolves them, and the regroup by the transaction's
+    own columns keeps that layout, as do the owner (J15) and author
+    broadcasts after it. So each row is resolved on its own (two rows equal
+    in every column come out as one), and the runner's dedup_latest on
+    transaction_id plans no exchange of its own.
+    Over unpinned sources, as in that dump, each principal lookup also runs
+    the dim's own union aggregate; the runner pins the dim once."""
     txn = src.project_transaction.filter(F.col("transactionType").isin(phab.PROJECT_TRANSACTION_TYPES))
     # P11: core:edge rows must be membership transactions, others pass
     txn = txn.filter(
         (F.col("transactionType") != "core:edge")
         | phab.is_membership_edge_transaction(F.col("transactionType"), F.col("metadata"))
     )
-    p = projects.select(F.col("phid").alias("proj_phid"), "project_id", "project_name")
-    txn = txn.join(F.broadcast(p), txn.objectPHID == p.proj_phid, "left")
+    txn = txn.select("id", "objectPHID", "authorPHID", "dateCreated", "transactionType", "oldValue", "newValue")
+    txn = txn.repartition("id")
 
     # A7 + F3: membership delta phid sets, both directions
+    t = F.col("transactionType")
     old_set = phab.parse_edge_member_phids(F.col("oldValue"))
     new_set = phab.parse_edge_member_phids(F.col("newValue"))
-    removed = F.array_except(old_set, new_set)
-    added = F.array_except(new_set, old_set)
+    entries = F.when(
+        t == "core:edge",
+        F.concat(_keyed("old", F.array_except(old_set, new_set)), _keyed("new", F.array_except(new_set, old_set))),
+    )
+    keys = txn.select("*", F.explode_outer(entries).alias("k"))
+    u = principals.select(F.col("phid").alias("k_phid"), F.col("username").alias("member_name"))
 
     # J14: phid set -> SORTED DISTINCT usernames, dropping unresolved
-    # (stats.py:603-623). Resolve via explode + broadcast join.
-    edge_txn = txn.filter(F.col("transactionType") == "core:edge").select(
-        F.col("id").alias("txn_id"), removed.alias("removed"), added.alias("added")
-    )
-    sides = edge_txn.select(
-        "txn_id",
-        F.explode(
-            F.array(
-                F.struct(F.lit("old").alias("side"), F.col("removed").alias("phids")),
-                F.struct(F.lit("new").alias("side"), F.col("added").alias("phids")),
-            )
-        ).alias("sv"),
-    ).select("txn_id", F.col("sv.side").alias("side"), F.explode_outer("sv.phids").alias("member_phid"))
-    u = users.select(F.col("phid").alias("member_phid"), "username")
-
-    # r10 (guide §2.4): one conditional aggregation replaces the former
-    # groupBy(txn_id, side) + pivot(side) pair — two exchanges collapsed
-    # into one; collect_list skips the non-matching (null) side rows.
+    # (stats.py:603-623); the set skips the other side's and the
+    # unresolved (null) names
     def _side_names(side: str) -> F.Column:
-        return F.array_sort(
-            F.array_distinct(
-                F.collect_list(F.when(F.col("side") == side, F.col("username")))
-            )
-        )
+        return phab.sorted_distinct_usernames(F.when(F.col("k.side") == side, F.col("member_name")))
 
-    wide = (
-        sides.join(F.broadcast(u), "member_phid", "left")
-        .groupBy("txn_id")
+    txn = (
+        keys.join(F.broadcast(u), F.col("k.phid") == u.k_phid, "left")
+        .groupBy(*txn.columns)
         .agg(_side_names("old").alias("edge_old"), _side_names("new").alias("edge_new"))
     )
-    txn = txn.join(wide, txn.id == wide.txn_id, "left").drop("txn_id")
+    # J15: the owning project (NULL for a deleted one)
+    p = principals.select(F.col("phid").alias("proj_phid"), "project_id", "project_name")
+    txn = txn.join(F.broadcast(p), txn.objectPHID == p.proj_phid, "left")
 
-    t = F.col("transactionType")
     old_value = (
-        F.when(t == "core:edge", F.coalesce("edge_old", F.array()))
+        F.when(t == "core:edge", F.col("edge_old"))
         .when(t == "project:name", phab.decode_name_transaction_value(F.col("oldValue")))
         .otherwise(F.array())  # core:create has no prior value
     )
     new_value = (
-        F.when(t == "core:edge", F.coalesce("edge_new", F.array()))
+        F.when(t == "core:edge", F.col("edge_new"))
         .when(t == "project:name", phab.decode_name_transaction_value(F.col("newValue")))
         .otherwise(F.when(F.col("project_name").isNotNull(), F.array(F.col("project_name"))).otherwise(F.array()))
     )
-    return _author_cols(txn, users).select(
+    return _author_cols(txn, principals).select(
         "project_id",
         "project_name",
         F.col("id").alias("transaction_id"),
@@ -549,16 +574,14 @@ def build_project_transactions(src: PhabSources, users: DataFrame, projects: Dat
 def build_all(src: PhabSources) -> dict[str, DataFrame]:
     """All 8 output tables from one source set (process(), stats.py:1094-1164,
     minus the BigQuery plumbing the Spark sinks replace)."""
-    users = dim_users(src)
-    projects = dim_projects(src)
-    repos = dim_repositories(src)
+    principals = dim_principals(src)
     return {
-        "revisions": build_revisions(src, repos, projects),
-        "diffs": build_diffs(src, users),
+        "revisions": build_revisions(src, dim_repositories(src)),
+        "diffs": build_diffs(src, principals),
         "changesets": build_changesets(src),
-        "comments": build_comments(src, users),
-        "review_requests": build_review_requests(src, users, projects),
-        "transactions": build_transactions(src, users, projects),
-        "review_groups": build_review_groups(src, users),
-        "project_transactions": build_project_transactions(src, users, projects),
+        "comments": build_comments(src, principals),
+        "review_requests": build_review_requests(src, principals),
+        "transactions": build_transactions(src, principals),
+        "review_groups": build_review_groups(src, principals),
+        "project_transactions": build_project_transactions(src, principals),
     }

@@ -52,7 +52,7 @@ def _joined(col: str) -> F.Column:
 
 def phab_diffs(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _ensure_world(spark)
-    return P.build_diffs(src, P.dim_users(src))
+    return P.build_diffs(src, P.dim_principals(src))
 
 
 def phab_changesets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -62,29 +62,29 @@ def phab_changesets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def phab_comments(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _ensure_world(spark)
-    return P.build_comments(src, P.dim_users(src))
+    return P.build_comments(src, P.dim_principals(src))
 
 
 def phab_transactions(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _ensure_world(spark)
-    out = P.build_transactions(src, P.dim_users(src), P.dim_projects(src))
+    out = P.build_transactions(src, P.dim_principals(src))
     return out.withColumn("old_value", _joined("old_value")).withColumn("new_value", _joined("new_value"))
 
 
 def phab_review_requests(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _ensure_world(spark)
-    return P.build_review_requests(src, P.dim_users(src), P.dim_projects(src))
+    return P.build_review_requests(src, P.dim_principals(src))
 
 
 def phab_revisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _ensure_world(spark)
-    out = P.build_revisions(src, P.dim_repositories(src), P.dim_projects(src))
+    out = P.build_revisions(src, P.dim_repositories(src))
     return out.withColumn("project_tags", _joined("project_tags"))
 
 
 def phab_review_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _ensure_world(spark)
-    out = P.build_review_groups(src, P.dim_users(src))
+    out = P.build_review_groups(src, P.dim_principals(src))
     return (
         out.withColumn("group_usernames", _joined("group_usernames"))
         .withColumn("group_emails", _joined("group_emails"))
@@ -93,7 +93,7 @@ def phab_review_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def phab_project_transactions(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _ensure_world(spark)
-    out = P.build_project_transactions(src, P.dim_users(src), P.dim_projects(src))
+    out = P.build_project_transactions(src, P.dim_principals(src))
     return out.withColumn("old_value", _joined("old_value")).withColumn("new_value", _joined("new_value"))
 
 

@@ -9,6 +9,7 @@ components replacement (property-checked per §4.3).
 
 from __future__ import annotations
 
+import json
 import os
 from dataclasses import fields
 
@@ -153,6 +154,37 @@ def _edge_world(spark, root):
 def test_rollup_edge_cases(spark, tmp_path):
     src = _edge_world(spark, str(tmp_path))
     oracle = Oracle(_rows(src))
-    users, projects, repos = P.dim_users(src), P.dim_projects(src), P.dim_repositories(src)
-    _compare(P.build_revisions(src, repos, projects), oracle.revisions(), "revisions")
-    _compare(P.build_review_groups(src, users), oracle.review_groups(), "review_groups")
+    _compare(P.build_revisions(src, P.dim_repositories(src)), oracle.revisions(), "revisions")
+    _compare(P.build_review_groups(src, P.dim_principals(src)), oracle.review_groups(), "review_groups")
+
+
+# Two transaction rows sharing an id, each with its own reviewer or member
+# map, and the names each must resolve to on its own.
+_SHARED_ID_ROWS = {
+    "transactions": (
+        "differential_transaction", "differential.revision.reviewers",
+        {'{"PHID-USER-0003": "added"}': ("user3",), '{"PHID-USER-0004": "added"}': ("user4",)},
+    ),
+    "project_transactions": (
+        "project_transaction", "core:edge",
+        {'{"PHID-USER-0002": {}}': ("user2",), '{"PHID-USER-0005": {}}': ("user5",)},
+    ),
+}
+
+
+@pytest.mark.parametrize("table", sorted(_SHARED_ID_ROWS))
+def test_rows_sharing_an_id_resolve_their_own_names(spark, table):
+    """Names are resolved per row, as the row oracle does: two rows with
+    one id must not get each other's reviewer or member names."""
+    source, txn_type, names = _SHARED_ID_ROWS[table]
+    src = phab_fixtures.generate(spark, seed=7, n_revisions=12)
+    rows = [r.asDict() for r in getattr(src, source).collect()]
+    membership = json.dumps({"edge:type": 13})
+    first = next(r for r in rows if r["transactionType"] == txn_type and r.get("metadata", membership) == membership)
+    rows.remove(first)
+    rows += [{**first, "oldValue": "{}", "newValue": m} for m in names]
+    src = PhabSources(**{**src.__dict__, source: spark.createDataFrame(rows, SCHEMAS[source])})
+    out = P.build_all(src)[table]
+    got = out.filter(out.transaction_id == first["id"]).select("new_value").collect()
+    assert sorted(tuple(r.new_value) for r in got) == sorted(names.values())
+    _compare(out, getattr(Oracle(_rows(src)), table)(), table)

@@ -39,7 +39,7 @@ def _skewed(spark):
 def test_hot_revision_comments_exact_and_spread(spark):
     src = _skewed(spark)
     hot_id = src.revision.orderBy("id").first()["id"]
-    out = P.build_comments(src, P.dim_users(src)).localCheckpoint(eager=True)
+    out = P.build_comments(src, P.dim_principals(src)).localCheckpoint(eager=True)
 
     # 1. exactness: all injected comments land on the hot revision, once each
     hot = out.filter(F.col("revision_id") == hot_id)
@@ -58,7 +58,7 @@ def test_hot_revision_comments_exact_and_spread(spark):
     # shuffle would have.
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try:
-        spread = P.build_comments(src, P.dim_users(src))
+        spread = P.build_comments(src, P.dim_principals(src))
         sizes = [
             r["c"]
             for r in spread.withColumn("p", F.spark_partition_id())
@@ -79,7 +79,7 @@ def test_comment_or_join_arms_broadcast_the_dim_side(spark):
     import re
 
     src = _skewed(spark)
-    df = P.build_comments(src, P.dim_users(src))
+    df = P.build_comments(src, P.dim_principals(src))
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in plan
