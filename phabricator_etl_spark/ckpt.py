@@ -56,7 +56,7 @@ class CheckpointChain:
     """step(df) -> eagerly-checkpointed df; frees the GRANDPARENT's blocks.
 
     Two generations stay live: convergence checks routinely compare the new
-    state against the previous one (CC's changed-count join, sum probes), so
+    state against the previous one (pointer jumping's sum probe), so
     the previous generation is only provably garbage once the round AFTER it
     has materialized. Memory is O(2 states) instead of O(rounds). States
     handed out in the last two steps are never freed (one of them backs

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..query import Q
 from ..sources.catalog import load_table as _t
+from . import phab
 
 
 def f2_json_map_key_order(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -62,8 +63,8 @@ FROM (
 
 def f3_dict_or_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F3: dict-or-list PHID extraction. Even event_ids carry an object doc,
-    odd ones an array doc; parse as map first, coalesce with array parse,
-    else empty — the reference's three-way duality in one expression."""
+    odd ones an array doc; the ETL's own ``phab.parse_edge_member_phids``
+    parses them — the reference's three-way duality in one expression."""
     e = _t(spark, sf_dir, "events")
     doc = F.when(
         F.col("event_id") % 2 == 0,
@@ -73,12 +74,9 @@ def f3_dict_or_list(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit('["x'), F.col("user_id").cast("string"), F.lit('","y'),
                  F.col("user_id").cast("string"), F.lit('"]')),
     )
-    as_map = F.map_keys(F.from_json(doc, "map<string,int>"))
-    as_arr = F.from_json(doc, "array<string>")
-    members = F.coalesce(as_map, as_arr, F.array())
     return e.select(
         F.col("event_id").cast("long").alias("event_id"),
-        F.array_join(F.array_sort(F.array_distinct(members)), "|").alias("member_set"),
+        F.array_join(F.array_sort(phab.parse_edge_member_phids(doc)), "|").alias("member_set"),
     )
 
 
@@ -189,17 +187,15 @@ ORDER BY c_nationkey
 def f4_json_string_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F4: decode_name_transaction_value (transforms.py:230-242) — a JSON
     string scalar decodes to [name]; anything non-string decodes to [].
-    Every third row carries a bare JSON number instead of a string."""
+    Every third row carries a bare JSON number instead of a string. The
+    ETL's own ``phab.decode_name_transaction_value`` decodes them."""
     e = _t(spark, sf_dir, "events")
     doc = F.when(F.col("event_id") % 3 == 0, F.col("user_id").cast("string")).otherwise(
         F.concat(F.lit('"name-'), F.col("user_id").cast("string"), F.lit('"'))
     )
-    # get_json_object('$') unquotes string scalars; gate on the raw doc being
-    # a quoted string to replicate the reference's isinstance(str) check
-    names = F.when(doc.startswith('"'), F.array(F.get_json_object(doc, "$"))).otherwise(F.array())
     return e.select(
         F.col("event_id").cast("long").alias("event_id"),
-        F.array_join(names, "|").alias("names"),
+        F.array_join(phab.decode_name_transaction_value(doc), "|").alias("names"),
     )
 
 

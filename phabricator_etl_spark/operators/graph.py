@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..ckpt import CheckpointChain, free
@@ -230,16 +230,13 @@ def connected_components(
     )
     rows.unpersist()
 
-    # Convergence detection: labels are elementwise NON-INCREASING (every
-    # update takes a min), so for numeric ids the global sum(component)
-    # strictly decreases iff any label changed — one cheap single-row agg per
-    # round instead of a full old-vs-new anti-join. Non-numeric ids fall back
-    # to the join-based check.
-    numeric_ids = labels.schema["component"].dataType.typeName() in {
-        "long", "integer", "short", "byte", "double", "float", "decimal",
-    }
-    prev_sum = labels.agg(F.sum("component")).collect()[0][0] if numeric_ids else None
-
+    # Convergence: labels are elementwise NON-INCREASING (every update takes
+    # a min), so the fixpoint is the first round in which no label moved.
+    # The hop aggregate carries each vertex's previous label (``old``) beside
+    # its new one, and the labels checkpoint observes whether any label
+    # dropped, an id without a previous label counting as moved. The flag
+    # arrives with the checkpoint's own job: the test costs no job, whatever
+    # the id type.
     from .iterative import ROUNDS  # round-count instrumentation (see there)
 
     for rnd in range(max_iterations):
@@ -249,40 +246,29 @@ def connected_components(
         # replaces a separate left-join-back, saving a shuffle per round.
         hop = (
             sym.join(labels, sym.b == labels.id)
-            .select(F.col("a").alias("id"), F.col("component").alias("cand"))
-            .unionByName(labels.select("id", F.col("component").alias("cand")))
+            .select(F.col("a").alias("id"), F.col("component").alias("cand"), F.lit(None).alias("old"))
+            .unionByName(labels.select("id", F.col("component").alias("cand"), F.col("component").alias("old")))
             .groupBy("id")
-            .agg(F.min("cand").alias("component"))
+            .agg(F.min("cand").alias("component"), F.max("old").alias("old"))
         )
         # Pointer doubling (path compression): component <- label(component).
         # The neighbor-min hop alone needs O(diameter) rounds; composing it
         # with one pointer jump per round collapses chains geometrically,
         # so rounds ~ O(log diameter) — the large-star/small-star insight.
         ptr = hop.select(F.col("id").alias("p_id"), F.col("component").alias("p_comp"))
-        new_labels = chain.step(
+        moved = Observation()
+        labels = chain.step(
             hop.join(ptr, hop.component == ptr.p_id, "left")
             .select(
                 "id",
                 F.least(F.col("component"), F.coalesce(F.col("p_comp"), F.col("component"))).alias("component"),
+                "old",
             )
+            .observe(moved, F.max(F.coalesce(F.col("component") < F.col("old"), F.lit(True))).alias("moved"))
+            .select("id", "component")
         )
-        if numeric_ids:
-            cur_sum = new_labels.agg(F.sum("component")).collect()[0][0]
-            labels = new_labels
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
-        else:
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "id")
-                .filter(F.col("n.component") != F.col("o.component"))
-                .limit(1)
-                .count()
-            )
-            labels = new_labels
-            if changed == 0:
-                break
+        if not moved.get["moved"]:
+            break
 
     # the symmetrized edges die with the loop; the final labels checkpoint (the
     # return value) stays live — the chain never frees its last two states

@@ -37,9 +37,6 @@ from . import phab_queries as PQ
 
 _SUM_P = 1_000_000_007
 
-# recency column used for rec_sum (None -> 0): mirrors R.MERGE_KEYS
-_TABLES = R.MERGE_KEYS
-
 
 def _summarize(out: dict[str, DataFrame]) -> DataFrame:
     """One pass: every table's (table_name, key, rec) rows are unioned and
@@ -49,11 +46,11 @@ def _summarize(out: dict[str, DataFrame]) -> DataFrame:
     no other sum)."""
     spark = next(iter(out.values())).sparkSession
     marker = spark.createDataFrame(
-        [(name, None, 0, 0) for name in sorted(_TABLES)],
+        [(name, None, 0, 0) for name in sorted(R.MERGE_KEYS)],
         "table_name string, key string, rec long, w int",
     )
     rows = marker
-    for name, (key, recency) in sorted(_TABLES.items()):
+    for name, (key, recency) in sorted(R.MERGE_KEYS.items()):
         rows = rows.unionByName(
             out[name].select(
                 F.lit(name).alias("table_name"),
@@ -112,24 +109,15 @@ def etl_e2e_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _e2e_oracle() -> str:
     """Final-state summary over the SAME fixture parquet, via the eight
-    per-table pipeline oracles (each a complete WITH..SELECT — legal as a
-    derived table in DuckDB), wrapped in the recency-winner dedup the
+    per-table pipeline oracles, the ``phab_<table>`` entries of
+    PHAB_QUERIES (each a complete WITH..SELECT — legal as a derived table
+    in DuckDB), wrapped in the recency-winner dedup the
     runner applies before merging. Both e2e entries share this oracle: a
     full run IS the final state, and the incremental protocol must land on
     the same final state (the invariant under test)."""
-    oracle_by_table = {
-        "revisions": PQ.PHAB_REVISIONS_ORACLE,
-        "diffs": PQ.PHAB_DIFFS_ORACLE,
-        "changesets": PQ.PHAB_CHANGESETS_ORACLE,
-        "comments": PQ.PHAB_COMMENTS_ORACLE,
-        "review_requests": PQ.PHAB_REVIEW_REQUESTS_ORACLE,
-        "transactions": PQ.PHAB_TRANSACTIONS_ORACLE,
-        "review_groups": PQ.PHAB_REVIEW_GROUPS_ORACLE,
-        "project_transactions": PQ.PHAB_PROJECT_TRANSACTIONS_ORACLE,
-    }
+    oracles = {q.name: q.oracle for q in PQ.PHAB_QUERIES}
     selects = []
-    for name in sorted(_TABLES):
-        key, recency = _TABLES[name]
+    for name, (key, recency) in sorted(R.MERGE_KEYS.items()):
         ksum = f"CAST(SUM({md5_long_sql(f'CAST({key} AS VARCHAR)')} % {_SUM_P}) AS BIGINT)"
         rsum = f"CAST(COALESCE(SUM({recency}), 0) AS BIGINT)" if recency else "CAST(0 AS BIGINT)"
         dedup = (
@@ -139,7 +127,7 @@ def _e2e_oracle() -> str:
         )
         selects.append(
             f"""SELECT '{name}' AS table_name, COUNT(*) AS n_rows, {ksum} AS key_sum, {rsum} AS rec_sum
-FROM (SELECT * FROM ({oracle_by_table[name]}) {dedup})"""
+FROM (SELECT * FROM ({oracles[f'phab_{name}']}) {dedup})"""
         )
     return "\nUNION ALL\n".join(selects) + "\nORDER BY table_name"
 

@@ -228,23 +228,10 @@ def run_incremental(
     world = PhabSources(**{**world.__dict__, "revision": revision})
     phases["expand_and_pin_dims"] = round(time.perf_counter() - t_phase, 3)
     t_phase = time.perf_counter()
-    # stack sizes come from the FULL graph (the filtered world can't see
-    # unchanged stack members — stats.py:1117-1119 queries all_revisions),
-    # counted straight from the labels: no revision scan, no join
-    built = {
-        "revisions": P.build_revisions(world, P.dim_repositories(world), stacks=P.component_sizes(comp)),
-        "diffs": P.build_diffs(world, principals),
-        "changesets": P.build_changesets(world),
-        "comments": P.build_comments(world, principals),
-        "review_requests": P.build_review_requests(world, principals),
-        "transactions": P.build_transactions(world, principals),
-        # snapshots run over the UNFILTERED world every time; the principal
-        # dim is safe to share — it reads only the user/user_email/project
-        # tables, which the changed-revision filter never touches (src and
-        # the expanded world agree on them)
-        "review_groups": P.build_review_groups(src, principals),
-        "project_transactions": P.build_project_transactions(src, principals),
-    }
+    # comp covers the FULL graph (the filtered world can't see unchanged
+    # stack members — stats.py:1117-1119 queries all_revisions)
+    # world differs from src only in revision, which the snapshot builders never read
+    tables = P.build_all(world, principals, comp)
 
     def _stage(name: str, df: DataFrame) -> StructType:
         t_branch = time.perf_counter()
@@ -274,8 +261,8 @@ def run_incremental(
     # cluster it overlaps each branch's shuffle/write stages the same way
     # (SparkSession job submission is thread-safe; FIFO scheduling lets
     # later jobs use idle slots).
-    with ThreadPoolExecutor(max_workers=len(built)) as pool:
-        futures = {name: pool.submit(_stage, name, df) for name, df in built.items()}
+    with ThreadPoolExecutor(max_workers=len(tables)) as pool:
+        futures = {name: pool.submit(_stage, name, df) for name, df in tables.items()}
         schemas = {name: fut.result() for name, fut in futures.items()}
     fs, jvm_path = _hadoop_fs(spark, dest_dir)
     fs.create(jvm_path(os.path.join(dest_dir, COMMIT_MARKER)), True).close()

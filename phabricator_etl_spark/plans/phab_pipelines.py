@@ -332,8 +332,9 @@ def _bug_ids(src: PhabSources) -> DataFrame:
 
 def stack_components(src: PhabSources) -> DataFrame:
     """(rev_phid, component) over dependency edges restricted to same-bug
-    endpoints — the global CC pass behind stack_size, exposed separately so
-    the incremental runner can do graph-aware invalidation."""
+    endpoints — the global CC pass behind stack_size (A8/§4.3), replacing
+    the reference's per-revision BFS (stats.py:310-357). The runner runs it
+    once for both the graph-aware invalidation and ``build_revisions``."""
     bug = _bug_ids(src).filter(F.col("bug_id").isNotNull())
     # rb (revision -> bug) is the vertex set and feeds BOTH edge endpoints.
     # It is not persisted: on the small-graph path connected_components
@@ -353,33 +354,14 @@ def stack_components(src: PhabSources) -> DataFrame:
     return comp.select(F.col("id").alias("rev_phid"), "component")
 
 
-def component_sizes(comp: DataFrame) -> DataFrame:
-    """(rev_phid, stack_size) of every revision that has a component: the
-    size is a count over its ``component`` label, one exchange on the label.
-    Revisions without a component (no bug) are absent; their size is 1."""
-    size = F.count(F.lit(1)).over(Window.partitionBy("component"))
-    return comp.select("rev_phid", size.alias("stack_size"))
-
-
-def stack_sizes(src: PhabSources) -> DataFrame:
-    """A8/§4.3: one global connected-components pass over dependency edges
-    restricted to same-bug endpoints, replacing the reference's per-revision
-    BFS (stats.py:310-357). Returns (rev_phid, stack_size) for every
-    revision; no-bug or isolated revisions get 1."""
-    return (
-        src.revision.select(F.col("phid").alias("rev_phid"))
-        .join(component_sizes(stack_components(src)), "rev_phid", "left")
-        .select("rev_phid", F.coalesce("stack_size", F.lit(1)).alias("stack_size"))
-    )
-
-
-def build_revisions(src: PhabSources, repos: DataFrame, *, stacks: DataFrame | None = None) -> DataFrame:
-    """``stacks`` holds the (rev_phid, stack_size) rows of revisions that
-    have a component (``component_sizes``); a revision without one gets 1.
-    Pass it computed over the FULL revision graph in incremental runs,
-    where the revision table here is watermark-filtered but stack
-    membership must consult every revision (the reference's BFS queries
-    unfiltered all_revisions, stats.py:1117-1119)."""
+def build_revisions(src: PhabSources, repos: DataFrame, comp: DataFrame) -> DataFrame:
+    """``comp`` holds the (rev_phid, component) labels of ``stack_components``
+    (A8/§4.3): a revision's stack_size is the count of its label, one
+    exchange on the label, and a revision without a label (no bug) gets 1.
+    In incremental runs compute it over the FULL revision graph: the
+    revision table here is watermark-filtered, but stack membership must
+    consult every revision (the reference's BFS queries unfiltered
+    all_revisions, stats.py:1117-1119)."""
     rev = src.revision
 
     # A2: date_landed = max dateCreated over commit diffs (over ALL diffs,
@@ -417,8 +399,7 @@ def build_revisions(src: PhabSources, repos: DataFrame, *, stacks: DataFrame | N
         .select("rev_phid", "slug")
     )
     # A8: stack sizes straight from the component labels
-    if stacks is None:
-        stacks = component_sizes(stack_components(src))
+    stacks = comp.select("rev_phid", F.count(F.lit(1)).over(Window.partitionBy("component")).alias("stack_size"))
     is_review = F.col("review_id").isNotNull()
     rolled = (
         bug.unionByName(reviews, allowMissingColumns=True)
@@ -571,12 +552,14 @@ def build_project_transactions(src: PhabSources, principals: DataFrame) -> DataF
     )
 
 
-def build_all(src: PhabSources) -> dict[str, DataFrame]:
+def build_all(src: PhabSources, principals: DataFrame, comp: DataFrame) -> dict[str, DataFrame]:
     """All 8 output tables from one source set (process(), stats.py:1094-1164,
-    minus the BigQuery plumbing the Spark sinks replace)."""
-    principals = dim_principals(src)
+    minus the BigQuery plumbing the Spark sinks replace): the one place the
+    builders are wired to their inputs, for the runner and the tests alike.
+    ``principals`` is ``dim_principals``, ``comp`` the ``stack_components``
+    labels (over the full revision graph, see ``build_revisions``)."""
     return {
-        "revisions": build_revisions(src, dim_repositories(src)),
+        "revisions": build_revisions(src, dim_repositories(src), comp),
         "diffs": build_diffs(src, principals),
         "changesets": build_changesets(src),
         "comments": build_comments(src, principals),

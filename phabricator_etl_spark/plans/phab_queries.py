@@ -78,7 +78,7 @@ def phab_review_requests(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def phab_revisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _ensure_world(spark)
-    out = P.build_revisions(src, P.dim_repositories(src))
+    out = P.build_revisions(src, P.dim_repositories(src), P.stack_components(src))
     return out.withColumn("project_tags", _joined("project_tags"))
 
 

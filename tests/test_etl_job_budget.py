@@ -42,10 +42,12 @@ GRAPH_JOB_BUDGET = 4
 
 # Jobs of stack_components over the gate-size world with both cutovers at
 # 0, so the probe comes back truncated and the distributed fixpoint runs:
-# the probe, the one cache fill of the graph's rows, and the rounds. 28 or
-# 29 at 1, 4, 8 and 16 cores, two runs each; 29 or 30 before the one probe,
-# when the edge probe filled an edge cache persisted ahead of it.
-DISTRIBUTED_CC_JOB_BUDGET = 29
+# the probe, the one cache fill of the graph's rows, then one checkpoint
+# per round and no convergence job (the labels checkpoint observes whether
+# a label moved). 20 or 21 at 1, 4, 8 and 16 cores, two runs each, over 2
+# rounds; 26 or 27 when each round ended in a join of new against old
+# labels.
+DISTRIBUTED_CC_JOB_BUDGET = 21
 
 # Jobs of graph_bfs_distance (pointer jumping) over a 3000-order table with
 # both cutovers at 0, its parquet read included: its seeds and edges come

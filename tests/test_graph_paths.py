@@ -30,10 +30,17 @@ def _labels(df):
     return {r["id"]: r["component"] for r in df.collect()}
 
 
-def test_local_and_distributed_paths_agree(spark, monkeypatch):
+# How a vertex number becomes an id: the ETL labels revisions by their
+# string PHIDs, whose order is not the numbers' order.
+_ID_TYPES = {"long": lambda v: v, "string": lambda v: f"PHID-DREV-{v}"}
+
+
+@pytest.mark.parametrize("id_type", sorted(_ID_TYPES))
+def test_local_and_distributed_paths_agree(spark, monkeypatch, id_type):
+    to_id = _ID_TYPES[id_type]
     vertices, edges = _random_graph(seed=11, n=300, m=180)
-    vdf = spark.createDataFrame([(v,) for v in vertices], "id long")
-    edf = spark.createDataFrame(edges, "src long, dst long")
+    vdf = spark.createDataFrame([(to_id(v),) for v in vertices], f"id {id_type}")
+    edf = spark.createDataFrame([(to_id(a), to_id(b)) for a, b in edges], f"src {id_type}, dst {id_type}")
     local = _labels(connected_components(vdf, edf))
     monkeypatch.setattr(graph_mod, "LOCAL_EDGE_THRESHOLD", 0)
     dist = _labels(connected_components(vdf, edf))

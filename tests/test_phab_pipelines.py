@@ -28,7 +28,12 @@ def world(spark, tmp_path_factory):
     in-memory sources never plan broadcasts, so they would skip the join
     and exchange shapes the pipelines are planned for."""
     src = phab_fixtures.land(spark, str(tmp_path_factory.mktemp("phab_world")), seed=7)
-    return src, Oracle(_rows(src)), P.build_all(src)
+    return src, Oracle(_rows(src)), _build_all(src)
+
+
+def _build_all(src):
+    """The eight tables as the runner wires them on a first load."""
+    return P.build_all(src, P.dim_principals(src), P.stack_components(src))
 
 
 def _rows(src):
@@ -100,11 +105,12 @@ def test_stack_size_property_alt_seed(spark):
     src = phab_fixtures.generate(spark, seed=23, n_revisions=60)
     rows = _rows(src)
     oracle = Oracle(rows)
-    got = {r["rev_phid"]: r["stack_size"] for r in P.stack_sizes(src).collect()}
+    out = P.build_revisions(src, P.dim_repositories(src), P.stack_components(src))
+    got = {r["revision_id"]: r["stack_size"] for r in out.collect()}
     for rev in rows["revision"]:
         want = oracle.stack_size(rev)
-        assert got[rev["phid"]] == want, (
-            f"stack_size({rev['phid']}): spark={got[rev['phid']]} bfs-oracle={want}"
+        assert got[rev["id"]] == want, (
+            f"stack_size({rev['phid']}): spark={got[rev['id']]} bfs-oracle={want}"
         )
 
 
@@ -154,7 +160,7 @@ def _edge_world(spark, root):
 def test_rollup_edge_cases(spark, tmp_path):
     src = _edge_world(spark, str(tmp_path))
     oracle = Oracle(_rows(src))
-    _compare(P.build_revisions(src, P.dim_repositories(src)), oracle.revisions(), "revisions")
+    _compare(P.build_revisions(src, P.dim_repositories(src), P.stack_components(src)), oracle.revisions(), "revisions")
     _compare(P.build_review_groups(src, P.dim_principals(src)), oracle.review_groups(), "review_groups")
 
 
@@ -184,7 +190,7 @@ def test_rows_sharing_an_id_resolve_their_own_names(spark, table):
     rows.remove(first)
     rows += [{**first, "oldValue": "{}", "newValue": m} for m in names]
     src = PhabSources(**{**src.__dict__, source: spark.createDataFrame(rows, SCHEMAS[source])})
-    out = P.build_all(src)[table]
+    out = _build_all(src)[table]
     got = out.filter(out.transaction_id == first["id"]).select("new_value").collect()
     assert sorted(tuple(r.new_value) for r in got) == sorted(names.values())
     _compare(out, getattr(Oracle(_rows(src)), table)(), table)

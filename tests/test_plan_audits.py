@@ -31,8 +31,11 @@ def _plan(df) -> str:
 
 
 @pytest.fixture(scope="module")
-def fixtures(spark):
-    return phab_fixtures.generate(spark, seed=7)
+def tables(spark):
+    """The eight tables of the generated world, wired as the runner wires
+    them on a first load."""
+    src = phab_fixtures.generate(spark, seed=7)
+    return P.build_all(src, P.dim_principals(src), P.stack_components(src))
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_smoke):
@@ -80,9 +83,8 @@ def test_q1_uses_whole_stage_codegen(spark, sf_smoke):
 @pytest.mark.parametrize("table", ["revisions", "diffs", "comments", "transactions",
                                    "review_requests", "review_groups", "project_transactions",
                                    "changesets"])
-def test_phab_pipelines_have_no_python_nodes(fixtures, table):
-    out = P.build_all(fixtures)[table]
-    plan = _plan(out)
+def test_phab_pipelines_have_no_python_nodes(tables, table):
+    plan = _plan(tables[table])
     for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "PythonUDF"):
         assert marker not in plan, (
             f"{table}: {marker} found — parity pipelines must be pure JVM (SURVEY §2.10)"
@@ -106,8 +108,8 @@ def test_bucketed_join_is_colocated(spark, sf_smoke):
     assert "Exchange" not in tree_above_join, tree_above_join
 
 
-def test_phab_dimension_joins_broadcast(fixtures):
-    plan = _plan(P.build_all(fixtures)["review_requests"])
+def test_phab_dimension_joins_broadcast(tables):
+    plan = _plan(tables["review_requests"])
     assert "BroadcastHashJoin" in plan, "user/project dims must broadcast"
 
 
