@@ -68,7 +68,7 @@ def _local_components(vertices: DataFrame, epd, vpd) -> DataFrame:
 
     ``epd``/``vpd``: the pandas edge and vertex frames of the caller's
     ``probe_graph``, which doubles as the transfer: the local path is one
-    collect. In the gate-size first load that collect runs 5 Spark jobs:
+    collect. In the gate-size first load that collect runs 4 Spark jobs:
     the edge and vertex pipelines' query stages run inside it, and no cache
     is filled (see GRAPH_JOB_BUDGET in tests/test_etl_job_budget.py).
     Arrow both ways.

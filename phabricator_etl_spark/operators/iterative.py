@@ -5,13 +5,14 @@ connected components generalizes it. This module adds the other shapes a
 graph workload needs — hop distance over in-forests by pointer jumping,
 power iteration (PageRank) and k-core peeling — using the same pattern:
 per-round equi-joins, localCheckpoint to cut lineage (ckpt.py), convergence
-by cheap aggregate, and below graph.LOCAL_EDGE_THRESHOLD a driver-side path
-behind the same size probe as connected components (graph.probe_graph).
+by a flag observed on the round's checkpoint or by a cheap aggregate, and
+below graph.LOCAL_EDGE_THRESHOLD a driver-side path behind the same size
+probe as connected components (graph.probe_graph).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -122,9 +123,10 @@ def pointer_jump_distances(
         )
     )
     rows.unpersist()
-    # distance is elementwise non-decreasing and strictly increases somewhere
-    # iff any pointer can still jump, so one scalar sum detects the fixpoint.
-    prev_sum = ptr.agg(F.sum("distance")).collect()[0][0] or 0
+    # A pointer's distance grows iff it jumped, so the fixpoint is the first
+    # round in which no pointer found its ancestor's pointer. The ptr
+    # checkpoint observes that flag, which arrives with the checkpoint's
+    # own job: the test costs no job (as in graph.connected_components).
     for rnd in range(max_iterations):
         ROUNDS["pointer_jump"] = rnd + 1
         j = ptr.select(
@@ -132,18 +134,18 @@ def pointer_jump_distances(
             F.col("anc").alias("j_anc"),
             F.col("distance").alias("j_d"),
         )
+        jumped = Observation()
         ptr = chain.step(
             ptr.join(j, ptr.anc == j.j_id, "left")
+            .observe(jumped, F.max(F.col("j_id").isNotNull()).alias("jumped"))
             .select(
                 "id",
                 F.coalesce("j_anc", "anc").alias("anc"),
                 (F.col("distance") + F.coalesce("j_d", F.lit(0))).alias("distance"),
             )
         )
-        cur_sum = ptr.agg(F.sum("distance")).collect()[0][0] or 0
-        if cur_sum == prev_sum:
+        if not jumped.get["jumped"]:
             break
-        prev_sum = cur_sum
     # Keep only vertices whose terminal ancestor is a seed (reachability), and
     # the seeds themselves at distance 0.
     reached = ptr.join(seeds.withColumnRenamed("id", "anc"), "anc").select("id", "distance")

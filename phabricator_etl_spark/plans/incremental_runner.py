@@ -149,27 +149,25 @@ def dedup_latest(df: DataFrame, key: str, recency: str | None) -> DataFrame:
     stats.py:918); without one the full remaining tuple decides
     (SURVEY §7.8).
 
-    Implemented as a struct-max_by aggregation rather than the
+    Implemented as a struct-max aggregation rather than the
     ROW_NUMBER-over-window form (r10 optimization, guide §2.3): the
     aggregate does PARTIAL (map-side) combination, so duplicate keys
-    collapse before the exchange. max_by is a declarative aggregate whose
-    buffer holds the struct, which a hash-aggregate buffer cannot, so it
-    plans as SortAggregate on BOTH sides of the exchange: Sort + partial
-    SortAggregate, Exchange hashpartitioning(key), Sort + final
-    SortAggregate. Where the input is already partitioned on the key
+    collapse before the exchange. The max of the row's struct is that
+    struct, compared field by field (recency first) with NULL low, so its
+    buffer holds one copy of the row. A hash-aggregate buffer cannot hold
+    a struct, so it plans as SortAggregate on BOTH sides of the exchange:
+    Sort + partial SortAggregate, Exchange hashpartitioning(key), Sort +
+    final SortAggregate. Where the input is already partitioned on the key
     (transactions, project_transactions) the Exchange and the Sort between
-    the two aggregates drop out. Struct comparison orders field-by-field
-    (recency first), with NULL low — identical winner choice to the
-    desc-NULLS-LAST window wherever recency differs, and a deterministic
-    full-tuple tiebreak where it doesn't."""
+    the two aggregates drop out. The winner is the desc-NULLS-LAST
+    window's wherever recency differs, with a deterministic full-tuple
+    tiebreak where it doesn't."""
     rest = [c for c in df.columns if c != key]
     if recency:
         ordered = [recency] + [c for c in rest if c != recency]
     else:
         ordered = rest
-    win = df.groupBy(key).agg(
-        F.max_by(F.struct(*ordered), F.struct(*ordered)).alias("__w")
-    )
+    win = df.groupBy(key).agg(F.max(F.struct(*ordered)).alias("__w"))
     return win.select(key, *[F.col(f"__w.{c}").alias(c) for c in ordered]).select(*df.columns)
 
 

@@ -109,7 +109,9 @@ def dim_repositories(src: PhabSources) -> DataFrame:
 
 
 def _author_cols(df: DataFrame, principals: DataFrame, author_col: str = "authorPHID") -> DataFrame:
-    """Broadcast-join author username/email (J10/J11 at every author site)."""
+    """Broadcast-join author username/email (J10/J11) of a diff or comment;
+    the transaction tables resolve their author in their one principal
+    lookup."""
     u = principals.select(
         F.col("phid").alias("__author_phid"),
         F.col("username").alias("author_username"),
@@ -157,10 +159,24 @@ def build_changesets(src: PhabSources) -> DataFrame:
 
 def build_comments(src: PhabSources, principals: DataFrame) -> DataFrame:
     rev = src.revision.select(F.col("id").alias("revision_id"), F.col("phid").alias("rev_phid"))
-    c = src.transaction_comment
+    # The text's length and the suggestion flag are taken before the arms
+    # meet: a projection is not pushed below a repartition, so computed
+    # after it the exchange would carry content and attributes, the widest
+    # columns of the comment table, for two small values.
+    c = src.transaction_comment.select(
+        "phid",
+        "revisionPHID",
+        "id",
+        "changesetID",
+        "authorPHID",
+        "dateCreated",
+        F.length("content").alias("character_count"),
+        phab.is_suggestion(F.col("attributes")).alias("is_suggestion"),
+    )
+    cols = [col for col in c.columns if col not in ("phid", "revisionPHID")]
 
     # arm 1: comments bound to the revision directly
-    arm1 = c.join(rev, c.revisionPHID == rev.rev_phid).select("revision_id", *c.columns)
+    arm1 = c.join(rev, c.revisionPHID == rev.rev_phid).select("revision_id", *cols)
 
     # arm 2 (J7): comments referenced by the revision's core:comment txns
     cc_txn = (
@@ -171,13 +187,13 @@ def build_comments(src: PhabSources, principals: DataFrame) -> DataFrame:
     arm2 = (
         c.join(cc_txn, c.phid == cc_txn.cphid)
         .join(rev, F.col("rev_phid2") == rev.rev_phid)
-        .select("revision_id", *c.columns)
+        .select("revision_id", *cols)
     )
 
     # A row can satisfy both arms for the same revision -> dedup on the pair
     # key. The union is hash-partitioned by the comment id, which the pair
     # dedup accepts as its own layout: as executed over the landed gate
-    # world (plans/r12/phab_comments_executed.txt) the dedup's partial and
+    # world (plans/r14/phab_comments_executed.txt) the dedup's partial and
     # final aggregates share that one exchange, and the changeset and
     # author broadcast joins after it keep the layout, so the runner's
     # dedup_latest on comment_id needs no exchange of its own.
@@ -195,8 +211,8 @@ def build_comments(src: PhabSources, principals: DataFrame) -> DataFrame:
         "author_email",
         "author_username",
         F.col("dateCreated").alias("date_created"),
-        F.length("content").alias("character_count"),
-        phab.is_suggestion(F.col("attributes")).alias("is_suggestion"),
+        "character_count",
+        "is_suggestion",
     )
 
 
@@ -213,19 +229,24 @@ def _keyed(side: str, phids: F.Column) -> F.Column:
     )
 
 
+def _picked(side: str, value: str) -> F.Column:
+    """Aggregate: ``value`` of the row's one ``side`` entry (NULL when it
+    did not resolve)."""
+    return F.max(F.when(F.col("k.side") == side, F.col(value)))
+
+
 def build_transactions(src: PhabSources, principals: DataFrame) -> DataFrame:
     """P10 + C3 + F2: one row per state-change transaction of a revision.
     F2 resolves a reviewers row's map keys to names in the pass that moves
-    the rows: as executed over the landed gate world
-    (plans/r12/phab_transactions_executed.txt) the transactions are
-    hash-partitioned by id once, each row explodes its keys in place (one
-    row with a NULL key when it has none), one principal broadcast resolves
-    them, and the regroup by the transaction's own columns keeps that
-    layout, as does the author broadcast after it. So each row is resolved
-    on its own (two rows equal in every column come out as one), and the
-    runner's dedup_latest on transaction_id plans no exchange of its own.
-    Over unpinned sources, as in that dump, each principal lookup also runs
-    the dim's own union aggregate; the runner pins the dim once."""
+    the rows, and the author's phid rides along as one more key: as
+    executed over the landed gate world
+    (plans/r14/phab_transactions_executed.txt) the transactions are
+    hash-partitioned by id once, each row explodes its author and reviewer
+    keys in place, one principal broadcast resolves them all, and the
+    regroup by the transaction's own columns keeps that layout. So each
+    row is resolved on its own (two rows equal in every column come out as
+    one), and the runner's dedup_latest on transaction_id plans no
+    exchange of its own."""
     rev = src.revision.select(F.col("id").alias("revision_id"), F.col("phid").alias("rev_phid"))
     txn = phab.filter_state_changes(src.differential_transaction)
     txn = (
@@ -236,18 +257,21 @@ def build_transactions(src: PhabSources, principals: DataFrame) -> DataFrame:
 
     # F2: reviewers-map values resolve PHID keys to names, document order,
     # unresolved dropped (stats.py:717-754). The (side, pos, phid) entries
-    # keep the key order from_json preserves; one lookup covers both sides.
+    # keep the key order from_json preserves; one lookup covers both sides
+    # and the author (J10/J11), so every row has at least one entry.
     is_rv = F.col("transactionType") == "differential.revision.reviewers"
 
     def reviewer_keys(value: str) -> F.Column:
-        return F.map_keys(F.from_json(value, "map<string,string>"))
+        return F.when(is_rv, F.map_keys(F.from_json(value, "map<string,string>")))
 
-    entries = F.when(
-        is_rv, F.concat(_keyed("old", reviewer_keys("oldValue")), _keyed("new", reviewer_keys("newValue")))
+    entries = F.concat(
+        _keyed("author", F.array("authorPHID")),
+        _keyed("old", reviewer_keys("oldValue")),
+        _keyed("new", reviewer_keys("newValue")),
     )
-    keys = txn.select("*", F.explode_outer(entries).alias("k"))
-    p = principals.select(F.col("phid").alias("k_phid"), F.col("username").alias("u_name"), "project_name")
-    name = F.when(phab.is_project_reviewer(F.col("k.phid")), F.col("project_name")).otherwise(F.col("u_name"))
+    keys = txn.select("*", F.explode(entries).alias("k"))
+    p = principals.select(F.col("phid").alias("k_phid"), "username", "email", "project_name")
+    name = F.when(phab.is_project_reviewer(F.col("k.phid")), F.col("project_name")).otherwise(F.col("username"))
 
     # collect_list skips nulls, so the side split and the unresolved drop
     # ride the WHEN inside the aggregate; sorting the (pos, name) structs
@@ -259,9 +283,14 @@ def build_transactions(src: PhabSources, principals: DataFrame) -> DataFrame:
     txn = (
         keys.join(F.broadcast(p), F.col("k.phid") == p.k_phid, "left")
         .groupBy(*txn.columns)
-        .agg(_side_names("old").alias("rv_old"), _side_names("new").alias("rv_new"))
+        .agg(
+            _side_names("old").alias("rv_old"),
+            _side_names("new").alias("rv_new"),
+            _picked("author", "email").alias("author_email"),
+            _picked("author", "username").alias("author_username"),
+        )
     )
-    return _author_cols(txn, principals).select(
+    return txn.select(
         "revision_id",
         F.col("id").alias("transaction_id"),
         F.col("transactionType").alias("transaction_type"),
@@ -483,17 +512,15 @@ def build_review_groups(src: PhabSources, principals: DataFrame) -> DataFrame:
 def build_project_transactions(src: PhabSources, principals: DataFrame) -> DataFrame:
     """P10/P11/F3/F4/A7/J14/J15 in one pipeline (stats.py:626-680). J14
     resolves a core:edge row's member delta in the pass that moves the
-    rows, as build_transactions does its reviewers: as executed over the
-    landed gate world (plans/r12/phab_project_transactions_executed.txt)
-    the transactions are hash-partitioned by id once, each row explodes its
-    delta phids in place (one row with a NULL phid when it has none), one
-    principal broadcast resolves them, and the regroup by the transaction's
-    own columns keeps that layout, as do the owner (J15) and author
-    broadcasts after it. So each row is resolved on its own (two rows equal
+    rows, as build_transactions does its reviewers, and the owning project
+    (J15) and the author ride along as two more keys: as executed over the
+    landed gate world (plans/r14/phab_project_transactions_executed.txt)
+    the transactions are hash-partitioned by id once, each row explodes
+    its owner, author and delta phids in place, one principal broadcast
+    resolves them all, and the regroup by the transaction's own columns
+    keeps that layout. So each row is resolved on its own (two rows equal
     in every column come out as one), and the runner's dedup_latest on
-    transaction_id plans no exchange of its own.
-    Over unpinned sources, as in that dump, each principal lookup also runs
-    the dim's own union aggregate; the runner pins the dim once."""
+    transaction_id plans no exchange of its own."""
     txn = src.project_transaction.filter(F.col("transactionType").isin(phab.PROJECT_TRANSACTION_TYPES))
     # P11: core:edge rows must be membership transactions, others pass
     txn = txn.filter(
@@ -505,41 +532,49 @@ def build_project_transactions(src: PhabSources, principals: DataFrame) -> DataF
 
     # A7 + F3: membership delta phid sets, both directions
     t = F.col("transactionType")
+    is_edge = t == "core:edge"
     old_set = phab.parse_edge_member_phids(F.col("oldValue"))
     new_set = phab.parse_edge_member_phids(F.col("newValue"))
-    entries = F.when(
-        t == "core:edge",
-        F.concat(_keyed("old", F.array_except(old_set, new_set)), _keyed("new", F.array_except(new_set, old_set))),
+    entries = F.concat(
+        _keyed("owner", F.array("objectPHID")),
+        _keyed("author", F.array("authorPHID")),
+        _keyed("old", F.when(is_edge, F.array_except(old_set, new_set))),
+        _keyed("new", F.when(is_edge, F.array_except(new_set, old_set))),
     )
-    keys = txn.select("*", F.explode_outer(entries).alias("k"))
-    u = principals.select(F.col("phid").alias("k_phid"), F.col("username").alias("member_name"))
+    keys = txn.select("*", F.explode(entries).alias("k"))
+    p = principals.select(F.col("phid").alias("k_phid"), "username", "email", "project_id", "project_name")
 
     # J14: phid set -> SORTED DISTINCT usernames, dropping unresolved
-    # (stats.py:603-623); the set skips the other side's and the
+    # (stats.py:603-623); the set skips the other entries' and the
     # unresolved (null) names
     def _side_names(side: str) -> F.Column:
-        return phab.sorted_distinct_usernames(F.when(F.col("k.side") == side, F.col("member_name")))
+        return phab.sorted_distinct_usernames(F.when(F.col("k.side") == side, F.col("username")))
 
     txn = (
-        keys.join(F.broadcast(u), F.col("k.phid") == u.k_phid, "left")
+        keys.join(F.broadcast(p), F.col("k.phid") == p.k_phid, "left")
         .groupBy(*txn.columns)
-        .agg(_side_names("old").alias("edge_old"), _side_names("new").alias("edge_new"))
+        .agg(
+            _side_names("old").alias("edge_old"),
+            _side_names("new").alias("edge_new"),
+            # J15: the owning project (NULL for a deleted one)
+            _picked("owner", "project_id").alias("project_id"),
+            _picked("owner", "project_name").alias("project_name"),
+            _picked("author", "email").alias("author_email"),
+            _picked("author", "username").alias("author_username"),
+        )
     )
-    # J15: the owning project (NULL for a deleted one)
-    p = principals.select(F.col("phid").alias("proj_phid"), "project_id", "project_name")
-    txn = txn.join(F.broadcast(p), txn.objectPHID == p.proj_phid, "left")
 
     old_value = (
-        F.when(t == "core:edge", F.col("edge_old"))
+        F.when(is_edge, F.col("edge_old"))
         .when(t == "project:name", phab.decode_name_transaction_value(F.col("oldValue")))
         .otherwise(F.array())  # core:create has no prior value
     )
     new_value = (
-        F.when(t == "core:edge", F.col("edge_new"))
+        F.when(is_edge, F.col("edge_new"))
         .when(t == "project:name", phab.decode_name_transaction_value(F.col("newValue")))
         .otherwise(F.when(F.col("project_name").isNotNull(), F.array(F.col("project_name"))).otherwise(F.array()))
     )
-    return _author_cols(txn, principals).select(
+    return txn.select(
         "project_id",
         "project_name",
         F.col("id").alias("transaction_id"),

@@ -27,17 +27,19 @@ from phabricator_etl_spark.sources import phab_fixtures
 NOW = 2_000_000_000  # after every fixture timestamp
 SF_SMOKE_DIR = "/root/testdata/sf0.001"
 
-# Jobs of one first load of the gate-size world: 52 at 1, 4, 8 and 16
+# Jobs of one first load of the gate-size world: 49 at 1, 4, 8 and 16
 # cores. Per SQL execution: the small-graph connected-components path's one
 # probe collect 4 (it also runs the vertex and edge pipelines' query stages,
 # which share one broadcast of the revision phids, and fills no cache); the
 # revision pin 4 (the invalidation aggregate and window, the hits'
 # broadcast and the checkpoint) and the principal-dim pin 2 (its union
 # aggregate and the checkpoint); then the staged tables: revisions
-# 10, comments 6, transactions 5, project_transactions 5, review_requests
-# 5, review_groups 5, diffs 3 and changesets 3. No read of the
-# ym-partitioned revisions table runs a listing job.
-JOB_BUDGET = 52
+# 10, comments 6, review_requests 5, review_groups 5, transactions 4,
+# project_transactions 3, diffs 3 and changesets 3 (each transaction
+# table resolves its author, owner and named principals in one broadcast
+# of the dim). No read of the ym-partitioned revisions table runs a
+# listing job.
+JOB_BUDGET = 49
 GRAPH_JOB_BUDGET = 4
 
 # Jobs of stack_components over the gate-size world with both cutovers at
@@ -52,8 +54,11 @@ DISTRIBUTED_CC_JOB_BUDGET = 21
 # Jobs of graph_bfs_distance (pointer jumping) over a 3000-order table with
 # both cutovers at 0, its parquet read included: its seeds and edges come
 # out of one window, which runs in the probe and once more in the cache
-# fill. 45 at 1, 4, 8 and 16 cores, two runs each, as before the one probe.
-DISTRIBUTED_PJ_JOB_BUDGET = 45
+# fill; then one checkpoint per round over 6 rounds and no convergence job
+# (the pointer checkpoint observes whether any pointer jumped). 31 at 1, 4,
+# 8 and 16 cores, two runs each; 45 when an initial and a per-round sum of
+# the distances tested the fixpoint.
+DISTRIBUTED_PJ_JOB_BUDGET = 31
 
 # Jobs of one count() of each sentinel query at sf0.001: the most seen at
 # 1, 4, 8 and 16 cores, each count repeating over 10 runs (1 core runs

@@ -70,6 +70,54 @@ def test_watermark_skips_unchanged(spark):
         )
 
 
+def _tuple_max(rows):
+    """Python's max over whole tuples, NULL below every value: the W2
+    winner rule dedup_latest applies to (recency, rest...)."""
+    return max(rows, key=lambda r: tuple((0,) if v is None else (1, v) for v in r))
+
+
+def test_dedup_latest_winner_rule(spark):
+    """One row per key: the latest recency wins, a NULL recency loses to any
+    value, equal recency falls back to the max of the remaining tuple (an
+    array column compared element by element, then by length), and with
+    no recency column the whole tuple decides. Checked against a Python
+    oracle over hand-picked cases and a seeded random set."""
+    import random
+
+    cases = [
+        ("a", 1, 10, ["x"]), ("b", 1, 20, ["a"]),  # latest recency wins
+        ("z", 2, None, ["z"]), ("a", 2, 5, []),  # NULL recency loses
+        ("a", 3, 7, ["q"]), ("b", 3, 7, ["a"]),  # equal recency: v decides
+        ("a", 4, 7, ["x", "b"]), ("a", 4, 7, ["x"]), ("a", 4, 7, ["x", "a"]),  # the array decides
+        (None, 5, 7, ["a"]), ("a", 5, 7, None),  # a NULL v is low
+    ]
+    rng = random.Random(5)
+    arrays = [None, [], ["a"], ["a", "b"], ["b"]]
+    cases += [
+        (rng.choice([None, "a", "b"]), k, rng.choice([None, 1, 2]), rng.choice(arrays))
+        for k in range(10, 30)
+        for _ in range(rng.randint(1, 6))
+    ]
+    df = spark.createDataFrame(cases, "v string, k long, ts long, arr array<string>").repartition(3)
+
+    got = {r["k"]: tuple(r) for r in R.dedup_latest(df, "k", "ts").collect()}
+    want = {}
+    for k in {c[1] for c in cases}:
+        ts, v, arr = _tuple_max([(c[2], c[0], c[3]) for c in cases if c[1] == k])
+        want[k] = (v, k, ts, arr)
+    assert got == want
+    assert [got[k] for k in (1, 2, 3, 4, 5)] == [
+        ("b", 1, 20, ["a"]), ("a", 2, 5, []), ("b", 3, 7, ["a"]), ("a", 4, 7, ["x", "b"]), ("a", 5, 7, None),
+    ]
+
+    got = {r["k"]: tuple(r) for r in R.dedup_latest(df, "k", None).collect()}
+    want = {}
+    for k in {c[1] for c in cases}:
+        v, ts, arr = _tuple_max([(c[0], c[2], c[3]) for c in cases if c[1] == k])
+        want[k] = (v, k, ts, arr)
+    assert got == want
+
+
 class _Killed(Exception):
     """The run dies here."""
 

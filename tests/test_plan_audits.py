@@ -113,6 +113,69 @@ def test_phab_dimension_joins_broadcast(tables):
     assert "BroadcastHashJoin" in plan, "user/project dims must broadcast"
 
 
+def _nodes(plan) -> list:
+    """Every node of a physical plan, with the adaptive wrapper and the
+    query stages opened; a reused exchange is a leaf, so each exchange is
+    listed once."""
+    nodes, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        nodes.append(node)
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            todo.append(node.plan())
+        elif name != "ReusedExchange":
+            todo += [node.children().apply(i) for i in range(node.children().size())]
+    return nodes
+
+
+def _executed_nodes(df) -> list:
+    """The nodes of ``df``'s executed plan: it is run first, so AQE's final
+    plan."""
+    df.collect()
+    return _nodes(df._jdf.queryExecution().executedPlan())
+
+
+def _output_names(node) -> list[str]:
+    out = node.output()
+    return [out.apply(i).name() for i in range(out.size())]
+
+
+def test_comment_exchange_carries_no_text(tables):
+    """build_comments takes the text's length and the suggestion flag before
+    its arms meet, so the exchange on the comment id moves neither the
+    content nor the attributes column."""
+    by_id = [
+        n for n in _executed_nodes(tables["comments"])
+        if n.nodeName() == "Exchange" and n.outputPartitioning().toString().startswith("hashpartitioning(id#")
+    ]
+    assert by_id, "no exchange on the comment id"
+    for n in by_id:
+        assert not {"content", "attributes"} & set(_output_names(n)), _output_names(n)
+
+
+@pytest.mark.parametrize("table", ["transactions", "project_transactions"])
+def test_fact_rows_do_one_principal_lookup(spark, table):
+    """Over a pinned principal dim, one broadcast of the dim resolves every
+    principal a transaction row names: its author, reviewers, owning
+    project and member delta."""
+    src = phab_fixtures.generate(spark, seed=7)
+    principals = P.dim_principals(src).localCheckpoint(eager=True)
+    pin = principals._jdf.queryExecution().analyzed().rdd().id()
+    build = {"transactions": P.build_transactions, "project_transactions": P.build_project_transactions}[table]
+
+    def reads_pin(node) -> bool:
+        return any(
+            n.getClass().getSimpleName() == "RDDScanExec" and n.rdd().id() == pin
+            for n in _nodes(node)
+        )
+
+    broadcasts = [n for n in _executed_nodes(build(src, principals)) if n.nodeName() == "BroadcastExchange"]
+    assert sum(map(reads_pin, broadcasts)) == 1, [b.toString() for b in broadcasts]
+
+
 def test_sql_exists_decorrelates_to_semi_join(spark, sf_smoke):
     """Text-SQL EXISTS must become a (broadcast|shuffled) semi-join — no
     per-row subquery node may survive (Catalyst decorrelation)."""
