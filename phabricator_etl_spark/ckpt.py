@@ -77,9 +77,12 @@ class CheckpointChain:
             "(it would free blocks the owner still reads)"
         )
 
-    def step(self, df: DataFrame) -> DataFrame:
+    def step(self, df: DataFrame, *, eager: bool = True) -> DataFrame:
+        """``eager=False`` defers the checkpoint to the first query that
+        reads it: for a final narrow step (a filter of the last state),
+        which that query fills at no job of its own."""
         self._assert_owner("step")
-        ckpt = df.localCheckpoint(eager=True)
+        ckpt = df.localCheckpoint(eager=eager)
         if self._prev is not None:
             free(self._prev)
         self._prev, self._cur = self._cur, ckpt

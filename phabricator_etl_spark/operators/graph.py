@@ -215,7 +215,9 @@ def connected_components(
     # at sf10 — leaving them measured as 52 s -> 161 s GC degradation).
     chain = CheckpointChain()
     labels = chain.step(
-        rows.filter(F.col("tag") == 0).select(F.col("a").alias("id"), F.col("a").alias("component"))
+        rows.filter(F.col("tag") == 0).select(
+            F.col("a").alias("id"), F.col("a").alias("component"), F.lit(1).alias("vertex")
+        )
     )
     e = rows.filter(F.col("tag") == 1)
     # The rows hold no NULL endpoint; the not-null filter is restated so
@@ -237,6 +239,11 @@ def connected_components(
     # dropped, an id without a previous label counting as moved. The flag
     # arrives with the checkpoint's own job: the test costs no job, whatever
     # the id type.
+    #
+    # An edge endpoint that is not a vertex gets a label too, so it bridges
+    # components as the local union-find merges through it; its ``vertex``
+    # flag (max of 1 on the vertex's own label rows, 0 on candidates) stays
+    # 0, and the returned labels keep only the vertices, as the local path.
     from .iterative import ROUNDS  # round-count instrumentation (see there)
 
     for rnd in range(max_iterations):
@@ -246,10 +253,17 @@ def connected_components(
         # replaces a separate left-join-back, saving a shuffle per round.
         hop = (
             sym.join(labels, sym.b == labels.id)
-            .select(F.col("a").alias("id"), F.col("component").alias("cand"), F.lit(None).alias("old"))
-            .unionByName(labels.select("id", F.col("component").alias("cand"), F.col("component").alias("old")))
+            .select(
+                F.col("a").alias("id"),
+                F.col("component").alias("cand"),
+                F.lit(None).alias("old"),
+                F.lit(0).alias("vertex"),
+            )
+            .unionByName(
+                labels.select("id", F.col("component").alias("cand"), F.col("component").alias("old"), "vertex")
+            )
             .groupBy("id")
-            .agg(F.min("cand").alias("component"), F.max("old").alias("old"))
+            .agg(F.min("cand").alias("component"), F.max("old").alias("old"), F.max("vertex").alias("vertex"))
         )
         # Pointer doubling (path compression): component <- label(component).
         # The neighbor-min hop alone needs O(diameter) rounds; composing it
@@ -263,14 +277,17 @@ def connected_components(
                 "id",
                 F.least(F.col("component"), F.coalesce(F.col("p_comp"), F.col("component"))).alias("component"),
                 "old",
+                "vertex",
             )
             .observe(moved, F.max(F.coalesce(F.col("component") < F.col("old"), F.lit(True))).alias("moved"))
-            .select("id", "component")
+            .select("id", "component", "vertex")
         )
         if not moved.get["moved"]:
             break
 
-    # the symmetrized edges die with the loop; the final labels checkpoint (the
-    # return value) stays live — the chain never frees its last two states
+    # the symmetrized edges die with the loop. The vertices' labels are the
+    # chain's last state, a lazy checkpoint the first query reading them
+    # fills from the final labels checkpoint, so the filter adds no job;
+    # both stay live — the chain never frees its last two states
     free(sym)
-    return labels
+    return chain.step(labels.filter(F.col("vertex") == 1).select("id", "component"), eager=False)

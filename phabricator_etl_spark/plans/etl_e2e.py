@@ -3,9 +3,11 @@ analog to the reference's ``process()`` (stats.py:1094-1164), wired as two
 value-hash-checked queries over the final destination tables.
 
 - ``etl_e2e_full``: one full run — watermark=None, all 8 tables built,
-  recency-deduped, merged (first-run insert path) and written ym-partitioned
-  to a scratch destination; the query returns a per-table summary
-  (row count + key checksum + recency mass) of the FINAL tables.
+  recency-deduped, merged (first-run insert path) and written to a scratch
+  destination, revisions as one ym-sorted file per write task (row-group
+  statistics prune a month without a directory per month); the query
+  returns a per-table summary (row count + key checksum + recency mass) of
+  the FINAL tables.
 - ``etl_e2e_incremental``: the full protocol across TWO runs — a full run
   at a mid-world split time, then an incremental run (destination watermark
   readback -> changed-revision filter -> stack-component expansion -> MERGE

@@ -107,11 +107,10 @@ def _initial_heap(mem: str) -> str:
 
 
 # Directories a file read lists on the driver before it hands the listing
-# to a Spark job (Spark's default: 32). Reading the ym-partitioned revisions
-# table back lists one directory per month of date_modified: 72 over the
-# perfbench world (seed 1), which at the default ran as one 72-task listing
-# job per read. A few hundred month directories list faster on the driver
-# than a job schedules.
+# to a Spark job (Spark's default: 32). sink_partitioned_roundtrip reads
+# back one directory per month of its orders: at sf0.01 and local[4] it ran
+# 7 jobs at the default and 6 at 256 (the same over two runs each). A few
+# hundred directories list faster on the driver than a job schedules.
 PARTITION_DISCOVERY_THRESHOLD = 256
 
 

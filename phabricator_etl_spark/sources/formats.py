@@ -21,8 +21,8 @@ pushdown, no min/max skipping; the scan cost is O(total bytes) regardless of
 the query. ORC (like parquet) is columnar with pushdown — the ORC gate's
 plan is audited for PushedFilters. The engine treats text formats as
 landing-zone inputs to be compacted into columnar storage once (the
-incremental runner's ym-partitioned parquet sink), never queried in place
-repeatedly.
+incremental runner's parquet sink, revisions ym-sorted so row-group
+statistics prune a month), never queried in place repeatedly.
 """
 
 from __future__ import annotations

@@ -37,8 +37,7 @@ SF_SMOKE_DIR = "/root/testdata/sf0.001"
 # 10, comments 6, review_requests 5, review_groups 5, transactions 4,
 # project_transactions 3, diffs 3 and changesets 3 (each transaction
 # table resolves its author, owner and named principals in one broadcast
-# of the dim). No read of the ym-partitioned revisions table runs a
-# listing job.
+# of the dim).
 JOB_BUDGET = 49
 GRAPH_JOB_BUDGET = 4
 

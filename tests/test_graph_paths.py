@@ -138,6 +138,30 @@ def test_probe_cutover_is_exact_per_side(spark, monkeypatch, edge_limit, vertex_
     assert got == _oracle_labels(vertices, edges)
 
 
+@pytest.mark.parametrize(
+    "edges, want",
+    [
+        ([(1, 3), (2, 4)], {1: 1, 2: 2}),  # endpoints 3 and 4 are no vertex: not labelled
+        ([(1, 3), (3, 2)], {1: 1, 2: 1}),  # ... but 3 still bridges 1 and 2
+    ],
+    ids=["non_vertex_endpoints", "non_vertex_bridge"],
+)
+@pytest.mark.parametrize("edge_limit", [None, 0])  # local path, distributed path
+def test_non_vertex_endpoints_bridge_but_are_not_returned(spark, monkeypatch, edges, want, edge_limit):
+    """An edge endpoint outside the vertex set merges the components it
+    touches, as union-find merges through it, and gets no row of its own:
+    both paths return one row per vertex."""
+    vdf = spark.createDataFrame([(1,), (2,)], "id long")
+    edf = spark.createDataFrame(edges, "src long, dst long")
+    if edge_limit is not None:
+        monkeypatch.setattr(graph_mod, "LOCAL_EDGE_THRESHOLD", edge_limit)
+        monkeypatch.setattr(graph_mod, "LOCAL_VERTEX_THRESHOLD", edge_limit)
+    taken = _spy_paths(monkeypatch)
+    got = [tuple(r) for r in connected_components(vdf, edf).orderBy("id").collect()]
+    assert got == sorted(want.items())
+    assert ("local" in taken) == (edge_limit is None)
+
+
 @pytest.mark.parametrize("vertex_type, edge_type", [("int", "long"), ("long", "int")])
 @pytest.mark.parametrize("edge_limit", [None, 0])  # local path, distributed path
 def test_mixed_width_id_types(spark, monkeypatch, vertex_type, edge_type, edge_limit):

@@ -8,7 +8,9 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import time
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
@@ -236,3 +238,38 @@ def test_unreadable_committed_table_fails_the_run(spark, crash_world, tmp_path):
     with pytest.raises(Exception, match="comments/part-"):
         R.run_incremental(spark, full_src, dest, now=NOW)
     assert _table_files(dest) == before
+
+
+def test_revisions_are_one_ym_sorted_file_per_write_task(spark, tmp_path):
+    """A first load writes revisions as at most one parquet file per write
+    task, with no month directory: every row's ym is the UTC month of its
+    date_modified, ym never decreases within a file, and a ym filter is
+    pushed to the parquet scan, so row-group statistics stand in for the
+    month directories. AQE's partition coalescing is off, so the shuffle
+    partitions reach the write as at scale; with month directories each
+    task wrote one file per month it held."""
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        src = phab_fixtures.land(spark, str(tmp_path / "world"), seed=7)
+        R.run_incremental(spark, src, str(tmp_path / "dest"), now=NOW, full=True)
+    finally:
+        spark.conf.set(conf, before)
+    path = tmp_path / "dest" / "revisions"
+    assert not [p.name for p in path.iterdir() if p.name.startswith("ym=")]
+    files = sorted(path.glob("*.parquet"))
+    assert 0 < len(files) <= int(spark.conf.get("spark.sql.shuffle.partitions")), [f.name for f in files]
+
+    months = set()
+    for f in files:
+        cols = pq.read_table(f, columns=["date_modified", "ym"]).to_pydict()
+        want = [None if t is None else time.strftime("%Y-%m", time.gmtime(t)) for t in cols["date_modified"]]
+        assert cols["ym"] == want, f.name
+        assert want == sorted(want, key=lambda ym: (ym is not None, ym)), f"{f.name}: ym decreases"
+        months.update(ym for ym in want if ym is not None)
+
+    month = min(months)
+    plan = spark.read.parquet(str(path)).filter(F.col("ym") == month)._jdf.queryExecution().executedPlan()
+    pushed = [line for line in plan.toString().splitlines() if "PushedFilters" in line]
+    assert pushed and f"EqualTo(ym,{month})" in pushed[0], plan.toString()
