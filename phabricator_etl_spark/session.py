@@ -11,6 +11,10 @@ Design notes (scale):
 - shuffle.partitions defaults to the local core count for tests; a real
   cluster deployment overrides via spark-submit conf (rule of thumb:
   ~2-3x total executor cores, or rely on AQE coalescing from a high cap).
+- zstd for shuffle blocks and parquet files: the first-load ETL's disk
+  writes are its merge-key exchanges and its staged tables, and zstd
+  halves them (perfbench etl_full 0.957 -> 0.502 MB in the same 49 jobs;
+  plans/r16/etl_first_load_bytes.txt).
 """
 
 from __future__ import annotations
@@ -139,6 +143,21 @@ def get_spark(app_name: str = "phabricator-etl-spark", *, shuffle_partitions: in
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.parquet.filterPushdown", "true")
+        # zstd (default level 3) for shuffle, spill and broadcast blocks and
+        # for every parquet sink, in place of Spark's lz4 and snappy. The
+        # first-load ETL stages every table behind one merge-key exchange,
+        # and those bytes are the run's disk writes: perfbench etl_full
+        # (seed 1, local[4]) 0.957 -> 0.502 MB: shuffle 0.656 -> 0.321 MB,
+        # destination files 0.301 -> 0.180 MB, in the same 49 jobs
+        # (plans/r16/etl_first_load_bytes.txt). Both zstd buffer pools are
+        # off: a pool keeps its buffers reachable after full GCs. The unit's
+        # live_heap_mb read 76.0-76.5 under lz4/snappy (20 runs) and, under
+        # zstd, 77.8-78.8 with both pools on (4), 78.5-78.8 with parquet's
+        # off (4), 77.1 with Spark's off (2) and 76.4-76.9 with both off (20).
+        .config("spark.io.compression.codec", "zstd")
+        .config("spark.io.compression.zstd.bufferPool.enabled", "false")
+        .config("spark.sql.parquet.compression.codec", "zstd")
+        .config("spark.hadoop.parquet.compression.codec.zstd.bufferPool.enabled", "false")
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(PARTITION_DISCOVERY_THRESHOLD))
         .config("spark.driver.memory", mem)
         # Commit and pre-touch the whole heap at JVM start. Under this

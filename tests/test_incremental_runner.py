@@ -240,6 +240,41 @@ def test_unreadable_committed_table_fails_the_run(spark, crash_world, tmp_path):
     assert _table_files(dest) == before
 
 
+def _chunk_codecs(dest):
+    """Codec of every column chunk of every committed parquet file."""
+    codecs = set()
+    for name in R.MERGE_KEYS:
+        for f in sorted((dest / name).glob("*.parquet")):
+            meta = pq.ParquetFile(f).metadata
+            codecs |= {
+                meta.row_group(g).column(c).compression
+                for g in range(meta.num_row_groups)
+                for c in range(meta.num_columns)
+            }
+    return codecs
+
+
+def test_run_merges_tables_written_with_snappy(spark, crash_world, tmp_path):
+    """The upgrade path of the zstd codec: a destination whose first load
+    was written with snappy, Spark's default parquet codec, is merged by
+    the next incremental run into the rows of a full recompute, and every
+    table that run commits is zstd throughout."""
+    full_src, early_src, _, ref = crash_world
+    dest = tmp_path / "dest"
+    conf = "spark.sql.parquet.compression.codec"
+    codec = spark.conf.get(conf)
+    spark.conf.set(conf, "snappy")
+    try:
+        R.run_incremental(spark, early_src, str(dest), now=NOW)
+    finally:
+        spark.conf.set(conf, codec)
+    assert _chunk_codecs(dest) == {"SNAPPY"}
+    got = R.run_incremental(spark, full_src, str(dest), now=NOW)
+    for name in R.MERGE_KEYS:
+        assert _rows(got[name]) == ref[name], f"{name}: run over snappy tables != full recompute"
+    assert _chunk_codecs(dest) == {"ZSTD"}
+
+
 def test_revisions_are_one_ym_sorted_file_per_write_task(spark, tmp_path):
     """A first load writes revisions as at most one parquet file per write
     task, with no month directory: every row's ym is the UTC month of its
